@@ -4,7 +4,9 @@ import org.apache.spark.sql.SparkSession
 
 /** Plan inspection tool: dumps `.explain("formatted")` for one query (or all)
   * so plan regressions (lost pushdown, unexpected shuffles, missed broadcast)
-  * are visible. Usage: runMain graft.Explain <sfDir> [queryName]
+  * are visible. Usage: runMain graft.Explain <sfDir> [queryName]; redirect
+  * stdout to keep a plan (`plans/rNN/<query>_<suffix>.txt`). It only plans:
+  * timing belongs to [[Bench]] (SPARK_GRAFT_QUERIES narrows its sweep).
   */
 object Explain {
   def main(args: Array[String]): Unit = {
@@ -20,15 +22,8 @@ object Explain {
       .toSeq.sortBy(_._1)
       .foreach { case (name, fn) =>
         println(s"\n========== $name ==========")
-        try {
-          val df = fn(spark, sfDir)
-          df.explain("formatted")
-          if (sys.env.contains("SPARK_GRAFT_TIME")) {
-            val t0 = System.nanoTime()
-            val n = df.count()
-            println(f"rows=$n time=${(System.nanoTime() - t0) / 1e9}%.2fs")
-          }
-        } catch { case e: Throwable => println(s"FAILED: ${e.getMessage}") }
+        try fn(spark, sfDir).explain("formatted")
+        catch { case e: Throwable => println(s"FAILED: ${e.getMessage}") }
       }
     spark.stop()
   }

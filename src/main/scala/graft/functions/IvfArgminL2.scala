@@ -15,7 +15,8 @@ import org.apache.spark.sql.types._
   *
   * Why this exists (r15 verdict "What's missing #2"): SemDeDup's
   * production k ∝ N schedule linearizes the within-cluster pair stage
-  * (ProbeQ74K measured it) but makes brute Lloyd assignment O(N·K) —
+  * (BENCH_r16_q74k_probe.json measured it) but makes brute Lloyd
+  * assignment O(N·K) —
   * quadratic in N. Pruning each vector's candidate list to the probed
   * cells makes the per-vector cost O(C·d + nprobe·(K/C)·d); at the
   * balance point C ≈ √(K·nprobe) that is O(√(K·nprobe)·d) — the N²

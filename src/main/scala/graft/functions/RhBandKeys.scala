@@ -22,7 +22,8 @@ import org.apache.spark.sql.types._
   * ~8-rows-per-bucket band width at 15 bits. Past n ≈ 2¹⁵·8 ≈ 262k vectors
   * the rule stops adapting, mean bucket occupancy grows linearly in N, and
   * candidate volume picks up a birthday term ~N²/2¹⁶ on ANY corpus (the
-  * exact arithmetic ProbeQ77Cands measured on fixed-width SimHash bands).
+  * exact arithmetic BENCH_r15_q77cands_probe.json measured on fixed-width
+  * SimHash bands).
   * Emitting each band key as its own long lifts the ceiling to 62 bits per
   * band — bandBits can track log2(N/8) far past any local corpus — while
   * keeping the emit-once cross-band dedup a codegen'd primitive comparison

@@ -128,7 +128,7 @@ object DedupClusters {
       maxIter: Int = 20): DataFrame = {
     // LAZY checkpoints (r17 job-floor cut): both barriers materialize
     // inside round 1's first job instead of paying two dedicated eager
-    // passes — ProbeJobs measured this loop at 26 sequential jobs for
+    // passes — OPTIMIZATION_r17.md measured this loop at 26 sequential jobs for
     // 1.2 CPU-s at the bench SF, all scheduling floor.
     // r18: the barrier moved one level DOWN, onto the edge relation
     // itself — checkpointing the mirrored union meant the (expensive)

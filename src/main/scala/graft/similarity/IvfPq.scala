@@ -62,7 +62,7 @@ object IvfPq {
     * `argmin_l2` over the flattened codebook: same (dist2, cid)
     * selection by its pinned contract, vectors never leave their scan
     * partition. Measured r17 start: q38 ran 29 sequential jobs for
-    * 1.9 CPU-s (ProbeJobs) — the wall was the job chain.
+    * 1.9 CPU-s (OPTIMIZATION_r17.md) — the wall was the job chain.
     */
   private type Cents = Array[(Int, Array[Double])]
   private def centsRowDf(s: SparkSession, cents: Cents): DataFrame = {

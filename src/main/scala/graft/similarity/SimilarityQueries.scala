@@ -758,8 +758,8 @@ object SimilarityQueries {
 
   /** The fitted Lloyd assignment (vec_id, cid, dist2, v) — shared by q69
     * (assignment report) and q74 (semantic dedup within clusters).
-    * `kOverride` is probe-only (ProbeQ74K's k ∝ N schedule); the query
-    * path always derives k from the corpus via [[kmK]].
+    * `kOverride` is test-only (IvfArgminL2Spec pins K); the query path
+    * always derives k from the corpus via [[kmK]].
     *
     * `annProbe` (r16, the production k ∝ N assign leg): when set, every
     * assignment pass — Lloyd iterations AND the final one — searches only
@@ -767,19 +767,20 @@ object SimilarityQueries {
     * centroids (functions.IvfArgminL2: the q38 IvfPq two-level layout
     * with the CENTROIDS as the indexed corpus). Per-vector cost drops
     * from O(K·d) to O(√(K·nprobe)·d) at the balanced coarse count
-    * C = ⌈√(K·nprobe)⌉ — the O(N·K) brute leg ProbeQ74K measured as the
-    * k ∝ N bottleneck becomes N^1.5 (honest asymptote; the measured
-    * ladder exponent lives in the probe artifact). Approximation enters
+    * C = ⌈√(K·nprobe)⌉ — the O(N·K) brute leg measured as the k ∝ N
+    * bottleneck (BENCH_r16_q74k_probe.json) becomes N^1.5 (honest
+    * asymptote; the measured ladder exponent lives in that artifact).
+    * Approximation enters
     * ONLY through which cells are probed — within the probed union the
     * argmin contract is bit-identical to argmin_l2 — so a vector can
     * land in a near-nearest cluster, which Lloyd tolerates by design
     * (same contract FAISS-based SemDeDup pipelines run in production).
-    * The demo/oracle path (annProbe = None) is untouched.
+    * The demo/oracle path (annProbe = None) is untouched; no registered
+    * query sets it, so it is test-only too (IvfArgminL2Spec).
     */
   private[graft] def kmAssigned(s: org.apache.spark.sql.SparkSession,
       d: String, kOverride: Option[Int] = None,
-      annProbe: Option[Int] = None,
-      coarseKpp: Boolean = false): DataFrame = {
+      annProbe: Option[Int] = None): DataFrame = {
     val k = kOverride.getOrElse(kmK(Tables.rowCount(s, d, "embeddings")))
     // (r17: a fanOut+checkpoint of this relation was measured SLOWER at
     // the bench SF — 2k vectors make every pass's compute ~1 ms, so 32
@@ -806,8 +807,8 @@ object SimilarityQueries {
     // checkpoint job, the broadcast-BUILD job (broadcasting a
     // LocalRelation collects via LocalTableScan.executeCollect, no tasks)
     // and the second assembly exchange of the update. Measured r17 start:
-    // q69 ran 15 sequential jobs for 0.64 CPU-s (ProbeJobs) — the wall
-    // was the job chain, not the data.
+    // q69 ran 15 sequential jobs for 0.64 CPU-s (OPTIMIZATION_r17.md) —
+    // the wall was the job chain, not the data.
     type Cents = Array[(Int, Array[Double])]
     def centsRowDf(cents: Cents): DataFrame = {
       import org.apache.spark.sql.types._
@@ -842,46 +843,6 @@ object SimilarityQueries {
     // but on a single row), and assign inside the scan stage exactly
     // like the brute path — same single broadcast row, vectors never
     // leave their partition.
-    //
-    // `coarseKpp` (probe-only, r16 verdict #7): coarse centers picked by
-    // a deterministic k-means++ pass over the ≤ K collected centroids
-    // instead of smallest-cid — on elongated distributions a spread-out
-    // coarse net can buy recall at equal nprobe; ProbeQ74K's
-    // clustered-geometry leg measures whether it does. Collecting the
-    // centroid table is bounded by KmKMax (32 MB), the same bound that
-    // lets it broadcast.
-    def kppCids(pts: Cents, m: Int): Seq[Int] = {
-      if (pts.length <= m) pts.map(_._1).toSeq
-      else {
-        val rng = new scala.util.Random(2027L)
-        def d2(a: Array[Double], b: Array[Double]): Double = {
-          var s = 0.0; var i = 0
-          while (i < a.length) { val t = a(i) - b(i); s += t * t; i += 1 }
-          s
-        }
-        val chosen = scala.collection.mutable.ArrayBuffer(0) // lowest cid seeds
-        val minD = pts.map(p => d2(p._2, pts(0)._2))
-        while (chosen.size < m) {
-          val tot = minD.sum
-          val pick =
-            if (tot <= 0.0) minD.indexWhere(_ >= 0.0) // degenerate: all equal
-            else {
-              var r = rng.nextDouble() * tot
-              var i = 0
-              while (i < minD.length - 1 && r > minD(i)) { r -= minD(i); i += 1 }
-              i
-            }
-          chosen += pick
-          var i = 0
-          while (i < pts.length) {
-            val dd = d2(pts(i)._2, pts(pick)._2)
-            if (dd < minD(i)) minD(i) = dd
-            i += 1
-          }
-        }
-        chosen.map(pts(_)._1).toSeq
-      }
-    }
     def assignIvf(centsLocal: Cents, nprobe: Int): DataFrame = {
       // the layout BUILD stays relational (its aggs are over the ≤K-row
       // LocalRelation — light), but it now sources from the driver-local
@@ -890,10 +851,7 @@ object SimilarityQueries {
       val cents = centsDfOf(centsLocal)
       val cCount = math.min(k,
         math.max(1, math.ceil(math.sqrt(k.toDouble * nprobe)).toInt))
-      val coarseSel =
-        if (coarseKpp) cents.filter(col("cid").isin(kppCids(centsLocal, cCount): _*))
-        else cents.orderBy("cid").limit(cCount)
-      val coarseRow = coarseSel
+      val coarseRow = cents.orderBy("cid").limit(cCount)
         .agg(array_sort(collect_list(struct(col("cid"), col("cv")))).as("cs"))
         .select(
           transform(sequence(lit(0), size(col("cs")) - 1),
@@ -1059,24 +1017,12 @@ object SimilarityQueries {
       .unionByName(bigPairs)
   }
 
-  /** q74 body with a probe-only k override (see [[kmAssigned]]); also
-    * exposes the candidate-pair relation for ProbeQ74K's pair counts.
-    */
-  private[graft] def semCandidatePairs(s: org.apache.spark.sql.SparkSession,
-      d: String, kOverride: Option[Int] = None,
-      annProbe: Option[Int] = None,
-      coarseKpp: Boolean = false): DataFrame =
-    semPairs(kmAssigned(s, d, kOverride, annProbe, coarseKpp)
-      .select(col("cid"), col("vec_id"), col("v")))
-
   private[graft] def semanticDedup(s: org.apache.spark.sql.SparkSession,
-      d: String, kOverride: Option[Int] = None,
-      annProbe: Option[Int] = None,
-      coarseKpp: Boolean = false): DataFrame = {
+      d: String): DataFrame = {
     // LAZY barrier (r17): the assignment feeds BOTH the pair generation
     // and the final keep/drop join -- without it the argmin scan runs
     // twice in the final DAG
-    val a = kmAssigned(s, d, kOverride, annProbe, coarseKpp)
+    val a = kmAssigned(s, d)
       .select(col("vec_id"), col("cid"), col("v"))
       .localCheckpoint(eager = false)
     val dropped = semPairs(a.select(col("cid"), col("vec_id"), col("v")))
@@ -1223,7 +1169,7 @@ object SimilarityQueries {
     // chunkSize 2048 (not the old 256): grid shuffle volume per hot
     // bucket is rows·(nchunks/2)·rowWidth per side, and the 100× replica
     // corpus concentrates 15-20k rows into single band buckets
-    // (ProbeQ76Buckets: top bucket 20,085 rows, 2.9B true pairs) — 256
+    // (100× bucket census: top bucket 20,085 rows, 2.9B true pairs) — 256
     // put 12.8 GB through the grid exchange where 2048 puts 1.7 GB, and a
     // 2048² cell is a ~2M-cosine task (CPU, not disk).
     val pairs = semPairs(banded.select(
@@ -1276,17 +1222,17 @@ object SimilarityQueries {
   // clamps the adaptive ~8-rows-per-bucket band width at 15 bits: past
   // n ≈ 2¹⁵·8 ≈ 262k vectors the rule stops adapting, mean bucket
   // occupancy grows linearly in N, and candidate volume picks up a
-  // birthday term ~N²/2¹⁶ on ANY corpus (ProbeQ77Cands measured exactly
-  // this on fixed-width SimHash bands). q93 runs the SAME pipeline —
-  // identical plane family, banding scheme, triangle grid, emit-once
-  // dedup, cosine bar — with each band key its own long
+  // birthday term ~N²/2¹⁶ on ANY corpus (BENCH_r15_q77cands_probe.json
+  // measured exactly this on fixed-width SimHash bands). q93 runs the
+  // SAME pipeline — identical plane family, banding scheme, triangle
+  // grid, emit-once dedup, cosine bar — with each band key its own long
   // (functions.RhBandKeys), so bandBits tracks log2(N/8) to 31 bits
   // (n ≈ 2³¹·8 ≈ 17G vectors before THIS rung clamps). At oracle scale
   // (sf0.01, bandBits = 8 for both) q93 ≡ q76 by construction — the
   // q87-vs-q40 pattern: same answer, different storage layout, the wide
-  // one being the 100 TB path. ProbeRhWide measures the divergence past
-  // the knee (200k → 2M vectors: clamped candidates grow ~N², wide stay
-  // ~linear with flat bucket occupancy).
+  // one being the 100 TB path. BENCH_r16_rhwide_probe.json records the
+  // divergence past the knee (200k → 2M vectors: clamped candidates grow
+  // ~N², wide stay ~linear with flat bucket occupancy).
 
   /** The q51 band-width rule WITHOUT the one-long clamp: 31-bit ceiling
     * comes from keeping `band·2^bits + key` compositing and the oracle's
@@ -1318,15 +1264,11 @@ object SimilarityQueries {
   /** Emit-once-deduped candidate pairs (id_a, id_b, va, vb) under the
     * wide layout — see q51Pairs for the full rationale of every step
     * (adaptive width, composite bucket key, triangle grid, emit-once);
-    * only the key representation differs. `bandBitsOverride` is
-    * probe-only (ProbeRhWide's clamped-vs-wide comparison runs BOTH
-    * widths through this one pipeline so the measured difference is the
-    * band width, not the payload shape).
+    * only the key representation differs.
     */
   private[graft] def rhWideCandidates(s: org.apache.spark.sql.SparkSession,
-      d: String, bandBitsOverride: Option[Int] = None): DataFrame = {
-    val bandBits = bandBitsOverride.getOrElse(
-      rhWideBandBits(Tables.rowCount(s, d, "embeddings")))
+      d: String): DataFrame = {
+    val bandBits = rhWideBandBits(Tables.rowCount(s, d, "embeddings"))
     val pairs = semPairs(rhWideBanded(s, d, bandBits), chunkSize = 2048)
     def bandKey(side: String, b: Int) = col(s"$side.sg").getItem(b)
     def noSharedBandBelow(b: Int) =
@@ -1694,7 +1636,7 @@ object SimilarityQueries {
   // is the band, `p % bandbits` the bit within it (integer `//`: DuckDB's
   // `/` on integers yields DOUBLE). At sf0.01 bandbits = 8 for both rules,
   // so q93's oracle result equals q76's — the rungs diverge only past the
-  // 262k-vector knee, which ProbeRhWide measures.
+  // 262k-vector knee (BENCH_r16_rhwide_probe.json).
   val q93Sql: String =
     s"""WITH params AS (
        |  SELECT CAST(least(31, greatest(8,

@@ -35,7 +35,8 @@ object TextQueries {
   // The ORDER BY tail of q32/q33 goes through a checkpoint barrier:
   // range partitioning's SAMPLING pass re-executes the child plan, so
   // sorting directly over the stats projection runs the text_stats scan
-  // TWICE (ProbeQ33Decomp at 10×: full 1.54 s vs stats-only 0.47 s vs
+  // TWICE (SCALING.md, r16 q33 split at 10×: full 1.54 s vs stats-only
+  // 0.47 s vs
   // checkpoint-then-sort 0.72 s — the sort tail was 65% of the wall and
   // most of it was the re-executed scan). The barrier materializes the
   // SMALL stats rows once (~50 B/doc — the documents themselves never

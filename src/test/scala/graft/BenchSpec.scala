@@ -61,6 +61,20 @@ class BenchSpec extends AnyFunSuite {
         assert(cpu < wall * maxPar * 2 + 1.0,
           s"cpu $cpu implausible vs wall $wall at parallelism $maxPar")
       }
+      // the same listener counts each rep's jobs, stages, tasks and scan
+      // input; a parquet-reading query must show all four on every rep,
+      // and identical reps must count identical jobs — a straggler event
+      // settling into the wrong rep would skew one of them
+      val q = Bench.runQuery(spark, "/root/testdata/sf0.001", "q01_group_agg",
+        SparkEntry.queries("q01_group_agg"), Some(tally))
+      assert(q.err.isEmpty, q.err)
+      assert(q.layers.size === 3)
+      q.layers.foreach { l =>
+        assert(l.jobs >= 1 && l.stages >= 1 && l.tasks >= 1, l)
+        assert(l.scanBytes > 0, s"rep read no scan input: $l")
+      }
+      assert(q.layers.map(_.jobs).distinct.size === 1,
+        s"job counts differ between identical reps: ${q.layers.map(_.jobs)}")
     } finally spark.sparkContext.removeSparkListener(tally)
   }
 

@@ -250,4 +250,15 @@ class PlanSpec extends SparkSpec {
     assert(p.contains("partial_count"),
       s"pair counts must map-side combine:\n${p.take(1500)}")
   }
+
+  test("q65: the df branch reuses the tf exchange — one corpus scan") {
+    // reuse is decided while AQE runs the query, so the pre-execution
+    // sparkPlan never shows it; assert on the final adaptive plan instead
+    val df = SparkEntry.queries("q65_tfidf_topk")(spark, d)
+    df.collect()
+    val p = df.queryExecution.executedPlan.toString
+    assert(p.contains("isFinalPlan=true"), p.take(1500))
+    assert(p.contains("ReusedExchange"),
+      s"the df count must read the tf branch's exchange, not rescan:\n$p")
+  }
 }
