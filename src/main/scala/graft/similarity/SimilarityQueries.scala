@@ -149,173 +149,66 @@ object SimilarityQueries {
     addShingles(docs, "text", "shingles")
       .filter(size(split(col("text"), " ")) >= 3)
 
-  /** LSH bucket membership → distinct unordered candidate pairs, LOSSLESS
-    * at any bucket size. Input: a banded relation (id, band, bkey) — one
-    * row per (member id, band, band value). Output: every (id_a, id_b),
-    * id_a < id_b, whose members share at least one bucket.
+  /** LSH banding → emit-once candidate pairs, LOSSLESS at any bucket size.
+    * The one banded-pair primitive: q43/q63/q77 (MinHash, SimHash) and
+    * q51/q76/q93 (random-hyperplane) all run through it.
     *
-    * The c(k,2) expansion must be bounded PER TASK, not per bucket: a
-    * degenerate bucket (boilerplate band value, empty docs) can hold
-    * millions of members, and one row exploding to c(10^6, 2) structs is an
-    * executor OOM. r7 capped this by DROPPING buckets over 10k members —
-    * silently, which voided q63's pigeonhole guarantee ("exactly all pairs
-    * at Hamming <= 3") on exactly the corpora a dedup operator exists for
-    * (the round-7 verdict's one finding). Pair volume on a degenerate
-    * corpus is inherent to the pair-output contract — the fix is to
-    * DISTRIBUTE the inherent work, never to lose it:
+    * Input: `rows` (vec_id, v) — one row per member, `v` the payload that
+    * verification needs AND that `key(v, b)` reads band b's key from
+    * (a packed signature long, or an array of band keys). Each key must
+    * be a non-negative value below 2^keyBits; the member joins bucket
+    * `cid = b·2^keyBits + key(v, b)` in every band b — collision-free, so
+    * no unrelated buckets merge (a hash key would ADD candidates and
+    * drift from the generated oracles).
     *
-    *   1. bucket size via a window count over the same (band, bkey) hash
-    *      partitioning the groupBy needs — no extra exchange;
-    *   2. each member salts into one of ceil(size/chunkSize) chunks by a
-    *      hash of its id, so no collected array exceeds ~chunkSize elements
-    *      regardless of skew;
-    *   3. WITHIN-chunk pairs: the array-combinatorics expansion, now
-    *      bounded by c(chunkSize, 2) structs per row;
-    *   4. CROSS-chunk pairs: chunk arrays of the same bucket join pairwise
-    *      (chunk_a < chunk_b), the LEFT array explodes to scalar rows
-    *      FIRST, then each (member, right-chunk) row expands to at most
-    *      chunkSize structs. Never build the a×b product as one array: at
-    *      chunkSize=1024 that is ~10^6 interpreted structs (100+ MB object
-    *      form) materialized per row — measured as a forked-JVM OOM on a
-    *      10k-member bucket. Both join inputs filter to multi-chunk
-    *      buckets, so when every bucket fits one chunk (all tested SFs)
-    *      the join inputs are EMPTY relations and the plan degenerates to
-    *      exactly the old single-stage expansion.
-    *   5. the expansion of a multi-chunk bucket is SPREAD ACROSS TASKS,
-    *      not just across rows: the window, the groupBy, and the
-    *      cross-chunk join all hash on (band, bkey) prefixes, so without
-    *      an explicit re-distribution every chunk and every chunk PAIR of
-    *      one degenerate bucket would land in the one task owning that
-    *      (band, bkey) — memory-bounded but serial, c(10^6, 2) ≈ 5·10^11
-    *      pair emissions on a single core (the round-9 verdict's #1).
-    *      Both multi-chunk paths therefore repartition on their FULL
-    *      chunk key — (band, bkey, chunk) for within, (band, bkey, ca,
-    *      cb) for cross — before exploding, so a k-member bucket's work
-    *      parallelizes over ~ceil(k/chunkSize)^2/2 tasks. Single-chunk
-    *      buckets (every non-degenerate corpus) skip both exchanges:
-    *      their expansion is already bounded by c(chunkSize, 2) per row,
-    *      and the two repartitions only ever move EMPTY relations.
-    *   6. the cross-chunk JOIN itself keys on (band, bkey, ca) — the "b"
-    *      side replicates map-side to every lower chunk — so no single
-    *      task ever produces or shuffle-writes a degenerate bucket's
-    *      whole chunk-pair grid either (crossChunkJoined's doc has the
-    *      byte math; this was r10's one residual serialization).
+    * Output: (cid, id_a, va, id_b, vb), id_a < id_b, exactly ONCE per pair
+    * sharing any bucket, payloads attached — verification runs on the pair
+    * row itself, with no re-join of signatures.
     *
-    * Every pair of a k-member bucket lands in exactly one chunk pair, so
-    * the union is exactly its c(k,2) pair set: nothing capped, nothing
-    * dropped, bounded memory at any skew. distinct() is the same cross-band
-    * dedup as before. Package-visible for the degenerate-bucket spec.
+    *   1. pairs come from [[semPairs]] on `cid`: its triangle grid bounds
+    *      a hot bucket's c(k,2) expansion per task, so a degenerate bucket
+    *      (boilerplate band value, empty docs, a near-dup pile) is
+    *      distributed, never capped — r7's silent 10k-member cap voided
+    *      q63's pigeonhole guarantee on exactly the corpora a dedup
+    *      operator exists for (DegenerateBucketSpec pins the c(k,2) count);
+    *   2. cross-band dedup is EMIT-ONCE: a pair meeting in several bands
+    *      survives only in the LOWEST band where the endpoints' keys agree,
+    *      decided locally on the pair row by recomputing the lower bands'
+    *      keys from the carried payloads. A `.distinct()` instead was an
+    *      exchange of the whole candidate set — 42.7 M rows for q63 at
+    *      100×, 2.9 B for q51 (the r14 100× board killer) — and it shuffles
+    *      the answer, which grows quadratically on a degenerate corpus.
+    *      Downstream aggregates (q76/q93) therefore partial-aggregate
+    *      map-side and pair listings stay a straight pipeline.
+    *
+    * `key` must stay shift/and/getItem over the payload — no lambdas: the
+    * first emit-once cut compared key ARRAYS via slice/zip_with/exists,
+    * and higher-order functions are CodegenFallback — billions of pairs
+    * through an interpreted eval put 29/32 executor threads in
+    * ArrayExists.eval (r15 jstack), ~10× the cosine work itself.
+    * PlanSpec pins no lambda, no Window and no pair-keyed aggregate on
+    * every caller's plan.
     */
-  private[graft] def bucketPairs(banded: DataFrame,
-      chunkSize: Int = 256): DataFrame = {
-    val chunked = chunkedBuckets(banded, chunkSize)
-    // Within-chunk expansion as TWO Generate nodes (r18): the old form
-    // built the whole c(k,2) struct array per bucket row through nested
-    // `transform` lambdas — higher-order functions evaluate INTERPRETED
-    // (CodegenFallback, the r15 ArrayExists.eval trap), on exactly the
-    // candidate-enumeration path that dominates q43/q63/q77 at scale —
-    // and materialized the full flattened pair array in memory before
-    // exploding it. posexplode + explode(slice(...)) emits the identical
-    // pair multiset (for each position i: ids[i] with every later
-    // member) through whole-stage-codegen'd primitives, one suffix slice
-    // at a time instead of one O(k²) array per bucket.
-    val expand = (df: DataFrame) => df
-      .select(col("ids"), posexplode(col("ids")).as(Seq("i", "id_a")))
-      .select(col("id_a"), explode(slice(col("ids"), col("i") + 2,
-        greatest(size(col("ids")) - col("i") - 1, lit(0)))).as("id_b"))
-    val withinSingle = expand(
-      chunked.filter(col("nchunks") === 1 && size(col("ids")) >= 2))
-    val withinMulti = expand(chunked.filter(col("nchunks") > 1)
-      .repartition(col("band"), col("bkey"), col("chunk")))
-    val cross = crossChunkRows(chunked)
-      .select(explode(col("ids_a")).as("xa"), col("ids_b"))
-      // chunk salting ignores id order, so order each cross pair
-      // explicitly; plain explode + least/greatest projection (the
-      // transform-lambda form ran interpreted, see expand above)
-      .select(explode(col("ids_b")).as("y"), col("xa"))
-      .select(least(col("xa"), col("y")).as("id_a"),
-        greatest(col("xa"), col("y")).as("id_b"))
-    // No hint needed against a statically-broadcast pair set: Catalyst's
-    // size estimate for a Generate (explode) keeps the CHILD's
-    // sizeInBytes, so the planner used to under-count the pair set by the
-    // whole expansion factor and pick a BROADCAST build for the
-    // verification joins downstream — measured as a driver OOM at the 30×
-    // probe, where clustered embeddings made the true pair volume ~1000×
-    // the estimate. plans.GenerateStatsGuard now pins NO_BROADCAST_HASH
-    // on every Generate-derived join side at the optimizer level (the r10
-    // hand-placed `hint("merge")` here guarded only this one site, and
-    // leaked join-hint warnings when the pair set was consumed without a
-    // join). PlanSpec still pins the SortMergeJoin in q43/q51's plans.
-    withinSingle.unionByName(withinMulti).unionByName(cross)
-      .select(col("id_a"), col("id_b"))
-      .distinct()
-  }
-
-  /** Bucket membership → one row per (bucket, chunk) with the chunk's
-    * sorted member array. The window and groupBy share one (band, bkey)
-    * hash partitioning — no extra exchange. */
-  private[graft] def chunkedBuckets(banded: DataFrame,
-      chunkSize: Int): DataFrame = {
-    val wB = Window.partitionBy("band", "bkey")
-    banded
-      .withColumn("nchunks",
-        ceil(count(lit(1)).over(wB) / lit(chunkSize.toDouble)).cast("int"))
-      .withColumn("chunk", pmod(xxhash64(col("id")), col("nchunks")))
-      .groupBy("band", "bkey", "nchunks", "chunk")
-      .agg(sort_array(collect_list(col("id"))).as("ids"))
-  }
-
-  /** Unordered (chunk_a, chunk_b) pairs of multi-chunk buckets, joined on
-    * (band, bkey, ca) and then repartitioned on the full (band, bkey, ca,
-    * cb) key so each chunk pair's expansion runs in its own task (step 5
-    * above). Empty for any corpus whose buckets all fit one chunk.
-    * Package-visible so the degenerate-bucket spec can assert the task
-    * spread at runtime. */
-  private[graft] def crossChunkRows(chunked: DataFrame): DataFrame =
-    crossChunkJoined(chunked)
-      .repartition(col("band"), col("bkey"), col("ca"), col("cb"))
-
-  /** The cross-chunk self-join itself, with the CHUNK in the join key.
-    *
-    * Joining the chunk relations on bare (band, bkey) — the r10 shape —
-    * left ONE task owning a degenerate bucket's key to produce and
-    * shuffle-write its entire (ca, cb) grid: ~k²/chunkSize² rows carrying
-    * both member arrays, ~k²·8/chunkSize bytes (≈4 GB at k=10⁶) of
-    * sequential IO before the repartition spread the expansion (the r10
-    * verdict's "residual serial shuffle write"). Instead, each "b" chunk
-    * row is replicated map-side to every ca < cb it must meet
-    * (explode(sequence(0, cb-1))), and the join runs on (band, bkey, ca):
-    *
-    *   - the b rows are spread BY CHUNK before they replicate: chunked
-    *     buckets physically sit in the (band, bkey) window partitioning —
-    *     one task per bucket — so exploding there would just move the
-    *     serial write upstream. The repartition on (band, bkey, chunk)
-    *     moves only UN-replicated rows (k·8 bytes per bucket), and the
-    *     map-side explode + join-exchange write then leave from ~nchunks
-    *     tasks, each writing ≤ nchunks rows;
-    *   - the join output of one bucket is produced by ~nchunks tasks (one
-    *     per ca value), each writing ~nchunks rows — the former single
-    *     4 GB writer becomes ~nchunks writers of ~1 MB each;
-    *   - total bytes are unchanged (the grid is the answer's size); only
-    *     the serialization point is gone.
-    *
-    * ca < cb holds by construction (b replicates only to LOWER ca), so
-    * the diagonal never joins; within-chunk pairs stay with withinMulti.
-    * The filter(chunk > 0) guards sequence's descending-default on
-    * sequence(0, -1). Both sides are Generate-derived, so
-    * plans.GenerateStatsGuard keeps the join a shuffled merge on the
-    * 3-part key at any stats estimate.
-    */
-  private[graft] def crossChunkJoined(chunked: DataFrame): DataFrame = {
-    val multi = chunked.filter(col("nchunks") > 1)
-    val aSide = multi.select(col("band"), col("bkey"), col("chunk").as("ca"),
-      col("ids").as("ids_a"))
-    val bSide = multi.filter(col("chunk") > 0)
-      .repartition(col("band"), col("bkey"), col("chunk"))
-      .select(col("band"), col("bkey"),
-        explode(sequence(lit(0L), col("chunk") - 1)).as("ca"),
-        col("chunk").as("cb"), col("ids").as("ids_b"))
-    aSide.join(bSide, Seq("band", "bkey", "ca"))
+  private[graft] def bandedPairs(rows: DataFrame, numBands: Int,
+      keyBits: Int, chunkSize: Int = 1024)(
+      key: (Column, Int) => Column): DataFrame = {
+    val banded = rows
+      .select(col("vec_id"), col("v"),
+        posexplode(array((0 until numBands).map(key(col("v"), _)): _*))
+          .as(Seq("band", "bkey")))
+      .select(
+        (col("band").cast("long") * lit(1L << keyBits) + col("bkey")).as("cid"),
+        col("vec_id"), col("v"))
+    // emit iff no band below this pair's band shares a key, written as
+    // one clause per band (`band <= i OR keys differ in band i`): linear
+    // in numBands, where a CASE per band repeats the lower bands' keys
+    // O(numBands²) times — for q77's 10 compound bands that generated a
+    // method past the JIT's 8 KB huge-method limit, which then runs
+    // interpreted (2-3× the pair stage's CPU at 10×).
+    val band = shiftright(col("cid"), keyBits)
+    semPairs(banded, chunkSize).filter((0 until numBands - 1)
+      .map(i => band <= i || key(col("va"), i) =!= key(col("vb"), i))
+      .foldLeft(lit(true))(_ && _))
   }
 
   /** Signature via the fused text→signature `MinHashFromText` expression
@@ -346,28 +239,34 @@ object SimilarityQueries {
 
   // ---------------------------------------------------------------------------
   // q43 — MinHash-LSH candidate pairs + exact Jaccard verification: band the
-  // signature (16 hashes → 4 bands of 4), bucket-join on (band, band-hash),
-  // then verify candidates with exact shingle Jaccard. At 100 TB only the
-  // 8-byte band hashes shuffle; documents are re-joined for the (rare)
-  // verification step.
+  // signature (16 hashes → 4 bands of 4), pair bucket members, then verify
+  // candidates with exact shingle Jaccard. At 100 TB only the slim banded
+  // rows (doc id + 4 band hashes) shuffle; documents are re-joined for the
+  // (rare) verification step.
   val q43MinhashPairs: Q = (s, d) => {
     // Shape chosen for scale AND single-pass efficiency:
-    //   1. signature pipeline runs ONCE (no self-join over it — a self-join
-    //      would recompute the signatures on both sides or force a persist
-    //      whose concurrent-broadcast fill serializes, measured 5-20× slower);
-    //   2. only slim (doc_id, band, band_hash) rows shuffle; pairs within a
-    //      bucket come from groupBy + collect_list + array combinatorics,
-    //      chunk-salted by bucketPairs so per-task expansion stays bounded
-    //      even on a degenerate bucket — no pair is ever dropped;
+    //   1. the signature pipeline runs ONCE and feeds one banded relation
+    //      (a self-join over the signatures would recompute them on both
+    //      sides or force a persist whose concurrent-broadcast fill
+    //      serializes, measured 5-20× slower);
+    //   2. each doc carries its 4 band hashes (Murmur3 ints, masked to
+    //      32 bits as bucket keys) through bandedPairs, which pairs bucket
+    //      members per task-bounded chunk and emits each pair once, from
+    //      its lowest shared band — no pair is ever dropped, no distinct;
     //   3. exact-Jaccard verification re-derives shingles from `documents`
-    //      only for the (rare) surviving candidate pairs via two broadcast
-    //      joins of the tiny pair set against the base table.
-    val banded = minhashSignatures(Tables.documents(s, d))
-      .select(col("doc_id").as("id"),
-        posexplode(array((0 until NumHashes / BandSize).map { b =>
+    //      only for the surviving candidate pairs.
+    // LAZY barrier, as in q63: semPairs reads the banded relation twice
+    // (bucket-size aggregate + its join back), and without it the
+    // minhash_text scan runs twice. 4 band hashes per doc persisted.
+    val sigs = minhashSignatures(Tables.documents(s, d))
+      .select(col("doc_id").as("vec_id"),
+        array((0 until NumHashes / BandSize).map { b =>
           hash(slice(col("minhash"), b * BandSize + 1, BandSize))
-        }: _*)).as(Seq("band", "bkey")))
-    val pairs = bucketPairs(banded)
+        }: _*).as("v"))
+      .localCheckpoint(eager = false)
+    val pairs = bandedPairs(sigs, NumHashes / BandSize, keyBits = 32) {
+      (v, b) => v.getItem(b).cast("long").bitwiseAND(lit(0xFFFFFFFFL))
+    }.select(col("id_a"), col("id_b"))
     // join TEXT first, derive shingles only for the few surviving candidate
     // rows — joining a shingle-projected scan would re-shingle the whole
     // corpus on the probe side of each join
@@ -412,12 +311,13 @@ object SimilarityQueries {
   // (measured on the corpus: true near-dups sit at Hamming 0-6 and the
   // random-pair noise floor starts at ~7, so the guaranteed-complete bar
   // is also the discriminating one). The guarantee holds at ANY bucket
-  // occupancy: bucketPairs chunk-splits oversized buckets instead of
-  // dropping them (r7's silent 10k cap — the one place the engine could
-  // lose recall at scale — is gone; DegenerateBucketSpec proves the pair
-  // set on a 10k+-member degenerate bucket). At 100 TB only (doc_id,
-  // band, 16-bit band value) rows shuffle; signatures are re-derived
-  // scan-side for the few surviving pairs, like q43's verification joins.
+  // occupancy: bandedPairs spreads oversized buckets over semPairs'
+  // triangle grid instead of dropping them (r7's silent 10k cap — the one
+  // place the engine could lose recall at scale — is gone;
+  // DegenerateBucketSpec proves the pair set on a 10k+-member degenerate
+  // bucket). At 100 TB only (doc_id, bucket, 8-byte signature) rows
+  // shuffle; each candidate carries both signatures, so verification is
+  // a bit_count on the pair row — no re-join, no candidate distinct.
   //
   // Measured saturation bound (round-11 100× probe): a 16-bit band space
   // holds 2^16 values, so INCIDENTAL candidates — unrelated docs randomly
@@ -426,7 +326,7 @@ object SimilarityQueries {
   // across the 30×→100× octave (36.6 s → 352 s; 3.33× docs), matching
   // the N²/2^15 collision arithmetic (predicted 10.9×) — the growth is
   // candidate enumeration, uniformly spread (no task hotspot; the skew
-  // machinery above is orthogonal and healthy). Raising SimBandBits
+  // machinery is orthogonal and healthy). Raising SimBandBits
   // trades the Hamming<=3 pigeonhole guarantee; the published fix that
   // keeps it is Manku, Jain & Das Sarma's block-permutation scheme
   // (WWW'07 §3) — IMPLEMENTED below as q77: band on PAIRS of blocks so
@@ -442,29 +342,29 @@ object SimilarityQueries {
   private val SimNumBands = 64 / SimBandBits
 
   val q63SimhashPairs: Q = (s, d) => {
-    // LAZY barrier (r17): sigs feeds the banded relation AND both
-    // verification joins — without it the per-doc simhash64 scan runs
-    // three times in the final DAG. 16 B/doc persisted; materialized
-    // inside the first consumer's job.
+    // LAZY barrier (r17): semPairs reads the banded relation twice (the
+    // bucket-size aggregate and its join back) — without it the per-doc
+    // simhash64 scan runs twice in the final DAG. 16 B/doc persisted;
+    // materialized inside the first consumer's job.
     val sigs = Tables.documents(s, d)
       .withColumn("__toks", split(col("text"), " "))
-      .select(col("doc_id"),
-        graft.functions.SimHash64.simhash64(s, "__toks").as("simhash"))
+      .select(col("doc_id").as("vec_id"),
+        graft.functions.SimHash64.simhash64(s, "__toks").as("v"))
       .localCheckpoint(eager = false)
-    val banded = sigs.select(col("doc_id").as("id"),
-      posexplode(array((0 until SimNumBands).map { b =>
-        shiftrightunsigned(col("simhash"), b * SimBandBits)
-          .bitwiseAND(lit((1L << SimBandBits) - 1))
-      }: _*)).as(Seq("band", "bkey")))
-    val pairs = bucketPairs(banded)
+    simhashVerified(bandedPairs(sigs, SimNumBands, SimBandBits) { (v, b) =>
+      shiftrightunsigned(v, b * SimBandBits)
+        .bitwiseAND(lit((1L << SimBandBits) - 1))
+    })
+  }
+
+  /** q63/q77's verification: the simhash longs ride the pair row, so the
+    * Hamming distance is one bit_count(xor) — no signature re-join. */
+  private def simhashVerified(pairs: DataFrame): DataFrame =
     pairs
-      .join(sigs.select(col("doc_id").as("id_a"), col("simhash").as("sim_a")), "id_a")
-      .join(sigs.select(col("doc_id").as("id_b"), col("simhash").as("sim_b")), "id_b")
-      .withColumn("hamming", bit_count(col("sim_a").bitwiseXOR(col("sim_b"))))
+      .withColumn("hamming", bit_count(col("va").bitwiseXOR(col("vb"))))
       .filter(col("hamming") <= SimHammingMax)
       .select("id_a", "id_b", "hamming")
       .orderBy("id_a", "id_b")
-  }
 
   // ---------------------------------------------------------------------------
   // q77 — SimHash near-dup pairs via COMPOUND banding (the scale path for
@@ -473,8 +373,8 @@ object SimilarityQueries {
   // fingerprint so that a long intact prefix leads, then probing the runs
   // that share it; on disk the runs are found by sorting, in Spark the
   // identical candidate set falls out of hash-bucketing on the permuted
-  // prefix — same math, shuffle instead of sort, and bucketPairs'
-  // chunk-splitting already bounds any run's expansion. Concretely:
+  // prefix — same math, shuffle instead of sort, and semPairs' triangle
+  // grid already bounds any run's expansion. Concretely:
   //
   //   - split the 64-bit signature into 5 disjoint blocks
   //     (13,13,13,13,12 bits). 3 flipped bits touch <= 3 blocks, so >= 2
@@ -496,12 +396,13 @@ object SimilarityQueries {
   //     on IDENTICAL output (93,128 pairs both). The trade is 10N
   //     banded rows shuffled instead of 4N — linear cost for quadratic
   //     relief.
-  //   - everything downstream is shared with q63: bucketPairs (chunked,
-  //     task-spread, lossless on degenerate buckets), signature re-join,
-  //     bit_count verification. Output semantics are IDENTICAL ("all
-  //     pairs at Hamming <= 3"); the oracle is deliberately brute-force
-  //     (all-pairs xor in DuckDB) so it is independent of ANY banding
-  //     arithmetic, and SimilaritySpec pins q77 === q63 row-for-row.
+  //   - everything downstream is shared with q63: bandedPairs (task-
+  //     spread, lossless on degenerate buckets, emit-once), bit_count
+  //     verification on the carried signatures. Output semantics are
+  //     IDENTICAL ("all pairs at Hamming <= 3"); the oracle is
+  //     deliberately brute-force (all-pairs xor in DuckDB) so it is
+  //     independent of ANY banding arithmetic, and SimilaritySpec pins
+  //     q77 === q63 row-for-row.
   private[graft] val SimBlockWidths: Seq[Int] = Seq(13, 13, 13, 13, 12)
   private[graft] val SimBlockOffsets: Seq[Int] =
     SimBlockWidths.scanLeft(0)(_ + _).init
@@ -514,24 +415,17 @@ object SimilarityQueries {
   val q77SimhashPairsBlocked: Q = (s, d) => {
     val sigs = Tables.documents(s, d)
       .withColumn("__toks", split(col("text"), " "))
-      .select(col("doc_id"),
-        graft.functions.SimHash64.simhash64(s, "__toks").as("simhash"))
-      .localCheckpoint(eager = false) // see q63: three consumers, one simhash scan
-    def block(i: Int) =
-      shiftrightunsigned(col("simhash"), SimBlockOffsets(i))
+      .select(col("doc_id").as("vec_id"),
+        graft.functions.SimHash64.simhash64(s, "__toks").as("v"))
+      .localCheckpoint(eager = false) // see q63: two reads, one simhash scan
+    def block(v: Column, i: Int) =
+      shiftrightunsigned(v, SimBlockOffsets(i))
         .bitwiseAND(lit((1L << SimBlockWidths(i)) - 1))
-    val banded = sigs.select(col("doc_id").as("id"),
-      posexplode(array(SimBlockPairs.map { case (i, j) =>
-        shiftleft(block(i), SimBlockWidths(j)).bitwiseOR(block(j))
-      }: _*)).as(Seq("band", "bkey")))
-    val pairs = bucketPairs(banded)
-    pairs
-      .join(sigs.select(col("doc_id").as("id_a"), col("simhash").as("sim_a")), "id_a")
-      .join(sigs.select(col("doc_id").as("id_b"), col("simhash").as("sim_b")), "id_b")
-      .withColumn("hamming", bit_count(col("sim_a").bitwiseXOR(col("sim_b"))))
-      .filter(col("hamming") <= SimHammingMax)
-      .select("id_a", "id_b", "hamming")
-      .orderBy("id_a", "id_b")
+    simhashVerified(bandedPairs(sigs, SimBlockPairs.size,
+        2 * SimBlockWidths.max) { (v, b) =>
+      val (i, j) = SimBlockPairs(b)
+      shiftleft(block(v, i), SimBlockWidths(j)).bitwiseOR(block(v, j))
+    })
   }
 
   // ---------------------------------------------------------------------------
@@ -943,12 +837,19 @@ object SimilarityQueries {
   val SemDedupTheta = 0.35 // q41's near-dup bar, kept consistent across the family
 
   /** Within-cluster unordered pairs (id_a < id_b) with both vectors,
-    * bounded per task at ANY cluster size. Input: (cid, vec_id, v).
+    * bounded per task at ANY cluster size. Input: (cid, vec_id, v); the
+    * pair generator under q74's k-means clusters and, via [[bandedPairs]],
+    * under every LSH bucket (q43/q51/q63/q76/q77/q93).
+    *
+    * `cid` must be non-null: the cluster-size join below is an inner join
+    * on `cid`, so a null-`cid` row would silently vanish. It always is —
+    * k-means ids are non-null, and bandedPairs' composite bucket keys come
+    * from a `posexplode` of a non-null key array.
     *
     * A plain self-join on cid enumerates one cluster's m² products inside
-    * the single task owning that cid — the hot-cluster analog of the
-    * bucketPairs degenerate bucket (and one no K schedule can prevent: a
-    * corpus of near-identical embeddings lands in ONE cluster at any K).
+    * the single task owning that cid — a hot cluster, or a degenerate LSH
+    * bucket (and one no K schedule can prevent: a corpus of near-identical
+    * embeddings lands in ONE cluster at any K).
     * Clusters that fit one chunk keep the direct join. Larger clusters go
     * through a triangle grid: each member salts into chunk
     * c = hash(vec_id) mod nchunks, an "a" copy fans out to buckets
@@ -1106,10 +1007,10 @@ object SimilarityQueries {
   // trades one long low-recall bucket for 4 independent high-recall ones:
   // cos 0.9 ⇒ ~75% pair recall vs ~8% unbanded), exact-cosine verification
   // computed IN the bucket expansion. Vectors ride into the buckets (4N
-  // vector rows shuffle — linear), pairs emit with their cosine already
-  // computed, and only 24-byte (id_a, id_b, cosine) rows survive to the
-  // cross-band dedup. The previous shape (id-only bucketPairs, then two
-  // SMJ verification joins re-attaching embeddings to the pair set) was
+  // vector rows shuffle — linear), and each pair is emitted once, with its
+  // cosine computed on the pair row (bandedPairs). An earlier shape
+  // (id-only candidate pairs, then two SMJ verification joins
+  // re-attaching embeddings to the pair set) was
   // the r12 100× board's one real failure: ~10^8 candidate rows each
   // carrying two 64-float vectors is ~55 GB of sort spill per join — the
   // task died with [SPILL_OUT_OF_MEMORY] "No space left on device" in a
@@ -1148,69 +1049,24 @@ object SimilarityQueries {
     val n = Tables.rowCount(s, d, "embeddings")
     val bandBits = math.min(15, math.max(8,
       math.ceil(math.log(math.max(n / 8.0, 2.0)) / math.log(2.0)).toInt))
-    val numPlanes = 4 * bandBits
     val mask = (1L << bandBits) - 1
-    val signed = emb.select(col("vec_id"), col("embedding"),
-      graft.functions.RandomHyperplaneSignature
-        .rh_signature(s, "embedding", numPlanes).as("sig"))
-    // Every row carries its full signature long alongside its banded
-    // explode — the emit-once dedup below recovers any band's key from
-    // it by bit-slice, so the pair payload grows by 8 bytes, not a
+    // Every row carries its full signature long next to its embedding —
+    // band b's key is a bit-slice of it, both for bucketing and for the
+    // emit-once dedup, so the pair payload grows by 8 bytes, not a
     // 4-element array.
-    val banded = signed
-      .select(col("vec_id"), col("embedding"), col("sig"),
-        posexplode(array((0 until 4).map { b =>
-          shiftright(col("sig"), b * bandBits).bitwiseAND(lit(mask))
-        }: _*)).as(Seq("band", "bkey")))
-    // Buckets key on the collision-free composite band*2^bits + bkey (a
-    // hash key would merge unrelated buckets and ADD candidates, drifting
-    // from the generated oracle); semPairs' triangle grid bounds any hot
-    // bucket's expansion per task exactly as it does for q74's clusters.
+    val signed = emb.select(col("vec_id"),
+      struct(col("embedding").as("e"),
+        graft.functions.RandomHyperplaneSignature
+          .rh_signature(s, "embedding", 4 * bandBits).as("sg")).as("v"))
     // chunkSize 2048 (not the old 256): grid shuffle volume per hot
     // bucket is rows·(nchunks/2)·rowWidth per side, and the 100× replica
     // corpus concentrates 15-20k rows into single band buckets
     // (100× bucket census: top bucket 20,085 rows, 2.9B true pairs) — 256
     // put 12.8 GB through the grid exchange where 2048 puts 1.7 GB, and a
     // 2048² cell is a ~2M-cosine task (CPU, not disk).
-    val pairs = semPairs(banded.select(
-      (col("band").cast("long") * lit(mask + 1) + col("bkey")).as("cid"),
-      col("vec_id"),
-      struct(col("embedding").as("e"), col("sig").as("sg")).as("v")),
-      chunkSize = 2048)
-    // EMIT-ONCE cross-band dedup (replaces `.distinct()` on the pair
-    // relation — the r14 100× killer): a pair colliding in several bands
-    // emits only from the FIRST such band, decided locally at emission by
-    // comparing the endpoints' lower-band keys, each recovered from the
-    // carried signature by bit-slice. The old distinct() was an EXCHANGE
-    // of every surviving pair — 2.9B rows at 100× (most pass the 0.35 bar
-    // on a near-dup-saturated corpus), ~60+ GB of shuffle that killed the
-    // board twice, and it shuffles the ANSWER, which grows quadratically
-    // in the degenerate corpus. Emit-once produces the identical pair SET
-    // with zero pair-relation shuffle: q76's aggregate tail now
-    // partial-aggregates map-side and exchanges 32 tiny partial rows, and
-    // q51's listing stays a straight pipeline into its sink. Oracle
-    // unchanged — the generated SQL's DISTINCT sees the same set.
-    //
-    // The predicate is pure shift/and/compare on two longs so it stays
-    // inside whole-stage codegen: the first cut of this dedup compared
-    // carried key ARRAYS via slice/zip_with/exists, and higher-order
-    // functions are CodegenFallback — billions of candidate pairs through
-    // an interpreted eval put 29/32 executor threads in ArrayExists.eval
-    // (r15 jstack) and made the 100× run ~10× slower than the cosine work
-    // itself.
-    def bandKey(side: String, b: Int) =
-      shiftright(col(s"$side.sg"), b * bandBits).bitwiseAND(lit(mask))
-    def noSharedBandBelow(b: Int) =
-      (0 until b).map(i => bandKey("va", i) =!= bandKey("vb", i))
-        .reduceOption(_ && _).getOrElse(lit(true))
-    val band = shiftright(col("cid"), bandBits).cast("int")
-    pairs
-      .withColumn("band", band)
-      .filter(
-        when(col("band") === 0, lit(true))
-          .when(col("band") === 1, noSharedBandBelow(1))
-          .when(col("band") === 2, noSharedBandBelow(2))
-          .otherwise(noSharedBandBelow(3)))
+    bandedPairs(signed, 4, bandBits, chunkSize = 2048) { (v, b) =>
+      shiftright(v.getField("sg"), b * bandBits).bitwiseAND(lit(mask))
+    }
       .withColumn("cosine", cos6(s, "va.e", "vb.e"))
       .filter(col("cosine") >= 0.35)
       .select("id_a", "id_b", "cosine")
@@ -1241,49 +1097,22 @@ object SimilarityQueries {
   private[graft] def rhWideBandBits(n: Long): Int = math.min(31, math.max(8,
     math.ceil(math.log(math.max(n / 8.0, 2.0)) / math.log(2.0)).toInt))
 
-  /** The semPairs input relation (cid, vec_id, v): every row carries its
-    * full band-key ARRAY alongside its banded explode, so the emit-once
-    * dedup recovers any band's key by `GetArrayItem` — a codegen'd
-    * primitive read (no HOFs; the r15 ArrayExists.eval lesson).
-    */
-  private[graft] def rhWideBanded(s: org.apache.spark.sql.SparkSession,
-      d: String, bandBits: Int): DataFrame = {
-    val mask = (1L << bandBits) - 1
-    Tables.embeddings(s, d)
-      .select(col("vec_id"), col("embedding"),
-        graft.functions.RhBandKeys
-          .rh_band_keys(s, "embedding", bandBits, 4).as("sg"))
-      .select(col("vec_id"), col("embedding"), col("sg"),
-        posexplode(col("sg")).as(Seq("band", "bkey")))
-      .select(
-        (col("band").cast("long") * lit(mask + 1) + col("bkey")).as("cid"),
-        col("vec_id"),
-        struct(col("embedding").as("e"), col("sg").as("sg")).as("v"))
-  }
-
   /** Emit-once-deduped candidate pairs (id_a, id_b, va, vb) under the
-    * wide layout — see q51Pairs for the full rationale of every step
-    * (adaptive width, composite bucket key, triangle grid, emit-once);
-    * only the key representation differs.
+    * wide layout — q51Pairs' pipeline (adaptive width, composite bucket
+    * key, triangle grid, emit-once) with only the key representation
+    * changed: every row carries its band-key ARRAY, read by `getItem` — a
+    * codegen'd primitive (no HOFs; the r15 ArrayExists.eval lesson).
     */
   private[graft] def rhWideCandidates(s: org.apache.spark.sql.SparkSession,
       d: String): DataFrame = {
     val bandBits = rhWideBandBits(Tables.rowCount(s, d, "embeddings"))
-    val pairs = semPairs(rhWideBanded(s, d, bandBits), chunkSize = 2048)
-    def bandKey(side: String, b: Int) = col(s"$side.sg").getItem(b)
-    def noSharedBandBelow(b: Int) =
-      (0 until b).map(i => bandKey("va", i) =!= bandKey("vb", i))
-        .reduceOption(_ && _).getOrElse(lit(true))
-    val mask = (1L << bandBits) - 1
-    val band = shiftright(col("cid"), bandBits).cast("int")
-    pairs
-      .withColumn("band", band)
-      .filter(
-        when(col("band") === 0, lit(true))
-          .when(col("band") === 1, noSharedBandBelow(1))
-          .when(col("band") === 2, noSharedBandBelow(2))
-          .otherwise(noSharedBandBelow(3)))
-      .select(col("id_a"), col("id_b"), col("va"), col("vb"))
+    val keyed = Tables.embeddings(s, d)
+      .select(col("vec_id"), struct(col("embedding").as("e"),
+        graft.functions.RhBandKeys
+          .rh_band_keys(s, "embedding", bandBits, 4).as("sg")).as("v"))
+    bandedPairs(keyed, 4, bandBits, chunkSize = 2048) { (v, b) =>
+      v.getField("sg").getItem(b)
+    }.select(col("id_a"), col("id_b"), col("va"), col("vb"))
   }
 
   /** q93 — q76's aggregate tail over the wide-signature pipeline. */
@@ -1415,8 +1244,9 @@ object SimilarityQueries {
   // band slice — same-slice pairs always collide on both sides; a cross-
   // slice murmur3 collision could only ADD a Spark candidate, which the
   // exact-jaccard filter then has to pass anyway. Both sides are lossless
-  // over bucket membership (bucketPairs chunk-splits, never drops), so the
-  // candidate sets agree at any occupancy.
+  // over bucket membership (bandedPairs spreads oversized buckets, never
+  // drops them), and DISTINCT here is the same set Spark's emit-once
+  // dedup keeps, so the candidate sets agree at any occupancy.
   val q43Sql: String =
     s"""WITH $minhashMinsCte,
        |sig AS (
@@ -1480,7 +1310,7 @@ object SimilarityQueries {
   // same bit field shiftrightunsigned extracts from the signed Long;
   // Hamming via bit_count(xor) over the signed BIGINTs (two's-complement
   // bit pattern is identical). Both sides are lossless over bucket
-  // membership (bucketPairs chunk-splits oversized buckets), so the
+  // membership (bandedPairs spreads oversized buckets), so the
   // candidate sets agree at any occupancy.
   // NOTE: declared in this section, AFTER the U64/I64Min
   // constants — a val interpolating them from earlier in the file reads

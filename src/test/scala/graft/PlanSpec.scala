@@ -172,7 +172,7 @@ class PlanSpec extends SparkSpec {
     // driver the moment a corpus has real near-dup volume. Since round 11
     // plans.GenerateStatsGuard pins NO_BROADCAST_HASH on Generate-derived
     // join sides at the optimizer level (replacing r10's hand-placed merge
-    // hint in bucketPairs); this pins the resulting plan — a silent loss
+    // hint in the pair generator); this pins the resulting plan — a silent loss
     // of the guard would reintroduce a crash no sf0.001-sized test run
     // can see. GenerateStatsGuardSpec unit-tests the rule itself.
     for (name <- Seq("q51_rh_lsh_pairs", "q43_minhash_lsh_pairs",
@@ -180,6 +180,33 @@ class PlanSpec extends SparkSpec {
       val p = plan(name)
       assert(p.contains("SortMergeJoin"),
         s"$name verification join must be a shuffled merge join:\n${p.take(1500)}")
+    }
+  }
+
+  test("banded-pair queries: no lambda, no Window, no pair-keyed distinct") {
+    // the one banded-pair primitive (bandedPairs over semPairs) must stay
+    // codegen'd and shuffle only the banded rows: a lambda is an
+    // interpreted HOF on the candidate path (the r15 ArrayExists.eval
+    // trap), a Window drags the pair payload through a sort, and an
+    // aggregate keyed on (id_a, id_b) is a post-Generate distinct that
+    // exchanges the whole candidate set (42.7 M rows for q63 at 100×) —
+    // emit-once dedup exists so that none of the three comes back.
+    import org.apache.spark.sql.catalyst.expressions.LambdaFunction
+    import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Window}
+    for (name <- Seq("q43_minhash_lsh_pairs", "q63_simhash_pairs",
+        "q77_simhash_pairs_blocked", "q51_rh_lsh_pairs", "q76_rh_lsh_stats",
+        "q93_rh_wide_stats")) {
+      val p = SparkEntry.queries(name)(spark, d).queryExecution.optimizedPlan
+      val text = p.treeString.take(3000)
+      assert(!p.exists(_.expressions.exists(_.exists(_.isInstanceOf[LambdaFunction]))),
+        s"$name: lambdafunction in the plan:\n$text")
+      assert(p.collectFirst { case w: Window => w }.isEmpty,
+        s"$name: Window in the plan:\n$text")
+      val pairKeyed = p.collect { case a: Aggregate =>
+        a.groupingExpressions.flatMap(_.references.map(_.name)).toSet
+      }.filter(keys => keys("id_a") && keys("id_b"))
+      assert(pairKeyed.isEmpty,
+        s"$name: aggregate keyed on (id_a, id_b) — a candidate distinct:\n$text")
     }
   }
 

@@ -3,35 +3,42 @@ package graft.similarity
 import graft.{SparkSpec, Slow}
 import org.apache.spark.sql.functions._
 
-/** Proves `bucketPairs` is lossless at ANY bucket occupancy — the round-7
+/** Proves `bandedPairs` is lossless at ANY bucket occupancy — the round-7
   * verdict's one finding was a silent 10,000-member bucket cap that dropped
   * oversized LSH buckets whole, voiding q63's "exactly all pairs at
   * Hamming <= 3" pigeonhole guarantee on degenerate corpora (boilerplate
-  * band values, empty docs). The chunk-salted rewrite distributes the
-  * inherent c(k,2) work instead of dropping it; these specs pin that down:
+  * band values, empty docs). The banded path distributes the inherent
+  * c(k,2) work over semPairs' triangle grid instead of dropping it; these
+  * specs pin that down:
   *
   *   - exact pair-SET equality against a brute-force oracle with a chunk
-  *     size small enough that the multi-chunk (within + cross) path is the
-  *     one doing the work;
+  *     size small enough that the multi-chunk grid is the one doing the
+  *     work;
   *   - a bucket LARGER than the old 10k cap emitting its complete
   *     c(k,2) = k(k-1)/2 pair count — the exact case r7 silently lost;
-  *   - cross-band dedup and the ordering invariant id_a < id_b.
+  *   - emit-once cross-band dedup and the ordering invariant id_a < id_b.
+  *
+  * The grid's task spread is pinned by HotClusterSpec.
   */
 class DegenerateBucketSpec extends SparkSpec {
 
   import spark.implicits._
 
-  private def banded(rows: Seq[(Long, Int, Long)]) =
-    rows.toDF("id", "band", "bkey")
+  /** Members as (id, one key per band) — the LSH shape; band b's key is
+    * read from the payload array, as q43/q93 read theirs. */
+  private def pairs(members: Seq[(Long, Seq[Long])], chunkSize: Int = 1024) =
+    SimilarityQueries
+      .bandedPairs(members.toDF("vec_id", "v"), members.head._2.size,
+        keyBits = 16, chunkSize = chunkSize)((v, b) => v.getItem(b))
+      .select("id_a", "id_b").as[(Long, Long)]
 
   test("multi-chunk expansion emits exactly the brute-force pair set") {
     // 300 members in one degenerate bucket; chunkSize=16 forces ~19 chunks
     // so nearly every pair crosses chunks — the path a small fixture with
     // the default chunkSize would never execute.
     val k = 300
-    val rows = (1L to k.toLong).map(id => (id, 0, 42L))
-    val got = SimilarityQueries.bucketPairs(banded(rows), chunkSize = 16)
-      .as[(Long, Long)].collect().toSet
+    val got = pairs((1L to k.toLong).map(id => (id, Seq(42L))), chunkSize = 16)
+      .collect().toSet
     val expected = (for {
       a <- 1L to k.toLong; b <- (a + 1) to k.toLong
     } yield (a, b)).toSet
@@ -41,24 +48,27 @@ class DegenerateBucketSpec extends SparkSpec {
   test("bucket over the old 10k cap yields the complete c(k,2) count",
       Slow) {
     // 10,050 members sharing one band value — the r7 code dropped this
-    // bucket entirely (filter size(ids) <= 10000). Default chunkSize=256
-    // splits it into ~40 chunks; the union must still be every pair.
-    // Tagged Slow: materializes ~50.5 M pairs (~80 s) — excluded from the
-    // default run; see graft.Slow's scaladoc for the on-demand invocation.
+    // bucket entirely (filter size(ids) <= 10000). The default
+    // chunkSize=1024 splits it into 10 chunks; the grid must still emit
+    // every pair. Tagged Slow: materializes ~50.5 M pairs — excluded from
+    // the default run; see graft.Slow's scaladoc for the on-demand
+    // invocation.
     val k = 10050L
     val df = spark.range(1, k + 1)
-      .select(col("id"), lit(0).as("band"), lit(7L).as("bkey"))
-    val n = SimilarityQueries.bucketPairs(df).count()
+      .select(col("id").as("vec_id"), array(lit(7L)).as("v"))
+    val n = SimilarityQueries
+      .bandedPairs(df, 1, keyBits = 16)((v, b) => v.getItem(b)).count()
     assert(n === k * (k - 1) / 2)
   }
 
   test("pairs meeting in several bands are emitted once, ordered id_a < id_b") {
-    // ids 1..6 share band 0; ids 4..9 share band 1 → overlap {4,5,6} pairs
-    // appear in both bands; chunkSize=2 forces chunking even here.
-    val rows =
-      (1L to 6L).map(id => (id, 0, 11L)) ++ (4L to 9L).map(id => (id, 1, 22L))
-    val got = SimilarityQueries.bucketPairs(banded(rows), chunkSize = 2)
-      .as[(Long, Long)].collect()
+    // ids 1..6 share band 0's key; ids 4..9 share band 1's → the overlap
+    // {4,5,6} pairs meet in both bands. Every other (id, band) key is the
+    // id's own. chunkSize=2 sends both buckets through the grid.
+    val members = (1L to 9L).map { id =>
+      (id, Seq(if (id <= 6) 11L else 100 + id, if (id >= 4) 22L else 100 + id))
+    }
+    val got = pairs(members, chunkSize = 2).collect()
     assert(got.length === got.toSet.size, "duplicate pair emitted")
     assert(got.forall { case (a, b) => a < b }, "ordering invariant broken")
     val expected =
@@ -68,72 +78,12 @@ class DegenerateBucketSpec extends SparkSpec {
   }
 
   test("single-member and empty buckets emit nothing") {
-    val rows = Seq((1L, 0, 1L), (2L, 0, 2L), (3L, 1, 3L))
-    assert(SimilarityQueries.bucketPairs(banded(rows)).count() === 0)
-  }
-
-  test("one bucket's chunk-pair expansion spreads across tasks") {
-    // The round-9 verdict's #1: the window, groupBy, and cross-chunk join
-    // all hash on (band, bkey), so without an explicit re-distribution
-    // every chunk pair of ONE degenerate bucket lands in the one task
-    // owning that key — c(k,2) emission on a single core. bucketPairs now
-    // repartitions the multi-chunk paths on their full chunk keys; prove
-    // the spread at runtime, not just in the plan. AQE's partition
-    // coalescing is disabled for the probe: at test scale the chunk-pair
-    // rows are a few KB and AQE would legitimately merge them back into
-    // one partition — at the 100 TB scale this guards, a degenerate
-    // bucket's chunk pairs are tens of GB and stay spread.
-    val coalesceKey = "spark.sql.adaptive.coalescePartitions.enabled"
-    val prev = spark.conf.get(coalesceKey, "true")
-    spark.conf.set(coalesceKey, "false")
-    try {
-      val rows = (1L to 300L).map(id => (id, 0, 42L)) // one bucket, 19 chunks
-      val chunked = SimilarityQueries.chunkedBuckets(banded(rows), chunkSize = 16)
-      val cross = SimilarityQueries.crossChunkRows(chunked)
-      val taskSpread = cross
-        .select(spark_partition_id().as("pid")).distinct().count()
-      assert(taskSpread > 1,
-        s"cross-chunk rows of one bucket landed in $taskSpread task(s)")
-      // and the physical plan carries the full-key exchange, so the spread
-      // is the planner's doing, not an accident of input layout. Match the
-      // chunk columns INSIDE the partitioning clause — a bare
-      // plan.contains("ca") is vacuously true ("Scan", "cast", ...).
-      val plan = cross.queryExecution.executedPlan.toString
-      assert("""hashpartitioning\(band[^)]*ca[^)]*cb""".r
-          .findFirstIn(plan).isDefined,
-        s"exchange must hash on the full (band, bkey, ca, cb) chunk key:\n" +
-          plan.take(1500))
-    } finally spark.conf.set(coalesceKey, prev)
-  }
-
-  test("one bucket's JOIN OUTPUT is produced by >1 task (no serial writer)") {
-    // r10's residual: with the cross-chunk self-join keyed on bare
-    // (band, bkey), the one task owning a degenerate bucket's key produced
-    // — and shuffle-wrote — the entire (ca, cb) grid (~4 GB at k=10⁶)
-    // before the downstream repartition spread the compute. The join now
-    // keys on (band, bkey, ca) via map-side replication of the b side, so
-    // the grid rows of ONE bucket must come out of multiple join tasks.
-    // spark_partition_id() on crossChunkJoined (BEFORE the repartition)
-    // reads the join's own output partitioning.
-    val coalesceKey = "spark.sql.adaptive.coalescePartitions.enabled"
-    val prev = spark.conf.get(coalesceKey, "true")
-    spark.conf.set(coalesceKey, "false")
-    try {
-      val rows = (1L to 300L).map(id => (id, 0, 42L)) // one bucket, 19 chunks
-      val chunked = SimilarityQueries.chunkedBuckets(banded(rows), chunkSize = 16)
-      val joined = SimilarityQueries.crossChunkJoined(chunked)
-      val writers = joined
-        .select(spark_partition_id().as("pid")).distinct().count()
-      assert(writers > 1,
-        s"one bucket's chunk-pair grid was produced by $writers task(s) — " +
-          "the serial shuffle write is back")
-      // grid completeness: every unordered (ca, cb) chunk pair exactly once
-      val grid = joined.select("ca", "cb").as[(Long, Long)].collect()
-      val nchunks = chunked.agg(max("nchunks")).as[Int].head()
-      assert(grid.forall { case (a, b) => a < b }, "diagonal or flipped pair")
-      assert(grid.toSet.size === grid.length, "duplicate chunk pair")
-      assert(grid.length === nchunks * (nchunks - 1) / 2,
-        s"expected c($nchunks,2) chunk pairs, got ${grid.length}")
-    } finally spark.conf.set(coalesceKey, prev)
+    // every (band, key) bucket holds one member
+    assert(pairs(Seq((1L, Seq(1L, 4L)), (2L, Seq(2L, 5L)), (3L, Seq(3L, 6L))))
+      .count() === 0)
+    // no members at all
+    val empty = Seq.empty[(Long, Seq[Long])].toDF("vec_id", "v")
+    assert(SimilarityQueries
+      .bandedPairs(empty, 2, keyBits = 16)((v, b) => v.getItem(b)).count() === 0)
   }
 }

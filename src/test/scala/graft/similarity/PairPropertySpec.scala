@@ -5,18 +5,19 @@ import org.apache.spark.sql.functions._
 import org.scalacheck.{Gen, Prop, Test => SCTest}
 import org.scalacheck.Prop.propBoolean
 
-/** Randomized (ScalaCheck) equivalence of the two distributed pair
-  * generators against brute force — the r10 verdict's #5: HotClusterSpec
-  * and DegenerateBucketSpec pin FIXED geometries (120/200 clusters,
+/** Randomized (ScalaCheck) equivalence of the distributed pair generator
+  * against brute force — the r10 verdict's #5: HotClusterSpec and
+  * DegenerateBucketSpec pin FIXED geometries (120/200 clusters,
   * 300-member buckets), but the off-diagonal orientation logic in
   * `semPairs` (a/b roles fixed by chunk, not id; dedup only on the
-  * diagonal) and the chunk salting in `bucketPairs` are exactly the kind
-  * of code a random probe breaks first. Sizes are capped (N ≤ ~400 rows
+  * diagonal) and the emit-once band predicate in `bandedPairs` are
+  * exactly the kind of code a random probe breaks first. Sizes are capped (N ≤ ~400 rows
   * per trial) so the suite stays in the default run — no Slow tag.
   *
   * Properties checked per random (geometry, chunkSize):
   *   - pair SET equality with brute force (nothing lost, nothing
-  *     invented, no duplicates);
+  *     invented, no duplicates — for bandedPairs, no pair emitted from
+  *     more than one band);
   *   - ordering invariant id_a < id_b;
   *   - for semPairs, VECTOR integrity: va/vb belong to id_a/id_b even
   *     when the grid's chunk roles flip the join orientation.
@@ -74,45 +75,41 @@ class PairPropertySpec extends SparkSpec {
     })
   }
 
-  // --- bucketPairs ---------------------------------------------------------
+  // --- bandedPairs (emit-once) ---------------------------------------------
 
-  // membership list skewed so bucket 0 runs hot (degenerate-bucket shape);
-  // each id joins 1..3 distinct buckets; bucket b maps to
-  // (band = b % 3, bkey = b / 3) so bands and keys both vary
-  private val lshGeometry: Gen[(Map[Long, List[Int]], Int)] = for {
+  // the LSH shape: every id holds exactly ONE key per band (a signature
+  // slice can't put an id into two buckets of one band); keys skew toward
+  // 0 so one bucket per band runs hot, and ids that share a key in several
+  // bands exercise the emit-once dedup
+  private val lshGeometry: Gen[(Seq[(Long, List[Long])], Int, Int)] = for {
     nIds <- Gen.choose(0, 120)
-    picks <- Gen.listOfN(nIds, Gen.listOfN(3, Gen.frequency(
-      4 -> Gen.const(0),
-      2 -> Gen.choose(1, 3),
-      1 -> Gen.choose(4, 8))))
-    nPer <- Gen.listOfN(nIds, Gen.choose(1, 3))
+    numBands <- Gen.choose(1, 4)
+    keys <- Gen.listOfN(nIds, Gen.listOfN(numBands, Gen.frequency(
+      4 -> Gen.const(0L),
+      2 -> Gen.choose(1L, 3L),
+      1 -> Gen.choose(4L, 40L))))
     chunkSize <- Gen.choose(2, 8)
-  } yield (
-    picks.zip(nPer).zipWithIndex.map { case ((bs, n), i) =>
-      (i + 1).toLong -> bs.take(n).distinct
-    }.toMap,
-    chunkSize)
+  } yield (keys.zipWithIndex.map { case (ks, i) => ((i + 1).toLong, ks) },
+    numBands, chunkSize)
 
-  test("bucketPairs equals brute force on random skewed memberships") {
-    check("bucketPairs", Prop.forAll(lshGeometry) { case (membership, chunkSize) =>
-      val rows = membership.toSeq.flatMap { case (id, buckets) =>
-        buckets.map(b => (id, b % 3, (b / 3).toLong))
-      }
-      val got =
-        if (rows.isEmpty) Set.empty[(Long, Long)]
-        else SimilarityQueries
-          .bucketPairs(rows.toDF("id", "band", "bkey"), chunkSize = chunkSize)
-          .as[(Long, Long)].collect().toSet
-      val byBucket = rows.groupBy(r => (r._2, r._3)).values
-      val expected = byBucket.flatMap { members =>
-        val ids = members.map(_._1).distinct.sorted
-        for { a <- ids; b <- ids if a < b } yield (a, b)
-      }.toSet
-      (got == expected) :| {
-        val missing = expected -- got
-        val extra = got -- expected
-        s"pair set mismatch: missing=${missing.take(5)} extra=${extra.take(5)}"
-      } && got.forall { case (a, b) => a < b } :| "id order"
+  test("bandedPairs emit-once equals brute-force DISTINCT") {
+    check("bandedPairs", Prop.forAll(lshGeometry) {
+        case (members, numBands, chunkSize) =>
+      val got = SimilarityQueries
+        .bandedPairs(members.toDF("vec_id", "v"), numBands, keyBits = 8,
+          chunkSize = chunkSize)((v, b) => v.getItem(b))
+        .select("id_a", "id_b").as[(Long, Long)].collect().toSeq
+      // brute force: SELECT DISTINCT over every band's bucket self-join
+      val expected = (for {
+        (a, ka) <- members; (b, kb) <- members
+        if a < b && ka.zip(kb).exists { case (x, y) => x == y }
+      } yield (a, b)).toSet
+      (got.size == got.toSet.size) :| "pair emitted from more than one band" &&
+        (got.toSet == expected) :| {
+          val missing = expected -- got
+          val extra = got.toSet -- expected
+          s"pair set mismatch: missing=${missing.take(5)} extra=${extra.take(5)}"
+        } && got.forall { case (a, b) => a < b } :| "id order"
     })
   }
 }
