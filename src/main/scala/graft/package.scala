@@ -26,6 +26,11 @@ package object graft {
     * per exchange per round (~40-150 ms locally; a scheduling round-trip
     * on a cluster). Never wrap a data-scale query in this: the returned
     * DataFrames of query paths execute OUTSIDE the scope, under AQE.
+    *
+    * The settings are session-global, not scoped to `body`: while a fit is
+    * inside this scope, the session must run no other query (from another
+    * thread or otherwise), or that query plans with AQE off and
+    * `reducePartitions` shuffle partitions.
     */
   def withAqeOff[T](s: SparkSession, reducePartitions: Int = 1)(body: => T): T = {
     val keys = Seq("spark.sql.adaptive.enabled", "spark.sql.shuffle.partitions")

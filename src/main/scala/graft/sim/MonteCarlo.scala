@@ -56,7 +56,7 @@ object MonteCarlo {
     * log growth over max drawdown (`monte_carlo.py:530-612` ratio family).
     */
   private def runOne(id: Long, cfg: SimConfig): SimResult = {
-    val rng = new java.util.Random(cfg.seed * 1000003L + id)
+    val rng = new Lcg48(cfg.seed * 1000003L + id)
     var bankroll = cfg.startingBankroll
     var peak = bankroll
     var maxDD = 0.0
@@ -104,6 +104,19 @@ object MonteCarlo {
     SimResult(id, bankroll, maxDD, peak, ruined, bets, sharpe, sortino, calmar)
   }
 
+  /** `java.util.Random`'s 48-bit LCG, bit for bit, with the seed in a plain
+    * field: each `Random.next` is an `AtomicLong` compare-and-set, which a
+    * single-threaded equity curve of 500 draws per iteration does not need.
+    */
+  private[sim] final class Lcg48(seed: Long) {
+    private var s = (seed ^ 0x5DEECE66DL) & 0xFFFFFFFFFFFFL
+    private def next(bits: Int): Int = {
+      s = (s * 0x5DEECE66DL + 0xBL) & 0xFFFFFFFFFFFFL
+      (s >>> (48 - bits)).toInt
+    }
+    def nextDouble(): Double = ((next(26).toLong << 27) + next(27)) * (1.0 / (1L << 53))
+  }
+
   def simulate(spark: SparkSession, cfg: SimConfig): DataFrame = {
     import spark.implicits._
     spark.range(cfg.iterations.toLong)
@@ -114,21 +127,33 @@ object MonteCarlo {
   /** Risk report (A17, `monte_carlo.py:530-612`): distribution of final
     * bankrolls, risk of ruin, P(profit), P(2x), VaR/CVaR, drawdown envelope.
     * CVaR95 = mean of the worst 5% of outcomes (avg where <= VaR95).
+    *
+    * The simulation runs once: `results` is checkpointed lazily, the eager
+    * quantile job materializes it, and the returned report reads it. All
+    * three exact quantiles come from that one job, so the report itself is
+    * declarative aggregates over literals (codegen'd `HashAggregate`).
+    * Over an empty input every statistic is null and `n_iterations` is 0.
     */
   def riskReport(results: DataFrame): DataFrame = {
-    val var95 = results.agg(expr("percentile(finalBankroll, 0.05)")).head().getDouble(0)
-    results.agg(
+    val sims = results.localCheckpoint(eager = false)
+    val q = sims.agg(
+      expr("percentile(finalBankroll, array(0.05, 0.5))"),
+      expr("percentile(maxDrawdown, 0.95)")).head()
+    val Seq(var95, median, p95dd) =
+      if (q.isNullAt(0)) Seq.fill(3)(lit(null).cast("double"))
+      else (q.getSeq[Double](0) :+ q.getDouble(1)).map(lit)
+    sims.agg(
       count(lit(1)).as("n_iterations"),
       avg("finalBankroll").as("mean_final"),
-      expr("percentile(finalBankroll, 0.5)").as("median_final"),
+      median.as("median_final"),
       stddev(col("finalBankroll")).as("std_final"),
       avg(col("ruined").cast("double")).as("risk_of_ruin"),
       avg((col("finalBankroll") > 1.0).cast("double")).as("p_profit"),
       avg((col("finalBankroll") > 2.0).cast("double")).as("p_double"),
-      lit(var95).as("var_95"),
+      var95.as("var_95"),
       avg(when(col("finalBankroll") <= var95, col("finalBankroll"))).as("cvar_95"),
       avg("maxDrawdown").as("mean_max_drawdown"),
-      expr("percentile(maxDrawdown, 0.95)").as("p95_max_drawdown"),
+      p95dd.as("p95_max_drawdown"),
       avg("sharpe").as("mean_sharpe"),
       avg("sortino").as("mean_sortino"),
       avg("calmar").as("mean_calmar"))
