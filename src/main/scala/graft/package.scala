@@ -19,20 +19,21 @@ package object graft {
 
   /** Run `body` with adaptive query execution disabled on `s`, restoring
     * the previous setting after. For SIZE-BOUNDED internal actions only —
-    * the Lloyd/PQ fit collects, whose shuffles carry <= K·d slim partial
-    * rows (KB-scale at ANY corpus size by construction, so AQE's
-    * coalescing/skew/join rewrites have nothing to improve) while each
-    * AQE stage materialization costs one extra sequential driver barrier
-    * per exchange per round (~40-150 ms locally; a scheduling round-trip
-    * on a cluster). Never wrap a data-scale query in this: the returned
-    * DataFrames of query paths execute OUTSIDE the scope, under AQE.
+    * the collects of `similarity.Lloyd.fit`, its one caller, whose
+    * shuffles carry <= K·d slim partial rows (KB-scale at ANY corpus size
+    * by construction, so AQE's coalescing/skew/join rewrites have nothing
+    * to improve) while each AQE stage materialization costs one extra
+    * sequential driver barrier per exchange per round (~40-150 ms locally;
+    * a scheduling round-trip on a cluster). Never wrap a data-scale query
+    * in this: the returned DataFrames of query paths execute OUTSIDE the
+    * scope, under AQE.
     *
     * The settings are session-global, not scoped to `body`: while a fit is
     * inside this scope, the session must run no other query (from another
     * thread or otherwise), or that query plans with AQE off and
     * `reducePartitions` shuffle partitions.
     */
-  def withAqeOff[T](s: SparkSession, reducePartitions: Int = 1)(body: => T): T = {
+  def withAqeOff[T](s: SparkSession, reducePartitions: Int)(body: => T): T = {
     val keys = Seq("spark.sql.adaptive.enabled", "spark.sql.shuffle.partitions")
     val prev = keys.map(k => k -> s.conf.getOption(k))
     // without AQE the fit exchanges would run at the session's static

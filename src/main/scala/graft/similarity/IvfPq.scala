@@ -1,7 +1,7 @@
 package graft.similarity
 
 import graft.{Q, Tables}
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -42,177 +42,42 @@ object IvfPq {
   private val TopK = ProductQuantization.PqTopK
   private val NQ = ProductQuantization.PqNQueries
 
-  private def l2sq6(s: SparkSession, a: String, b: String): Column =
-    round(graft.functions.L2Distance.l2_sq(s, a, b), 6)
-
   private def emb(s: SparkSession, d: String): DataFrame =
     Tables.embeddings(s, d)
       .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
 
-  /** Coarse quantizer: (cents (cid, cv), assigned (vec_id, cid, v)) —
-    * q69's Lloyd shape with a fixed-K codebook.
-    *
-    * r17 (job-floor cut + the r15 argmin lesson): the K-row codebook is
-    * DRIVER-LOCAL between rounds (it round-tripped the driver inside
-    * every broadcast build regardless), so a Lloyd round is ONE action —
-    * the update mean collect — and broadcasts cost no job (LocalRelation
-    * collects driver-side). Assignment moves from join + groupBy
-    * min(struct(dist2, cid, v)) — the Sort + SortAggregate
-    * vector-payload trap r15 measured on q69 — to the native per-row
-    * `argmin_l2` over the flattened codebook: same (dist2, cid)
-    * selection by its pinned contract, vectors never leave their scan
-    * partition. Measured r17 start: q38 ran 29 sequential jobs for
-    * 1.9 CPU-s (OPTIMIZATION_r17.md) — the wall was the job chain.
-    */
-  private type Cents = Array[(Int, Array[Double])]
-  private def centsRowDf(s: SparkSession, cents: Cents): DataFrame = {
-    import org.apache.spark.sql.types._
-    s.createDataFrame(
-      java.util.Collections.singletonList(org.apache.spark.sql.Row(
-        cents.map(_._1).toSeq, cents.flatMap(_._2).toSeq)),
-      StructType(Seq(
-        StructField("cids", ArrayType(IntegerType, containsNull = false)),
-        StructField("cvs_flat", ArrayType(DoubleType, containsNull = false)))))
-  }
-  private def centsDfOf(s: SparkSession, cents: Cents): DataFrame = {
-    import org.apache.spark.sql.types._
-    import scala.jdk.CollectionConverters._
-    s.createDataFrame(
-      cents.map(c => org.apache.spark.sql.Row(c._1, c._2.toSeq)).toSeq.asJava,
-      StructType(Seq(
-        StructField("cid", IntegerType, nullable = false),
-        StructField("cv", ArrayType(DoubleType, containsNull = false)))))
-  }
-  private def coarseFit(s: SparkSession, d: String): (Cents, DataFrame) = {
-    val e = emb(s, d)
-    def assign(cents: Cents): DataFrame =
-      e.crossJoin(broadcast(centsRowDf(s, cents)))
-        .select(col("vec_id"),
-          graft.functions.ArgminL2.argmin_l2(s, "v", "cids", "cvs_flat")
-            .getField("cid").as("cid"),
-          col("v"))
-    def update(assigned: DataFrame): Cents = {
-      val rows = assigned
-        .select(col("cid"), posexplode(col("v")).as(Seq("dim", "x")))
-        .groupBy("cid", "dim")
-        .agg((sum(round(col("x"), 12).cast("decimal(28,12)")).cast("double")
-          / count(lit(1))).as("m"))
-        .collect()
-      rows.groupBy(_.getInt(0)).toArray.sortBy(_._1).map { case (cid, rs) =>
-        (cid, rs.sortBy(_.getInt(1)).map(_.getDouble(2)))
-      }
-    }
-    // AQE off for the fit-internal actions (r18, see graft.withAqeOff):
-    // init collect + per-round update shuffles are <= K·d slim rows at
-    // any scale; the final assignment executes outside, under AQE.
-    val cents: Cents = graft.withAqeOff(s) {
-      var c: Cents = e.filter(col("vec_id") < IvfK)
-        .select(col("vec_id").cast("int").as("cid"), col("v"))
-        .collect()
-        .map(r => (r.getInt(0), r.getSeq[Double](1).toArray))
-        .sortBy(_._1)
-      for (_ <- 1 to IvfIters) c = update(assign(c))
-      c
-    }
-    // no checkpoint on the final assignment: its single consumer is the
-    // residual split, which IS checkpointed (lazily) in fit below
-    (cents, assign(cents))
-  }
-
   /** Residual subvectors (vec_id, ccid, sub, sv): one row per (vector,
     * subspace), sv = the subspace slice of v − coarse centroid.
     */
-  private def residualSubs(s: SparkSession, coarse: (Cents, DataFrame)): DataFrame = {
-    val (centsLocal, assigned) = coarse
-    val cents = centsDfOf(s, centsLocal)
-    assigned.join(broadcast(cents), Seq("cid"))
+  private def residualSubs(s: SparkSession, assigned: DataFrame,
+      coarse: Lloyd.Codebook): DataFrame =
+    assigned.join(broadcast(Lloyd.codebookDf(s, coarse, None)), Seq("cid"))
       .select(col("vec_id"), col("cid").as("ccid"),
         zip_with(col("v"), col("cv"), (a, b) => a - b).as("r"))
       .select(col("vec_id"), col("ccid"),
         explode(sequence(lit(0), lit(M - 1))).as("sub"),
         expr(s"slice(r, sub * (size(r) div $M) + 1," +
           s" size(r) div $M)").as("sv"))
-  }
 
-  /** PQ codebooks over residuals (sub, cid, cv) + codes (vec_id, ccid,
-    * sub, cid).
+  /** The coarse codebook (cid, cv), the residual-PQ codebooks
+    * (sub, cid, cv), and the codes (vec_id, ccid, sub, cid): two [[Lloyd]]
+    * fits, the second grouped by `sub` over the residual split.
     */
-  private[similarity] type SubCents = Array[(Int, Int, Array[Double])]
   private[similarity] def fitLocal(s: SparkSession, d: String)
-      : (Cents, SubCents, DataFrame) = {
-    val coarse = coarseFit(s, d)
+      : (Lloyd.Codebook, Lloyd.Codebook, DataFrame) = {
+    val e = emb(s, d)
+    val coarse = Lloyd.fit(s, e, "v", None, IvfK, IvfIters)
     // rsub is read by the PQ init collect, every Lloyd round, and the
     // final code assignment — checkpoint the residual split once (N*M
     // slim rows; at cluster scale this is the transient build-side of
     // the index, partitioned by list like the codes it produces). LAZY:
     // the first consumer (the PQ init collect) materializes it inside
     // its own job instead of paying a dedicated eager pass.
-    val rsub = residualSubs(s, coarse).localCheckpoint(eager = false)
-    // PQ stage over residuals: driver-local codebook, argmin_l2
-    // assignment — the same r17 restructure as the coarse stage (and as
-    // ProductQuantization.fitLocal), one action per Lloyd round
-    def subCentsDf(cents: SubCents): DataFrame = {
-      import org.apache.spark.sql.types._
-      import scala.jdk.CollectionConverters._
-      val rows = cents.groupBy(_._1).toSeq.sortBy(_._1).map { case (sub, cs) =>
-        val sorted = cs.sortBy(_._2)
-        org.apache.spark.sql.Row(sub,
-          sorted.map(_._2).toSeq, sorted.flatMap(_._3).toSeq)
-      }
-      s.createDataFrame(rows.asJava, StructType(Seq(
-        StructField("sub", IntegerType, nullable = false),
-        StructField("cids", ArrayType(IntegerType, containsNull = false)),
-        StructField("cvs_flat", ArrayType(DoubleType, containsNull = false)))))
-    }
-    def assign(cents: SubCents): DataFrame =
-      rsub.join(broadcast(subCentsDf(cents)), Seq("sub"))
-        .select(col("vec_id"), col("ccid"), col("sub"),
-          graft.functions.ArgminL2.argmin_l2(s, "sv", "cids", "cvs_flat")
-            .getField("cid").as("cid"),
-          col("sv"))
-    def update(assigned: DataFrame): SubCents = {
-      val rows = assigned
-        .select(col("sub"), col("cid"), posexplode(col("sv")).as(Seq("dim", "x")))
-        .groupBy("sub", "cid", "dim")
-        .agg((sum(round(col("x"), 12).cast("decimal(28,12)")).cast("double")
-          / count(lit(1))).as("m"))
-        .collect()
-      rows.groupBy(r => (r.getInt(0), r.getInt(1))).toArray
-        .sortBy(_._1).map { case ((sub, cid), rs) =>
-          (sub, cid, rs.sortBy(_.getInt(2)).map(_.getDouble(3)))
-        }
-    }
-    // AQE off for the PQ-fit actions (r18, see graft.withAqeOff): the
-    // init collect (also the job that materializes the rsub checkpoint —
-    // a narrow, exchange-free pipeline AQE cannot improve) and the
-    // per-round update shuffles (<= M·K·d slim rows at any scale).
-    val cents: SubCents = graft.withAqeOff(s) {
-      var c: SubCents = rsub.filter(col("vec_id") < PqK)
-        .select(col("sub"), col("vec_id").cast("int").as("cid"), col("sv"))
-        .collect()
-        .map(r => (r.getInt(0), r.getInt(1), r.getSeq[Double](2).toArray))
-        .sortBy(c0 => (c0._1, c0._2))
-      for (_ <- 1 to PqIters) c = update(assign(c))
-      c
-    }
-    (coarse._1, cents,
-      assign(cents).select(col("vec_id"), col("ccid"), col("sub"), col("cid")))
-  }
-  /** Relational view of [[fitLocal]] — the pre-r17 signature, kept for
-    * callers that consume the codebooks as DataFrames (IvfPqSpec).
-    */
-  private[similarity] def fit(s: SparkSession, d: String)
-      : (DataFrame, DataFrame, DataFrame) = {
-    val (ccents, pcents, codes) = fitLocal(s, d)
-    import scala.jdk.CollectionConverters._
-    import org.apache.spark.sql.types._
-    val pcentsDf = s.createDataFrame(
-      pcents.map(c => org.apache.spark.sql.Row(c._1, c._2, c._3.toSeq)).toSeq.asJava,
-      StructType(Seq(
-        StructField("sub", IntegerType, nullable = false),
-        StructField("cid", IntegerType, nullable = false),
-        StructField("cv", ArrayType(DoubleType, containsNull = false)))))
-    (centsDfOf(s, ccents), pcentsDf, codes)
+    val rsub = residualSubs(s, Lloyd.assign(s, e, "v", None, coarse), coarse)
+      .localCheckpoint(eager = false)
+    val pq = Lloyd.fit(s, rsub, "sv", Some("sub"), PqK, PqIters)
+    (coarse, pq, Lloyd.assign(s, rsub, "sv", Some("sub"), pq)
+      .select(col("vec_id"), col("ccid"), col("sub"), col("cid")))
   }
 
   // ---------------------------------------------------------------------------
@@ -248,18 +113,18 @@ object IvfPq {
       .collect()
       .map(r => (r.getLong(0), r.getSeq[Double](1).toArray))
       .sortBy(_._1)
-    val pBySub = pcents.groupBy(_._1)
+    val pBySub = pcents.groupBy(_.group)
     val dtRows = for {
       (qid, v) <- qrows.toSeq
       (ccid, cv) <- ccents
-        .map { case (cid, cvv) => (l2sq6Local(v, cvv), cid, cvv) }
+        .map(c => (l2sq6Local(v, c.cv), c.cid, c.cv))
         .sortBy(t => (t._1, t._2)).take(NProbe)
         .map(t => (t._2, t._3)).toSeq
       r = Array.tabulate(v.length)(i => v(i) - cv(i))
       sub <- 0 until M
       sv = { val sl = r.length / M; r.slice(sub * sl, sub * sl + sl) }
-      (_, pcid, pcv) <- pBySub.getOrElse(sub, Array.empty[(Int, Int, Array[Double])]).toSeq
-    } yield org.apache.spark.sql.Row(qid, ccid, sub, pcid, l2sq6Local(sv, pcv))
+      p <- pBySub.getOrElse(sub, Array.empty[Lloyd.Centroid]).toSeq
+    } yield org.apache.spark.sql.Row(qid, ccid, sub, p.cid, l2sq6Local(sv, p.cv))
     val dt = {
       import org.apache.spark.sql.types._
       import scala.jdk.CollectionConverters._

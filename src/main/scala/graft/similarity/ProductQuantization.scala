@@ -50,7 +50,7 @@ object ProductQuantization {
     * sublen derived in-row from the array length so Spark and the
     * generated SQL cannot disagree on the split.
     */
-  private def subVectors(s: SparkSession, d: String): DataFrame =
+  private[similarity] def subVectors(s: SparkSession, d: String): DataFrame =
     Tables.embeddings(s, d)
       .select(col("vec_id"),
         col("embedding").cast("array<double>").as("v"))
@@ -60,90 +60,15 @@ object ProductQuantization {
           s" size(v) div $PqSubspaces)").as("sv"))
 
   /** Codebooks (sub, cid, cv) after PqIters Lloyd rounds, plus the fitted
-    * codes (vec_id, sub, cid). One relation keyed by `sub` trains all M
-    * codebooks in the same jobs — no per-subspace plan duplication.
-    *
-    * r17 (job-floor cut + the r15 argmin lesson applied to the PQ fit):
-    * the ≤M·K-row codebook lives DRIVER-LOCAL between rounds — it always
-    * round-tripped the driver inside each broadcast build anyway — so a
-    * Lloyd round is exactly ONE action (the update mean collect), with
-    * broadcasts of the codebook costing no job (LocalRelation collects
-    * driver-side). The assignment itself moves from
-    * `join(broadcast(cents)) + groupBy(vec_id, sub).agg(min(struct(...)))`
-    * — a struct-with-array buffer that plans as Sort + SortAggregate over
-    * N·K subvector-payload rows, the exact q69 199-s scale trap r15
-    * documented — to the native per-row `argmin_l2` over a per-sub
-    * flattened codebook: candidates are scanned inside the row, the sv
-    * payload never enters an aggregate, and the pass is exchange-free.
-    * Selection is identical by construction: min(struct(dist2, cid, sv))
-    * ranks by (dist2, cid) — every joined copy carries the same sv — and
-    * argmin_l2 computes the same in-order 6dp-rounded distance with the
-    * same cid tie-break (its contract, pinned by ArgminL2Spec).
+    * codes (vec_id, sub, cid). One [[Lloyd]] fit grouped by `sub` trains
+    * all M codebooks in the same jobs — no per-subspace plan duplication.
     */
-  private[similarity] type SubCents = Array[(Int, Int, Array[Double])] // (sub, cid, cv)
-  private def subCentsDf(s: SparkSession, cents: SubCents): DataFrame = {
-    import org.apache.spark.sql.types._
-    import scala.jdk.CollectionConverters._
-    // one row per SUBSPACE: (sub, cids, cvs_flat) — the argmin_l2 layout
-    val rows = cents.groupBy(_._1).toSeq.sortBy(_._1).map { case (sub, cs) =>
-      val sorted = cs.sortBy(_._2)
-      org.apache.spark.sql.Row(sub,
-        sorted.map(_._2).toSeq, sorted.flatMap(_._3).toSeq)
-    }
-    s.createDataFrame(rows.asJava, StructType(Seq(
-      StructField("sub", IntegerType, nullable = false),
-      StructField("cids", ArrayType(IntegerType, containsNull = false)),
-      StructField("cvs_flat", ArrayType(DoubleType, containsNull = false)))))
-  }
   private[similarity] def fitLocal(s: SparkSession, d: String)
-      : (SubCents, DataFrame) = {
+      : (Lloyd.Codebook, DataFrame) = {
     val subv = subVectors(s, d)
-    def assign(cents: SubCents): DataFrame =
-      subv.join(broadcast(subCentsDf(s, cents)), Seq("sub"))
-        .select(col("vec_id"), col("sub"),
-          graft.functions.ArgminL2.argmin_l2(s, "sv", "cids", "cvs_flat")
-            .getField("cid").as("cid"),
-          col("sv"))
-    def update(assigned: DataFrame): SubCents = {
-      val rows = assigned
-        .select(col("sub"), col("cid"), posexplode(col("sv")).as(Seq("dim", "x")))
-        .groupBy("sub", "cid", "dim")
-        .agg((sum(round(col("x"), 12).cast("decimal(28,12)")).cast("double")
-          / count(lit(1))).as("m"))
-        .collect()
-      rows.groupBy(r => (r.getInt(0), r.getInt(1))).toArray
-        .sortBy(_._1).map { case ((sub, cid), rs) =>
-          (sub, cid, rs.sortBy(_.getInt(2)).map(_.getDouble(3)))
-        }
-    }
-    // AQE off for the fit-internal actions (r18, see graft.withAqeOff):
-    // init collect + per-round update shuffles are <= M·K·d slim rows at
-    // any scale; the final assignment executes outside, under AQE.
-    val cents: SubCents = graft.withAqeOff(s) {
-      var c: SubCents = subv.filter(col("vec_id") < PqK)
-        .select(col("sub"), col("vec_id").cast("int").as("cid"), col("sv"))
-        .collect()
-        .map(r => (r.getInt(0), r.getInt(1), r.getSeq[Double](2).toArray))
-        .sortBy(c0 => (c0._1, c0._2))
-      for (_ <- 1 to PqIters) c = update(assign(c))
-      c
-    }
-    (cents, assign(cents).select(col("vec_id"), col("sub"), col("cid")))
-  }
-  /** Relational view of the fitted codebooks + codes — the pre-r17
-    * signature, kept for callers that consume cents as a DataFrame.
-    */
-  private[similarity] def fit(s: SparkSession, d: String): (DataFrame, DataFrame) = {
-    val (cents, codes) = fitLocal(s, d)
-    import scala.jdk.CollectionConverters._
-    import org.apache.spark.sql.types._
-    val centsDf = s.createDataFrame(
-      cents.map(c => org.apache.spark.sql.Row(c._1, c._2, c._3.toSeq)).toSeq.asJava,
-      StructType(Seq(
-        StructField("sub", IntegerType, nullable = false),
-        StructField("cid", IntegerType, nullable = false),
-        StructField("cv", ArrayType(DoubleType, containsNull = false)))))
-    (centsDf, codes)
+    val cents = Lloyd.fit(s, subv, "sv", Some("sub"), PqK, PqIters)
+    (cents, Lloyd.assign(s, subv, "sv", Some("sub"), cents)
+      .select(col("vec_id"), col("sub"), col("cid")))
   }
 
   // ---------------------------------------------------------------------------
@@ -153,16 +78,8 @@ object ProductQuantization {
   // (adc, nid) ranking is identical in both engines.
   val q90PqAnn: Q = (s, d) => {
     val (centsLocal, codes) = fitLocal(s, d)
-    import scala.jdk.CollectionConverters._
-    import org.apache.spark.sql.types._
     // LocalRelation: broadcasting it costs no job (driver-side collect)
-    val cents = s.createDataFrame(
-      centsLocal.map(c => org.apache.spark.sql.Row(c._1, c._2, c._3.toSeq))
-        .toSeq.asJava,
-      StructType(Seq(
-        StructField("sub", IntegerType, nullable = false),
-        StructField("cid", IntegerType, nullable = false),
-        StructField("cv", ArrayType(DoubleType, containsNull = false)))))
+    val cents = Lloyd.codebookDf(s, centsLocal, Some("sub"))
     val qsub = subVectors(s, d).filter(col("vec_id") < PqNQueries)
       .select(col("vec_id").as("qid"), col("sub"), col("sv"))
     val dt = qsub.join(broadcast(cents), Seq("sub"))

@@ -599,20 +599,8 @@ object SimilarityQueries {
   // q69 — k-means clustering over embeddings (Lloyd's algorithm, the
   // SemDeDup-style semantic primitive: cluster the corpus's embedding
   // space, then dedup/diversity-sample WITHIN clusters so the quadratic
-  // work never crosses cluster boundaries). Deterministic by construction:
-  // centroids init from the first K vectors (q49's codebook convention),
-  // KmIters unrolled Lloyd updates, then a final assignment — all one
-  // declarative plan, no driver-side collect of centroids.
-  //   - assignment: squared L2 via an in-order higher-order fold, rounded
-  //     6dp BEFORE the argmin (ties break on cid) so both engines pick
-  //     identical cells;
-  //   - update: per-(cluster, dim) mean with the q66 decimal trick — each
-  //     element rounded 12dp and summed as DECIMAL(28,12), so the float
-  //     sum is order-free and the new centroid is the same double in both
-  //     engines no matter the parallelism.
-  // Scale shape: centroids are a K-row relation that BROADCASTS each
-  // round; vectors never shuffle for assignment, and the update is one
-  // map-side-combinable groupBy of (cid, dim, element) rows per round.
+  // work never crosses cluster boundaries): KmIters rounds of the shared
+  // deterministic [[Lloyd]] fit, then a final assignment.
   //
   // K grows ~ sqrt(N) with the corpus (floor KmKMin): with K fixed, 100×
   // the data means 100× the vectors per cluster and q74's within-cluster
@@ -636,188 +624,25 @@ object SimilarityQueries {
   // fix: a corpus of near-identical embeddings puts everything in ONE
   // cluster at any K).
   val KmKMin = 8
-  /** 2^16 by default; `SPARK_GRAFT_KMKMAX` overrides for scaling probes —
-    * the real cap binds at N ≈ 4·10^9 vectors (unreachable locally), so
-    * the capped-K regime (assignment linear in N, clusters growing as
-    * N/K) can only be MEASURED by forcing a small cap on a scaled corpus.
-    * Read once at class init; the generated q69/q74 oracle SQL
-    * interpolates the same value, so Spark and DuckDB derive the same K
-    * under any override (oracle parity is preserved by construction).
-    */
-  val KmKMax: Int =
-    sys.env.get("SPARK_GRAFT_KMKMAX").map(_.toInt).getOrElse(65536)
+  val KmKMax = 65536
   val KmIters = 2
   private[graft] def kmK(n: Long): Int =
     math.min(math.max(KmKMin, math.ceil(math.sqrt(n.toDouble)).toInt), KmKMax)
 
-  /** The fitted Lloyd assignment (vec_id, cid, dist2, v) — shared by q69
+  /** The fitted Lloyd assignment (vec_id, v, cid, dist2) — shared by q69
     * (assignment report) and q74 (semantic dedup within clusters).
-    * `kOverride` is test-only (IvfArgminL2Spec pins K); the query path
-    * always derives k from the corpus via [[kmK]].
     *
-    * `annProbe` (r16, the production k ∝ N assign leg): when set, every
-    * assignment pass — Lloyd iterations AND the final one — searches only
-    * the `annProbe` coarse cells nearest each vector instead of all K
-    * centroids (functions.IvfArgminL2: the q38 IvfPq two-level layout
-    * with the CENTROIDS as the indexed corpus). Per-vector cost drops
-    * from O(K·d) to O(√(K·nprobe)·d) at the balanced coarse count
-    * C = ⌈√(K·nprobe)⌉ — the O(N·K) brute leg measured as the k ∝ N
-    * bottleneck (BENCH_r16_q74k_probe.json) becomes N^1.5 (honest
-    * asymptote; the measured ladder exponent lives in that artifact).
-    * Approximation enters
-    * ONLY through which cells are probed — within the probed union the
-    * argmin contract is bit-identical to argmin_l2 — so a vector can
-    * land in a near-nearest cluster, which Lloyd tolerates by design
-    * (same contract FAISS-based SemDeDup pipelines run in production).
-    * The demo/oracle path (annProbe = None) is untouched; no registered
-    * query sets it, so it is test-only too (IvfArgminL2Spec).
+    * The corpus scan re-runs per Lloyd pass instead of being checkpointed
+    * (r17: a fanOut+checkpoint was measured SLOWER at the bench SF, where
+    * every pass's compute is ~1 ms, and it is also the plan that needs no
+    * corpus persist at 100 TB).
     */
   private[graft] def kmAssigned(s: org.apache.spark.sql.SparkSession,
-      d: String, kOverride: Option[Int] = None,
-      annProbe: Option[Int] = None): DataFrame = {
-    val k = kOverride.getOrElse(kmK(Tables.rowCount(s, d, "embeddings")))
-    // (r17: a fanOut+checkpoint of this relation was measured SLOWER at
-    // the bench SF — 2k vectors make every pass's compute ~1 ms, so 32
-    // post-shuffle tasks cost more than the single-task scan they
-    // replace; the scan re-runs per pass instead, which is also the
-    // plan that needs no corpus persist at 100 TB)
+      d: String): DataFrame = {
+    val k = kmK(Tables.rowCount(s, d, "embeddings"))
     val emb = Tables.embeddings(s, d)
       .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
-    // assignment is ONE exchange-free codegen'd pass (r15): the K
-    // centroids ride a single broadcast row as (cids, flattened K·dims
-    // matrix) and `argmin_l2` picks each vector's (cid, 6dp-rounded dist2)
-    // inside the scan stage. The r14 relational form — broadcast join to
-    // N·K rows, then min(struct(dist2, cid, v)) — planned as Sort +
-    // SortAggregate (a struct-with-array buffer is not UnsafeRow-mutable)
-    // and pushed ~49 GB of vector-payload rows through per-partition
-    // sorts at the 100× board (199 s, wall exponent 1.32). Vectors now
-    // never leave their scan partition at any corpus size; the broadcast
-    // is K·dims·8 B ≤ 32 MB at the KmKMax cap.
-    // r17 (job-floor cut, guide §1.2/§2.4): the ≤K-row centroid table
-    // lives DRIVER-LOCAL between rounds. It always round-tripped the
-    // driver anyway — the broadcast that carries it into the scan is
-    // built by collecting the relation — so holding it as local arrays
-    // moves no new bytes; what it removes per Lloyd round is the eager
-    // checkpoint job, the broadcast-BUILD job (broadcasting a
-    // LocalRelation collects via LocalTableScan.executeCollect, no tasks)
-    // and the second assembly exchange of the update. Measured r17 start:
-    // q69 ran 15 sequential jobs for 0.64 CPU-s (OPTIMIZATION_r17.md) —
-    // the wall was the job chain, not the data.
-    type Cents = Array[(Int, Array[Double])]
-    def centsRowDf(cents: Cents): DataFrame = {
-      import org.apache.spark.sql.types._
-      s.createDataFrame(
-        java.util.Collections.singletonList(org.apache.spark.sql.Row(
-          cents.map(_._1).toSeq, cents.flatMap(_._2).toSeq)),
-        StructType(Seq(
-          StructField("cids", ArrayType(IntegerType, containsNull = false)),
-          StructField("cvs_flat", ArrayType(DoubleType, containsNull = false)))))
-    }
-    def centsDfOf(cents: Cents): DataFrame = {
-      import org.apache.spark.sql.types._
-      import scala.jdk.CollectionConverters._
-      s.createDataFrame(
-        cents.map(c => org.apache.spark.sql.Row(c._1, c._2.toSeq)).toSeq.asJava,
-        StructType(Seq(
-          StructField("cid", IntegerType, nullable = false),
-          StructField("cv", ArrayType(DoubleType, containsNull = false)))))
-    }
-    def assign(cents: Cents): DataFrame =
-      emb.crossJoin(broadcast(centsRowDf(cents)))
-        .select(col("vec_id"),
-          graft.functions.ArgminL2.argmin_l2(s, "v", "cids", "cvs_flat").as("m"),
-          col("v"))
-        .select(col("vec_id"), col("m.cid").as("cid"),
-          col("m.dist2").as("dist2"), col("v"))
-    // ANN-assisted assignment (annProbe path): group the centroids into
-    // C = ⌈√(K·nprobe)⌉ coarse cells (default coarse centers = the C
-    // smallest-cid centroids — deterministic, no extra fit; recall is
-    // nprobe's job), build the five-array IvfArgminL2 layout in ONE
-    // relational row (the HOF prefix-sum/flatten steps run interpreted
-    // but on a single row), and assign inside the scan stage exactly
-    // like the brute path — same single broadcast row, vectors never
-    // leave their partition.
-    def assignIvf(centsLocal: Cents, nprobe: Int): DataFrame = {
-      // the layout BUILD stays relational (its aggs are over the ≤K-row
-      // LocalRelation — light), but it now sources from the driver-local
-      // table, so no checkpoint scan and no broadcast-build barrier
-      // precedes it
-      val cents = centsDfOf(centsLocal)
-      val cCount = math.min(k,
-        math.max(1, math.ceil(math.sqrt(k.toDouble * nprobe)).toInt))
-      val coarseRow = cents.orderBy("cid").limit(cCount)
-        .agg(array_sort(collect_list(struct(col("cid"), col("cv")))).as("cs"))
-        .select(
-          transform(sequence(lit(0), size(col("cs")) - 1),
-            i => i.cast("int")).as("coarse_pos"),
-          flatten(transform(col("cs"), c => c("cv"))).as("coarse_flat"))
-      val perCent = cents.crossJoin(broadcast(coarseRow))
-        .select(col("cid"), col("cv"),
-          graft.functions.ArgminL2
-            .argmin_l2(s, "cv", "coarse_pos", "coarse_flat")
-            .getField("cid").as("cell"))
-      val layoutRow = perCent
-        .groupBy("cell")
-        .agg(array_sort(collect_list(struct(col("cid"), col("cv")))).as("ms"))
-        .agg(array_sort(collect_list(struct(col("cell"), col("ms")))).as("gs"))
-        .crossJoin(coarseRow.select(col("coarse_flat")))
-        .select(struct(
-          transform(col("gs"), g => g("cell")).as("cells"),
-          aggregate(col("gs"), array(lit(0)),
-            (acc, g) => concat(acc, array(element_at(acc, -1) + size(g("ms")))))
-            .as("starts"),
-          flatten(transform(col("gs"), g => transform(g("ms"), m => m("cid"))))
-            .as("cids"),
-          flatten(transform(col("gs"),
-            g => flatten(transform(g("ms"), m => m("cv"))))).as("cvs_flat"),
-          col("coarse_flat")).as("layout"))
-      emb.crossJoin(broadcast(layoutRow))
-        .select(col("vec_id"),
-          graft.functions.IvfArgminL2
-            .ivf_argmin_l2(col("v"), col("layout"), nprobe).as("m"),
-          col("v"))
-        .select(col("vec_id"), col("m.cid").as("cid"),
-          col("m.dist2").as("dist2"), col("v"))
-    }
-    def assignPass(cents: Cents): DataFrame = annProbe match {
-      case Some(p) => assignIvf(cents, p)
-      case None => assign(cents)
-    }
-    // update: ONE partial-aggregated exchange collected as ≤K·d slim
-    // (cid, dim, m) rows — the same bytes the next round's broadcast
-    // drives through the driver regardless — with the array assembly
-    // (sort by dim) done here instead of a second groupBy exchange.
-    // The per-(cid, dim) mean keeps the exact q66 decimal arithmetic, so
-    // every collected double is bit-identical to the relational form's.
-    // Each round is now exactly one action; lineage never grows because
-    // the next round's plan starts from a LocalRelation (which is what
-    // the old per-round localCheckpoint existed to guarantee).
-    def update(assigned: DataFrame): Cents = {
-      val rows = assigned
-        .select(col("cid"), posexplode(col("v")).as(Seq("dim", "x")))
-        .groupBy("cid", "dim")
-        .agg((sum(round(col("x"), 12).cast("decimal(28,12)")).cast("double")
-          / count(lit(1))).as("m"))
-        .collect()
-      rows.groupBy(_.getInt(0)).toArray.sortBy(_._1).map { case (cid, rs) =>
-        (cid, rs.sortBy(_.getInt(1)).map(_.getDouble(2)))
-      }
-    }
-    // AQE off for the fit-internal actions only (r18): the init collect
-    // and each round's update shuffle are size-bounded (<= K·d slim rows
-    // at any corpus size), so AQE's stage-materialization barrier per
-    // exchange is pure sequential latency here (see graft.withAqeOff).
-    // The RETURNED assignment executes outside the scope, under AQE.
-    val cents: Cents = graft.withAqeOff(s, (k + 1023) / 1024) {
-      var c: Cents = emb.filter(col("vec_id") < k)
-        .select(col("vec_id").cast("int").as("cid"), col("v").as("cv"))
-        .collect()
-        .map(r => (r.getInt(0), r.getSeq[Double](1).toArray))
-        .sortBy(_._1)
-      for (_ <- 1 to KmIters) c = update(assignPass(c))
-      c
-    }
-    assignPass(cents)
+    Lloyd.assign(s, emb, "v", None, Lloyd.fit(s, emb, "v", None, k, KmIters))
   }
 
   val q69Kmeans: Q = (s, d) =>

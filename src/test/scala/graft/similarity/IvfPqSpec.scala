@@ -15,7 +15,9 @@ class IvfPqSpec extends SparkSpec {
   private val d = "/root/testdata/sf0.001"
 
   test("index shape: one list per vector, M codes, bounded ids") {
-    val (ccents, pcents, codes) = IvfPq.fit(spark, d)
+    val (ccb, pcb, codes) = IvfPq.fitLocal(spark, d)
+    val ccents = Lloyd.codebookDf(spark, ccb, None)
+    val pcents = Lloyd.codebookDf(spark, pcb, Some("sub"))
     val m = ProductQuantization.PqSubspaces
     val perVec = codes.groupBy("vec_id")
       .agg(count(lit(1)).as("n"), countDistinct("ccid").as("lists"))
@@ -28,7 +30,8 @@ class IvfPqSpec extends SparkSpec {
   }
 
   test("search honors IVF semantics: neighbors only from probed lists") {
-    val (ccents, _, codes) = IvfPq.fit(spark, d)
+    val (ccb, _, codes) = IvfPq.fitLocal(spark, d)
+    val ccents = Lloyd.codebookDf(spark, ccb, None)
     val lists = codes.select("vec_id", "ccid").distinct().collect()
       .map(r => r.getLong(0) -> r.getInt(1)).toMap
     // recompute each query's probed lists the same way the query does

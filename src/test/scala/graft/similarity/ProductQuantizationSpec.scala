@@ -16,7 +16,8 @@ class ProductQuantizationSpec extends SparkSpec with AdaptiveSparkPlanHelper {
   private val d = "/root/testdata/sf0.001"
 
   test("codes are M-per-vector with cid < K; fit is deterministic") {
-    val (cents, codes) = ProductQuantization.fit(spark, d)
+    val (cb, codes) = ProductQuantization.fitLocal(spark, d)
+    val cents = Lloyd.codebookDf(spark, cb, Some("sub"))
     val m = ProductQuantization.PqSubspaces
     val perVec = codes.groupBy("vec_id").count().collect()
     assert(perVec.nonEmpty)
@@ -25,7 +26,7 @@ class ProductQuantizationSpec extends SparkSpec with AdaptiveSparkPlanHelper {
     assert(cids.forall(c => c >= 0 && c < ProductQuantization.PqK))
     assert(cents.count() <= m.toLong * ProductQuantization.PqK)
     // determinism: a second fit assigns identical codes
-    val again = ProductQuantization.fit(spark, d)._2
+    val again = ProductQuantization.fitLocal(spark, d)._2
     assert(codes.exceptAll(again).count() === 0)
     assert(again.exceptAll(codes).count() === 0)
   }
