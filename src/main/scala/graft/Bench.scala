@@ -8,9 +8,14 @@ import org.apache.spark.sql.SparkSession
   * (executor thread init, parquet footer reads). Each query then runs once
   * untimed before its timed runs: the first execution of a plan pays one-time
   * driver costs that are per-QUERY-SHAPE, not per-execution — Janino
-  * whole-stage-codegen compilation and JIT warm-up — which a long-lived
-  * session amortizes to zero. The timed number is the steady-state execution
-  * cost, the quantity that actually scales with data volume.
+  * whole-stage-codegen compilation and JIT warm-up. A long-lived session
+  * amortizes compilation to zero only while its live class set fits the
+  * JVM-wide codegen cache (`GraftSession`'s 4096 entries; Spark's default
+  * 100 evicts a mixed workload's classes before their next use, and every
+  * pass recompiles). Each timed rep records its own `compiles` and
+  * `compile_ms`, so a rep that still compiles shows in the detail file. The
+  * timed number is the steady-state execution cost, the quantity that
+  * actually scales with data volume.
   *
   * Self-validation (the round-6 lesson: a degraded sandbox produced a bench
   * artifact indistinguishable from a 10-100x code regression):
@@ -32,8 +37,11 @@ import org.apache.spark.sql.SparkSession
   *     executor-task CPU seconds, the noise-immune companion to wall-clock
   *     for growth exponents on a shared host), `jobs`/`stages`/`tasks`
   *     (the driver's scheduling floor), `scan_mb`/`scan_records`,
-  *     `shuf_mb`/`shuf_records` and `spill_mb`. `detail` is written ONLY
-  *     to `BENCH_detail.json`
+  *     `shuf_mb`/`shuf_records`, `spill_mb`, and `compiles`/`compile_ms`
+  *     (the generated classes Janino compiled, whole-stage and
+  *     expression alike, on driver and executor threads, and the time it
+  *     took; `warm_compiles`/`warm_compile_ms` hold the untimed warm-up's).
+  *     `detail` is written ONLY to `BENCH_detail.json`
   *     (override: SPARK_GRAFT_DETAIL_OUT) — never to the stdout contract
   *     line, which must stay small enough for the driver's parser.
   *   - `subtotals` separates the idiomatic board from the hash family
@@ -131,15 +139,21 @@ object Bench {
     */
   final case class Layers(jobs: Long, stages: Long, tasks: Long,
       cpuNs: Long, scanBytes: Long, scanRecords: Long,
-      shufBytes: Long, shufRecords: Long, spillBytes: Long) {
+      shufBytes: Long, shufRecords: Long, spillBytes: Long,
+      compiles: Long, compileNs: Long) {
     def -(o: Layers): Layers = Layers(jobs - o.jobs, stages - o.stages,
       tasks - o.tasks, cpuNs - o.cpuNs, scanBytes - o.scanBytes,
       scanRecords - o.scanRecords, shufBytes - o.shufBytes,
-      shufRecords - o.shufRecords, spillBytes - o.spillBytes)
+      shufRecords - o.shufRecords, spillBytes - o.spillBytes,
+      compiles - o.compiles, compileNs - o.compileNs)
   }
 
+  /** `warm` is the untimed warm-up's layers: where a query shape pays its
+    * codegen compiles in a long-lived session.
+    */
   final case class QResult(name: String, sec: Double, rows: Long,
-      err: Option[String], reps: Seq[Double], layers: Seq[Layers] = Nil) {
+      err: Option[String], reps: Seq[Double], layers: Seq[Layers] = Nil,
+      warm: Option[Layers] = None) {
     def cpuReps: Seq[Double] = layers.map(_.cpuNs / 1e9)
   }
 
@@ -153,10 +167,15 @@ object Bench {
     * `reps` unreadable. Job/stage/task counts show the per-job driver
     * floor that dominates small-SF walls, and scan/shuffle/spill bytes
     * show the plan shape, in every sweep cell instead of a separate run.
+    * Codegen compiles are not listener events: the snapshot reads Spark's
+    * JVM-wide counters (`CodegenMetrics`' compile count, `CodeGenerator`'s
+    * compile nanos), so any session in the JVM adds to them.
     */
   final class CpuTally extends org.apache.spark.scheduler.SparkListener {
     import java.util.concurrent.atomic.AtomicLong
+    import org.apache.spark.metrics.source.CodegenMetrics
     import org.apache.spark.scheduler._
+    import org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
     private val jobs, stages, tasks, cpuNs, scanBytes, scanRecords,
       shufBytes, shufRecords, spillBytes = new AtomicLong(0L)
     override def onJobStart(e: SparkListenerJobStart): Unit = {
@@ -179,7 +198,9 @@ object Bench {
     }
     private def snapshot(): Layers = Layers(jobs.get(), stages.get(),
       tasks.get(), cpuNs.get(), scanBytes.get(), scanRecords.get(),
-      shufBytes.get(), shufRecords.get(), spillBytes.get())
+      shufBytes.get(), shufRecords.get(), spillBytes.get(),
+      CodegenMetrics.METRIC_COMPILATION_TIME.getCount,
+      CodeGenerator.compileTime)
     /** Listener events arrive on a bus AFTER the action returns; the public
       * API has no drain hook, so poll until the totals stop moving. A
       * single 10 ms quiet gap is too easy a bar on a contended host — a
@@ -372,6 +393,7 @@ object Bench {
     // warm run: captures rows and any error; a broken query is never timed.
     // The count plan differs from the noop plan (pruning), so the noop
     // shape gets its own untimed warm-up before the reps.
+    val warmStart = tally.map(_.settled())
     val warm =
       try {
         val rows = fn(spark, sfDir).count()
@@ -388,6 +410,7 @@ object Bench {
         // boards (100× × 89 queries × 3 reps is hours of wall; 2 reps
         // with min-of-reps reading keeps the board inside a round)
         val nReps = sys.env.getOrElse("SPARK_GRAFT_BENCH_REPS", "3").toInt
+        val warmLayers = tally.map(_.settled() - warmStart.get)
         val timed = (1 to nReps).map { _ =>
           val before = tally.map(_.settled())
           val wall = time { materialize(fn(spark, sfDir)) }
@@ -411,7 +434,8 @@ object Bench {
         // 42.1 s minutes apart. The minimum of deterministic reps is the
         // run least contaminated by the hypervisor neighbor — the statistic
         // every other r14 artifact (enginecmp, 100× board) already uses.
-        QResult(name, reps.min, rows, None, reps, timed.flatMap(_._2))
+        QResult(name, reps.min, rows, None, reps, timed.flatMap(_._2),
+          warmLayers)
     }
   }
 
@@ -571,7 +595,12 @@ object Bench {
         ",\"tasks\":" + arr(l.map(_.tasks)) +
         ",\"scan_mb\":" + arr(l.map(x => r3(mb(x.scanBytes)))) +
         ",\"scan_records\":" + arr(l.map(_.scanRecords)) +
-        ",\"shuf_records\":" + arr(l.map(_.shufRecords)) + "}"
+        ",\"shuf_records\":" + arr(l.map(_.shufRecords)) +
+        ",\"compiles\":" + arr(l.map(_.compiles)) +
+        ",\"compile_ms\":" + arr(l.map(x => r2(x.compileNs / 1e6))) +
+        r.warm.map(w => ",\"warm_compiles\":" + w.compiles +
+          ",\"warm_compile_ms\":" + r2(w.compileNs / 1e6)).getOrElse("") +
+        "}"
     }.mkString("{", ",", "}")
     val canary =
       s"""{"cpu_sec":$canCpuBefore,"scan_sec":$canScanBefore,""" +

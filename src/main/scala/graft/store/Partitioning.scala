@@ -1,6 +1,6 @@
 package graft.store
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, SaveMode}
 import org.apache.spark.sql.functions._
 
 /** Physical-layout helpers for 100 TB operation (SURVEY §4 + the builder
@@ -50,14 +50,4 @@ object Partitioning {
       .agg(count(lit(1)).as("__partial"))
       .groupBy(col(key))
       .agg(sum("__partial").as("n"))
-
-  /** AQE skew handling knobs, set once per session: at cluster scale prefer
-    * letting AQE split skewed shuffle partitions over manual salting when
-    * the aggregate allows it.
-    */
-  def enableSkewHandling(spark: SparkSession): Unit = {
-    spark.conf.set("spark.sql.adaptive.enabled", "true")
-    spark.conf.set("spark.sql.adaptive.skewJoin.enabled", "true")
-    spark.conf.set("spark.sql.adaptive.coalescePartitions.enabled", "true")
-  }
 }

@@ -46,11 +46,16 @@ class BenchSpec extends AnyFunSuite {
     val tally = new Bench.CpuTally
     spark.sparkContext.addSparkListener(tally)
     try {
+      // the literal is inlined into the generated code, so this shape is
+      // new to the JVM-wide codegen cache whichever suites ran first
       val r = Bench.runQuery(spark, "unused", "range",
-        (s, _) => s.range(2000000).selectExpr("id * 2 as x").toDF(),
+        (s, _) => s.range(2000000).selectExpr("id * 7919 as x").toDF(),
         Some(tally))
       assert(r.err.isEmpty)
       assert(r.cpuReps.size === 3)
+      // the warm-up pays the new shape's compiles; the reps reuse them
+      val w = r.warm.get
+      assert(w.compiles >= 1 && w.compileNs > 0, s"warm-up compiled nothing: $w")
       // every rep burns SOME task CPU, and task CPU can't exceed
       // wall x parallelism (sanity that the units are seconds, not ns);
       // the ceiling derives from the session's actual parallelism (x2
@@ -75,6 +80,8 @@ class BenchSpec extends AnyFunSuite {
       }
       assert(q.layers.map(_.jobs).distinct.size === 1,
         s"job counts differ between identical reps: ${q.layers.map(_.jobs)}")
+      assert(q.layers.forall(_.compiles == 0),
+        s"a timed rep recompiled: ${q.layers.map(_.compiles)}")
     } finally spark.sparkContext.removeSparkListener(tally)
   }
 

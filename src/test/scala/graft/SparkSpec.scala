@@ -3,11 +3,12 @@ package graft
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Shared local SparkSession for specs (one JVM-wide session, UTC, AQE on).
-  * Built WITH GraftExtensions so every spec sees the shipped session shape —
-  * the optimizer rules (ConsolidateJsonGets, GenerateStatsGuard) are part of
-  * the engine, and a plan assertion that passes without them tests a session
-  * no user runs.
+/** Shared local SparkSession for specs: one JVM-wide session built by
+  * `GraftSession.builder`, so every spec sees the shipped session shape —
+  * the optimizer rules (ConsolidateJsonGets, GenerateStatsGuard), the scan
+  * splits, and the codegen cache size, which is static and fixed by the
+  * JVM's first session. A plan or compile assertion that passes on a
+  * hand-copied conf list tests a session no user runs.
   */
 trait SparkSpec extends AnyFunSuite {
   lazy val spark: SparkSession = SparkSpec.session
@@ -15,17 +16,9 @@ trait SparkSpec extends AnyFunSuite {
 
 object SparkSpec {
   lazy val session: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
+    val s = GraftSession.builder("local[4]", 4)
       .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
-      .config("spark.sql.adaptive.enabled", "true")
-      // shipped-session parity (GraftSession.builder): sorted bucket scans
-      // report ordering so layout specs see the plans users get
-      .config("spark.sql.legacy.bucketedTableScan.outputOrdering", "true")
-      .withExtensions(new graft.functions.GraftExtensions)
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     s
