@@ -57,17 +57,17 @@ object Tables {
   def part(s: SparkSession, d: String): DataFrame      = load(s, d, "part")
   def orders(s: SparkSession, d: String): DataFrame    = load(s, d, "orders")
   def lineitem(s: SparkSession, d: String): DataFrame  = load(s, d, "lineitem")
-  /** `events.ts` is physically TIMESTAMP(NANOS) parquet, which Spark's
-    * vectorized reader rejects. Read it as raw nanos (legacy conf) and
+  /** `events.ts` may be physically TIMESTAMP(NANOS) parquet, which Spark's
+    * vectorized reader rejects. `GraftSession.builder` sets
+    * `spark.sql.legacy.parquet.nanosAsLong`, so it reads as raw nanos;
     * convert to a µs TimestampType with integer division — lossless for
     * this data (sub-µs components are zero) and identical to DuckDB's
     * TIMESTAMP_NS → TIMESTAMP cast.
     */
   def events(s: SparkSession, d: String): DataFrame = {
-    s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val df = load(s, d, "events")
     // normalize ts to TimestampType whatever the writer produced:
-    //  - the raw TIMESTAMP(NANOS) physical type arrives as long (conf above);
+    //  - the raw TIMESTAMP(NANOS) physical type arrives as long (builder conf);
     //  - a copy rewritten by DuckDB/pandas arrives as µs TIMESTAMP with
     //    isAdjustedToUTC=0 = TimestampNTZ, which time functions like
     //    unix_micros reject — value-preserving cast under the UTC session;

@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 
 /** Physical-layout helpers for 100 TB operation (SURVEY §4 + the builder
   * mandate): bucketing for shuffle-free co-located joins and per-entity
-  * windows, and key salting for skewed aggregations.
+  * windows. Skewed aggregations and joins rely on AQE (`GraftSession`).
   *
   * The reference gets away with glob-scan-everything because its corpus is
   * small; at cluster scale the event store's heavy hitters are (a) the
@@ -38,16 +38,4 @@ object Partitioning {
       .format("parquet")
       .saveAsTable(table)
   }
-
-  /** Salted high-cardinality aggregation for skewed keys: two-phase
-    * aggregate — partial per (key, salt), final per key. The skewed key's
-    * rows spread over `salts` reducers in phase one; phase two merges
-    * `salts` partials per key (tiny). Works for any algebraic aggregate.
-    */
-  def saltedCount(df: DataFrame, key: String, salts: Int): DataFrame =
-    df.withColumn("__salt", pmod(spark_partition_id() + monotonically_increasing_id(), lit(salts)))
-      .groupBy(col(key), col("__salt"))
-      .agg(count(lit(1)).as("__partial"))
-      .groupBy(col(key))
-      .agg(sum("__partial").as("n"))
 }

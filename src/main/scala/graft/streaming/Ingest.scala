@@ -31,6 +31,19 @@ object Ingest {
 
   /** Normalize → classify → 5 s-trigger Hive-partitioned Parquet sink
     * (doc_type=/date=), same layout the batch store reads (S2/S5).
+    *
+    * One file per partition per micro-batch: the rows are hash-partitioned
+    * on `(doc_type, date)` before the sink, so each Hive partition's rows
+    * of a batch sit in one task and the sink writes one file for it — the
+    * reference's one flush per partition buffer (`writer.py:125-131`).
+    * Without it every task writes a file into every partition it holds
+    * rows for (48 files of ~28 KB for 32k events on 4 cores, 12 with it),
+    * and every read opens all of them. The trade-off is one writer task
+    * per `(doc_type, date)` per batch; at the reference's rate (a few
+    * events a second on a 5 s trigger) that is tens of rows, and bulk
+    * backfills go through the batch `EventStore.write`. The exchange is
+    * stateless: the normalizer's state and its checkpointed partition
+    * count are unchanged.
     */
   def start(
       raw: Dataset[RawEvent],
@@ -40,6 +53,7 @@ object Ingest {
     Normalizer.normalize(raw).toDF()
       .withColumn("doc_type", docTypeFor)
       .withColumn("date", date_format(col("ts"), "yyyy-MM-dd"))
+      .repartition(col("doc_type"), col("date"))
       .writeStream
       .format("parquet")
       .option("checkpointLocation", checkpointPath)

@@ -102,7 +102,7 @@ object HeavyHitters {
   // count > total/MgCounters (= total/1024), with its exact count and corpus
   // share. Pass 1 (scan 1): per-partition MG summaries + per-partition
   // totals, a <= MgCounters+1 rows/partition relation, localCheckpoint'd so
-  // both consumers read the
+  // both consumers (the driver-side total, the candidates) read the
   // materialized summary instead of re-scanning the corpus. Pass 2
   // (scan 2): broadcast-semi-join the candidate set into the gram stream,
   // exact-count survivors only, threshold on the exact total.
@@ -120,18 +120,20 @@ object HeavyHitters {
       .mapPartitions(it => misraGries(k, it))
       .toDF("gram", "cnt")
       .localCheckpoint() // materialize: total + candidates share one scan
-    val total = mg.filter(col("gram").isNull)
-      .agg(sum("cnt").as("total"))
+    // The exact total comes back as a literal (one sentinel row per
+    // partition), so the plan below is one chain of query stages. As a
+    // second broadcast branch it raced the candidates' branch, and AQE
+    // numbers codegen stages in the order it re-plans them: a warm run
+    // recompiled the same classes under swapped stage ids (WarmPassSpec).
+    val total = lit(mg.filter(col("gram").isNull).select("cnt").as[Long].collect().sum)
+      .cast("double")
     val candidates = mg.filter(col("gram").isNotNull).select("gram").distinct()
     g.join(broadcast(candidates), Seq("gram"), "left_semi")
       .groupBy("gram")
       .agg(count(lit(1)).as("n_occurrences"))
-      .crossJoin(broadcast(total))
-      .filter(col("n_occurrences").cast("double") >
-        col("total").cast("double") / k)
+      .filter(col("n_occurrences").cast("double") > total / k)
       .select(col("gram"), col("n_occurrences"),
-        (col("n_occurrences").cast("double") / col("total").cast("double"))
-          .as("share"))
+        (col("n_occurrences").cast("double") / total).as("share"))
       .orderBy(desc("n_occurrences"), asc("gram"))
   }
 

@@ -22,7 +22,6 @@ class EmptyTablesSpec extends AnyFunSuite {
     val dir = java.nio.file.Files.createTempDirectory("graft-empty").toString
     val src = "/root/testdata/sf0.001"
     for (t <- Tables.all) {
-      if (t == "events") spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
       val schema = spark.read.parquet(s"$src/$t.parquet").schema
       spark.createDataFrame(
         spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)

@@ -2,6 +2,8 @@ package graft.streaming
 
 import java.sql.Timestamp
 
+import scala.jdk.CollectionConverters._
+
 import graft.SparkSpec
 import graft.store.EventStore
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
@@ -179,6 +181,74 @@ class StreamingSpec extends SparkSpec {
     val back = EventStore.read(spark, out)
     assert(back.count() === 2)
     assert(back.select("seq").distinct().count() === 2) // no duplicate seq
+  }
+
+  // 2023-11-14T23:59:50Z: the stream crosses midnight into a second date
+  private val Eve = 1700006390000L
+
+  /** Three blocks over 4 sessions, 4 doc types and 2 dates: the first two
+    * as closed-loop batches, then a stop, then the third drained by a
+    * restart with `AvailableNow`. Returns the number of events fed.
+    */
+  private def ingestStopRestart(out: String, ckpt: String): Int = {
+    val blocks = Seq(
+      (1 to 4).flatMap { s => Seq(
+        raw(s"s$s", Eve + s * 100, "game.presale", game = Some(s"g$s")),
+        raw(s"s$s", Eve + 1000 + s * 100, "game.tick", tick = Some(1), price = Some(1.0)))
+      } :+ raw("s1", Eve + 2000, "player.buy", price = Some(1.0)),
+      Seq(raw("s1", Eve + 8000, "game.tick", tick = Some(2), price = Some(1.1)),
+        raw("s2", Eve + 12000, "game.complete"),
+        raw("s3", Eve + 13000, "game.tick", tick = Some(2), price = Some(0.9))),
+      Seq(raw("s1", Eve + 16000, "game.tick", tick = Some(3), price = Some(1.2)),
+        raw("s2", Eve + 17000, "player.sell", price = Some(1.0))))
+    val input = MemoryStream[RawEvent]
+    val q = Ingest.start(input.toDS(), out, ckpt, Trigger.ProcessingTime(0L))
+    try blocks.take(2).foreach { b => input.addData(b: _*); q.processAllAvailable() }
+    finally q.stop()
+    input.addData(blocks(2): _*)
+    Ingest.start(input.toDS(), out, ckpt, Trigger.AvailableNow()).awaitTermination(60000)
+    blocks.map(_.size).sum
+  }
+
+  test("ingest writes one parquet file per partition per batch, across a restart") {
+    val out = tmp("graft-layout-out")
+    val fed = ingestStopRestart(out, tmp("graft-layout-ckpt"))
+    val files = for {
+      d <- new java.io.File(out).listFiles.toSeq if d.getName.startsWith("doc_type=")
+      p <- d.listFiles.toSeq if p.isDirectory
+    } yield s"${d.getName}/${p.getName}" -> p.listFiles.count(_.getName.endsWith(".parquet"))
+    // one file for each batch that had rows for the partition
+    assert(files.toMap === Map(
+      "doc_type=ws_event/date=2023-11-14" -> 1,        // batch 1
+      "doc_type=game_tick/date=2023-11-14" -> 2,       // batches 1, 2
+      "doc_type=player_action/date=2023-11-14" -> 1,   // batch 1
+      "doc_type=complete_game/date=2023-11-15" -> 1,   // batch 2
+      "doc_type=game_tick/date=2023-11-15" -> 2,       // batch 2, restart
+      "doc_type=player_action/date=2023-11-15" -> 1))  // restart
+    val back = EventStore.read(spark, out)
+    assert(back.count() === fed)
+    assert(back.select("session_id", "seq").distinct().count() === fed) // exactly once
+  }
+
+  test("ingest, stop and restart start no process (no-fork local file system)") {
+    // Hadoop forks twice once per JVM (Shell's setsid probe, getconf
+    // PAGESIZE); a warm-up run takes those out of the recording
+    ingestStopRestart(tmp("graft-fork-warm-out"), tmp("graft-fork-warm-ckpt"))
+    val rec = new jdk.jfr.Recording()
+    rec.enable("jdk.ProcessStart")
+    rec.start()
+    try ingestStopRestart(tmp("graft-fork-out"), tmp("graft-fork-ckpt")) finally rec.stop()
+    val jfr = java.nio.file.Files.createTempFile("graft-fork", ".jfr")
+    rec.dump(jfr)
+    rec.close()
+    // Spark's removal of a collected session's artifact directory
+    // (`JavaUtils.deleteRecursively` forks `rm -rf`) runs on the JDK Cleaner
+    // thread whenever a GC finds a stopped query's cloned session: once per
+    // session at a time the GC picks, not per file, so it is not counted
+    val started = jdk.jfr.consumer.RecordingFile.readAllEvents(jfr).asScala
+      .filter(_.getEventType.getName == "jdk.ProcessStart").map(_.getString("command"))
+      .filterNot(c => c.startsWith("rm -rf ") && c.contains("/artifacts-"))
+    assert(started.isEmpty, s"${started.size} processes started, e.g. ${started.take(3)}")
   }
 
   test("idle session state is evicted once the watermark passes the timeout horizon") {
