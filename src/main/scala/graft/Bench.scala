@@ -173,9 +173,7 @@ object Bench {
     */
   final class CpuTally extends org.apache.spark.scheduler.SparkListener {
     import java.util.concurrent.atomic.AtomicLong
-    import org.apache.spark.metrics.source.CodegenMetrics
     import org.apache.spark.scheduler._
-    import org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
     private val jobs, stages, tasks, cpuNs, scanBytes, scanRecords,
       shufBytes, shufRecords, spillBytes = new AtomicLong(0L)
     override def onJobStart(e: SparkListenerJobStart): Unit = {
@@ -199,8 +197,7 @@ object Bench {
     private def snapshot(): Layers = Layers(jobs.get(), stages.get(),
       tasks.get(), cpuNs.get(), scanBytes.get(), scanRecords.get(),
       shufBytes.get(), shufRecords.get(), spillBytes.get(),
-      CodegenMetrics.METRIC_COMPILATION_TIME.getCount,
-      CodeGenerator.compileTime)
+      compileCount(), compileNanos())
     /** Listener events arrive on a bus AFTER the action returns; the public
       * API has no drain hook, so poll until the totals stop moving. A
       * single 10 ms quiet gap is too easy a bar on a contended host — a
@@ -224,6 +221,15 @@ object Bench {
     }
   }
 
+  /** Classes Janino has compiled in this JVM (`CodegenMetrics`), and the
+    * nanos it took (`CodeGenerator.compileTime`): every session's compiles,
+    * on driver and executor threads alike.
+    */
+  private def compileCount(): Long =
+    org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+  private def compileNanos(): Long =
+    org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator.compileTime
+
   /** Streaming throughput probe (round-7 verdict item #5): end-to-end
     * sustained events/s through the LIVE pipeline, measured, not claimed.
     *
@@ -243,6 +249,13 @@ object Bench {
     *     `dedupGameHistory` (watermark + dropDuplicatesWithinWatermark)
     *     into a memory sink; unique count verified.
     *
+    * Each leg also reports the classes Janino compiled while it ran and
+    * the time it took (`ingest_compiles`/`ingest_compile_ms`, `restart_*`
+    * over the killed run and its restart, `dedup_*`), from the JVM-wide
+    * counters [[CpuTally]] reads. Every leg starts new streaming queries,
+    * each on a new clone of the session: the cold ingest pays the
+    * pipeline's compiles, and a warm leg that still compiles shows apart.
+    *
     * The reference's live envelope is ~4 events/s (BASELINE.md tick rate);
     * the emitted `ref_live_rate_eps` field makes the margin machine-readable.
     * Event volume is env-tunable (SPARK_GRAFT_STREAM_EVENTS, default 200k —
@@ -259,6 +272,12 @@ object Bench {
     val sessions = 64
     val base = 1700000000000L
     def tmp(p: String) = java.nio.file.Files.createTempDirectory(p).toString
+    def r1(x: Double): Double = math.round(x * 10.0) / 10.0
+    // a leg's compiles: the JVM-wide counters' deltas since `from`
+    def counters(): (Long, Long) = (compileCount(), compileNanos())
+    def compiled(leg: String, from: (Long, Long)): String =
+      s""""${leg}_compiles":${compileCount() - from._1},""" +
+        s""""${leg}_compile_ms":${r1((compileNanos() - from._2) / 1e6)},"""
 
     val events = (0 until n).map { i =>
       val sess = s"s${i % sessions}"
@@ -278,10 +297,12 @@ object Bench {
     val ingestIn = MemoryStream[RawEvent]
     events.grouped(20000).foreach(b => ingestIn.addData(b: _*))
     val out = tmp("graft-bench-ingest-out")
+    val ingestFrom = counters()
     val ingestSec = time {
       Ingest.start(ingestIn.toDS(), out, tmp("graft-bench-ingest-ckpt"),
         Trigger.AvailableNow()).awaitTermination()
     }
+    val ingestCompiled = compiled("ingest", ingestFrom)
     // the Normalizer emits exactly ONE row per raw event, so the sink must
     // hold n rows — a state-machine regression that dropped events would
     // otherwise silently inflate events/s (r10 ADVICE: the count used to
@@ -303,6 +324,7 @@ object Bench {
     val blockSz = 20000
     val blocks = events.grouped(blockSz).toSeq
     rIn.addData(blocks.head: _*)
+    val restartFrom = counters() // the killed run and its restart
     val q1 = Ingest.start(rIn.toDS(), rOut, rCkpt,
       Trigger.ProcessingTime("100 milliseconds"))
     def processed(): Long = q1.recentProgress.map(_.numInputRows).sum
@@ -326,6 +348,7 @@ object Bench {
       Ingest.start(rIn.toDS(), rOut, rCkpt, Trigger.AvailableNow())
         .awaitTermination()
     }
+    val restartCompiled = compiled("restart", restartFrom)
     val rWritten = spark.read.parquet(rOut).count()
     val exactlyOnce = rWritten == n.toLong
 
@@ -334,22 +357,23 @@ object Bench {
     }
     val dedupIn = MemoryStream[(String, java.sql.Timestamp)]
     games.grouped(20000).foreach(b => dedupIn.addData(b: _*))
+    val dedupFrom = counters()
     val dedupSec = time {
       Ingest.dedupGameHistory(dedupIn.toDF().toDF("game_id", "ts"))
         .writeStream.format("memory").queryName("bench_dedup")
         .trigger(Trigger.AvailableNow()).start().awaitTermination()
     }
+    val dedupCompiled = compiled("dedup", dedupFrom)
     val unique = spark.table("bench_dedup").count()
 
-    def r1(x: Double): Double = math.round(x * 10.0) / 10.0
     s"""{"ingest_events":$n,"ingest_sec":${r1(ingestSec)},""" +
-      s""""ingest_events_per_sec":${r1(n / ingestSec)},""" +
+      s""""ingest_events_per_sec":${r1(n / ingestSec)},""" + ingestCompiled +
       s""""ingest_rows_written":$written,"ingest_rows_ok":$rowsOk,""" +
       s""""restart_killed_after_rows":$killedAfter,""" +
-      s""""restart_recovery_sec":${r1(recoverySec)},""" +
+      s""""restart_recovery_sec":${r1(recoverySec)},""" + restartCompiled +
       s""""restart_rows_written":$rWritten,"exactly_once":$exactlyOnce,""" +
       s""""dedup_events":$n,"dedup_sec":${r1(dedupSec)},""" +
-      s""""dedup_events_per_sec":${r1(n / dedupSec)},""" +
+      s""""dedup_events_per_sec":${r1(n / dedupSec)},""" + dedupCompiled +
       s""""dedup_unique":$unique,"ref_live_rate_eps":4}"""
   }
 

@@ -6,23 +6,19 @@ import scala.jdk.CollectionConverters._
 
 import graft.SparkSpec
 import graft.store.EventStore
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 
 class StreamingSpec extends SparkSpec {
 
+  import StreamingSpec.{raw, tmp, ts}
   import spark.implicits._
   implicit lazy val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
 
-  private def ts(ms: Long) = new Timestamp(ms)
-  private def raw(sess: String, ms: Long, name: String,
-      game: Option[String] = None, tick: Option[Int] = None,
-      price: Option[Double] = None) =
-    RawEvent(sess, ts(ms), name, game, tick, price, "{}")
-
-  private def tmp(prefix: String) =
-    java.nio.file.Files.createTempDirectory(prefix).toString
+  private def ingestStopRestart(out: String, ckpt: String): Int =
+    StreamingSpec.ingestStopRestart(spark, out, ckpt)
 
   test("normalizer assigns per-session monotonic seq and carries game_id forward") {
     val events = Seq(
@@ -183,33 +179,6 @@ class StreamingSpec extends SparkSpec {
     assert(back.select("seq").distinct().count() === 2) // no duplicate seq
   }
 
-  // 2023-11-14T23:59:50Z: the stream crosses midnight into a second date
-  private val Eve = 1700006390000L
-
-  /** Three blocks over 4 sessions, 4 doc types and 2 dates: the first two
-    * as closed-loop batches, then a stop, then the third drained by a
-    * restart with `AvailableNow`. Returns the number of events fed.
-    */
-  private def ingestStopRestart(out: String, ckpt: String): Int = {
-    val blocks = Seq(
-      (1 to 4).flatMap { s => Seq(
-        raw(s"s$s", Eve + s * 100, "game.presale", game = Some(s"g$s")),
-        raw(s"s$s", Eve + 1000 + s * 100, "game.tick", tick = Some(1), price = Some(1.0)))
-      } :+ raw("s1", Eve + 2000, "player.buy", price = Some(1.0)),
-      Seq(raw("s1", Eve + 8000, "game.tick", tick = Some(2), price = Some(1.1)),
-        raw("s2", Eve + 12000, "game.complete"),
-        raw("s3", Eve + 13000, "game.tick", tick = Some(2), price = Some(0.9))),
-      Seq(raw("s1", Eve + 16000, "game.tick", tick = Some(3), price = Some(1.2)),
-        raw("s2", Eve + 17000, "player.sell", price = Some(1.0))))
-    val input = MemoryStream[RawEvent]
-    val q = Ingest.start(input.toDS(), out, ckpt, Trigger.ProcessingTime(0L))
-    try blocks.take(2).foreach { b => input.addData(b: _*); q.processAllAvailable() }
-    finally q.stop()
-    input.addData(blocks(2): _*)
-    Ingest.start(input.toDS(), out, ckpt, Trigger.AvailableNow()).awaitTermination(60000)
-    blocks.map(_.size).sum
-  }
-
   test("ingest writes one parquet file per partition per batch, across a restart") {
     val out = tmp("graft-layout-out")
     val fed = ingestStopRestart(out, tmp("graft-layout-ckpt"))
@@ -244,7 +213,10 @@ class StreamingSpec extends SparkSpec {
     // Spark's removal of a collected session's artifact directory
     // (`JavaUtils.deleteRecursively` forks `rm -rf`) runs on the JDK Cleaner
     // thread whenever a GC finds a stopped query's cloned session: once per
-    // session at a time the GC picks, not per file, so it is not counted
+    // session at a time the GC picks, not per file, so it is not counted.
+    // The builder's `spark.sql.artifact.isolation.enabled = false` does not
+    // remove it: in Spark 4.1.2 `ArtifactManager`'s constructor registers
+    // that cleanup for every session, isolated or not
     val started = jdk.jfr.consumer.RecordingFile.readAllEvents(jfr).asScala
       .filter(_.getEventType.getName == "jdk.ProcessStart").map(_.getString("command"))
       .filterNot(c => c.startsWith("rm -rf ") && c.contains("/artifacts-"))
@@ -287,5 +259,46 @@ class StreamingSpec extends SparkSpec {
       q.processAllAvailable()
       assert(spark.table("dedup_out").count() === 2) // one per game
     } finally q.stop()
+  }
+}
+
+object StreamingSpec {
+
+  def ts(ms: Long) = new Timestamp(ms)
+  def raw(sess: String, ms: Long, name: String,
+      game: Option[String] = None, tick: Option[Int] = None,
+      price: Option[Double] = None) =
+    RawEvent(sess, ts(ms), name, game, tick, price, "{}")
+
+  def tmp(prefix: String) =
+    java.nio.file.Files.createTempDirectory(prefix).toString
+
+  // 2023-11-14T23:59:50Z: the stream crosses midnight into a second date
+  private val Eve = 1700006390000L
+
+  /** Three blocks over 4 sessions, 4 doc types and 2 dates: the first two
+    * as closed-loop batches, then a stop, then the third drained by a
+    * restart with `AvailableNow`. Returns the number of events fed.
+    */
+  def ingestStopRestart(spark: SparkSession, out: String, ckpt: String): Int = {
+    import spark.implicits._
+    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
+    val blocks = Seq(
+      (1 to 4).flatMap { s => Seq(
+        raw(s"s$s", Eve + s * 100, "game.presale", game = Some(s"g$s")),
+        raw(s"s$s", Eve + 1000 + s * 100, "game.tick", tick = Some(1), price = Some(1.0)))
+      } :+ raw("s1", Eve + 2000, "player.buy", price = Some(1.0)),
+      Seq(raw("s1", Eve + 8000, "game.tick", tick = Some(2), price = Some(1.1)),
+        raw("s2", Eve + 12000, "game.complete"),
+        raw("s3", Eve + 13000, "game.tick", tick = Some(2), price = Some(0.9))),
+      Seq(raw("s1", Eve + 16000, "game.tick", tick = Some(3), price = Some(1.2)),
+        raw("s2", Eve + 17000, "player.sell", price = Some(1.0))))
+    val input = MemoryStream[RawEvent]
+    val q = Ingest.start(input.toDS(), out, ckpt, Trigger.ProcessingTime(0L))
+    try blocks.take(2).foreach { b => input.addData(b: _*); q.processAllAvailable() }
+    finally q.stop()
+    input.addData(blocks(2): _*)
+    Ingest.start(input.toDS(), out, ckpt, Trigger.AvailableNow()).awaitTermination(60000)
+    blocks.map(_.size).sum
   }
 }
