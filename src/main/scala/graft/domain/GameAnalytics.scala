@@ -1,13 +1,14 @@
 package graft.domain
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Domain analytics over `complete_game` documents: dedup, flattening,
-  * labeling, volatility — the reference's batch-ETL layer that produces the
-  * derived tables of SURVEY §1.3 (games_with_prices, games_deduplicated,
-  * sidebets_deduplicated, volatility_metrics).
+  * labeling — the reference's batch-ETL layer that produces the derived
+  * tables of SURVEY §1.3 (games_with_prices, games_deduplicated,
+  * sidebets_deduplicated). The fourth, volatility_metrics, is computed per
+  * tick row by `ops.AnalyticsQueries` (q45, q52), not over the array here.
   *
   * Everything here is pure column expressions / higher-order array functions
   * over the `prices: array<double>` series — no explode of 100 TB of ticks
@@ -123,94 +124,6 @@ object GameAnalytics {
       .agg(count(lit(1)).as("n_bets"),
         avg(col("bet_won").cast("double")).as("win_rate"))
       .orderBy("entry_bucket")
-
-  /** volatility_metrics (A15/D3, `volatility_study.py:53-137`): per-game
-    * array aggregation — price/return/log-return stddev, range, spikes,
-    * vol-of-vol — computed with higher-order functions on the prices array
-    * (single pass per game, no shuffle: the array is already game-local).
-    *
-    * stddev here is population-consistent with numpy's default ddof=0?
-    * No — the study uses np.std() (ddof=0, population). We therefore compute
-    * POPULATION stddev explicitly via aggregate(), documented deviation from
-    * SQL STDDEV (sample).
-    */
-  /** Vol-of-vol window width (W7, `volatility_study.py:114-118`): pandas
-    * `Series(returns).rolling(10).std()` — SAMPLE std over each full 10-value
-    * window (shorter prefixes are NaN and dropped) — then POPULATION std of
-    * that rolling series; 0.0 when fewer than 20 returns exist.
-    */
-  val VolOfVolWindow = 10
-  val VolOfVolMinReturns = 20
-
-  def volatilityMetrics(dedupedGames: DataFrame): DataFrame = {
-    val p = col("prices")
-    def mean(arr: Column): Column =
-      aggregate(arr, lit(0.0), (a, x) => a + x) / size(arr)
-    def popStd(arr: Column): Column = {
-      val m = mean(arr)
-      sqrt(aggregate(arr, lit(0.0), (a, x) => a + (x - m) * (x - m)) / size(arr))
-    }
-    // ONE-pass (sum, sum-of-squares) fold — the shared kernel for every
-    // std over a derived array: the mean-centered form would re-evaluate
-    // the inner mean aggregate (and the array-building expression under
-    // it) once per element, the O(n·w²)+ HOF-inlining pitfall.
-    def sumSq(arr: Column): Column = aggregate(arr,
-      struct(lit(0.0).as("s"), lit(0.0).as("s2")),
-      (a, x) => struct((a("s") + x).as("s"), (a("s2") + x * x).as("s2")))
-    // Sample std of a fixed-width slice; greatest() clamps the
-    // cancellation residue of identical-value windows to 0.
-    def sampleStdSlice(sl: Column): Column = {
-      val acc = sumSq(sl)
-      val n = size(sl).cast("double")
-      sqrt(greatest(
-        (acc("s2") - acc("s") * acc("s") / n) / (n - lit(1.0)), lit(0.0)))
-    }
-    val rets = zip_with(slice(p, lit(2), size(p) - 1), slice(p, lit(1), size(p) - 1),
-      (cur, prev) => (cur - prev) / prev)
-    val logRets = zip_with(slice(p, lit(2), size(p) - 1), slice(p, lit(1), size(p) - 1),
-      (cur, prev) => log(cur / prev))
-    val spikes = filter(rets, r => abs(r) > lit(0.10))
-    // W7 vol-of-vol: rolling sample std over every full 10-return window
-    // (1-based slice start i-9 for window ending at return i), then
-    // population std of the rolling series. Gated exactly like the study:
-    // fewer than 20 returns => 0.0.
-    val nRets = size(rets)
-    val rollingVols = transform(
-      sequence(lit(VolOfVolWindow), nRets),
-      i => sampleStdSlice(slice(rets, i - lit(VolOfVolWindow - 1), lit(VolOfVolWindow))))
-    // population std of the ROLLING series via the same one-pass fold,
-    // window count derived arithmetically (size(rollingVols) would
-    // re-evaluate the whole O(n·w) rolling build a second time)
-    val volOfVol = {
-      val acc = sumSq(rollingVols)
-      val nWin = (nRets - lit(VolOfVolWindow - 1)).cast("double")
-      val m = acc("s") / nWin
-      sqrt(greatest(acc("s2") / nWin - m * m, lit(0.0)))
-    }
-    dedupedGames
-      .filter(size(p) >= 2)
-      .select(
-        col("game_id"),
-        size(p).as("duration_ticks"),
-        popStd(p).as("price_std"),
-        popStd(rets).as("return_std"),
-        popStd(logRets).as("log_return_std"),
-        (array_max(p) - array_min(p)).as("price_range"),
-        // NULL (not an ANSI /0 error) if a malformed game contains price 0
-        when(array_min(p) > 0, array_max(p) / array_min(p)).as("high_low_ratio"),
-        size(spikes).as("spike_count"),
-        when(size(spikes) > 0, array_max(transform(spikes, r => abs(r))))
-          .as("max_spike_magnitude"),
-        when(size(spikes) > 0, mean(transform(spikes, r => abs(r))))
-          .as("avg_spike_magnitude"),
-        // guard keeps sequence() ascending: below 20 returns the rolling
-        // series is never built (sequence(10, n<10) would run DESCENDING)
-        when(nRets >= VolOfVolMinReturns, volOfVol).otherwise(0.0)
-          .as("vol_of_vol"),
-        col("peak_multiplier"),
-        element_at(p, -1).as("final_price"),
-        (size(p) >= OptimalZoneStartTick).as("is_profitable_sidebet_zone"))
-  }
 
   /** Pre-rug window association (J5, `analyze_pre_rug_events.py:68-98`):
     * bucket events into [-5s, +2s] around each rug timestamp and count per

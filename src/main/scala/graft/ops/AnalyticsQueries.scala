@@ -5,9 +5,10 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Domain-analytics operators re-expressed relationally over the `events`
-  * stream table (user_id ≈ game_id, event_id ≈ seq, value ≈ price), so the
-  * same semantics GameAnalytics/Backtest implement over nested price arrays
-  * are ALSO oracle-checked against DuckDB row-for-row.
+  * stream table (user_id ≈ game_id, event_id ≈ seq, value ≈ price), each
+  * oracle-checked against DuckDB row-for-row. q45 (volatility metrics), q52
+  * (vol-of-vol) and q50 (observation features) are the engine's one form of
+  * those capabilities; AnalyticsQueriesSpec pins their reference semantics.
   *
   * Reference anchors: per-game volatility metrics (A15,
   * `scripts/volatility_study.py:53-137`), equity-curve compounding (A16,
@@ -31,13 +32,13 @@ object AnalyticsQueries {
   // (map-side partial aggregation; no arrays materialized).
   val q45Volatility: Q = (s, d) => {
     val prev = lag(col("value"), 1).over(wOrd)
-    // zero/negative prices exist in the raw feed: both engines must skip
-    // them identically (ln(0) is an ERROR in DuckDB, -Infinity in Spark)
-    val ok = col("value") > 0 && prev > 0
-    val ret = when(ok, col("value") / prev - 1)
     Tables.events(s, d)
-      .withColumn("ret", ret)
-      .withColumn("log_ret", when(ok, log(col("value") / prev)))
+      // P8 clean before the window, as the study does (`prices[prices > 0]`,
+      // volatility_study.py:88-90): a zero/negative price leaves every
+      // metric, and the return across it spans the removed row
+      .filter(col("value") > 0)
+      .withColumn("ret", col("value") / prev - 1)
+      .withColumn("log_ret", log(col("value") / prev))
       .groupBy("user_id")
       .agg(
         count(lit(1)).as("n_ticks"),
@@ -45,29 +46,23 @@ object AnalyticsQueries {
         round(stddev_pop(col("ret")), 4).as("return_std"),
         round(stddev_pop(col("log_ret")), 4).as("log_return_std"),
         round(max(col("value")) - min(col("value")), 6).as("price_range"),
-        // NULL when min = 0 in BOTH engines (ANSI Spark errors on /0,
-        // DuckDB float-divides to inf)
-        when(min(col("value")) > 0,
-          round(max(col("value")) / min(col("value")), 6)).as("high_low_ratio"),
+        round(max(col("value")) / min(col("value")), 6).as("high_low_ratio"),
         sum(when(abs(col("ret")) > 0.10, 1).otherwise(0)).as("spike_count"))
       .orderBy("user_id")
   }
   val q45Sql: String =
     """WITH r AS (
       |  SELECT user_id, value,
-      |    CASE WHEN value > 0 AND lag(value) OVER w > 0
-      |      THEN value / lag(value) OVER w - 1 END AS ret,
-      |    CASE WHEN value > 0 AND lag(value) OVER w > 0
-      |      THEN ln(value / lag(value) OVER w) END AS log_ret
-      |  FROM events
+      |    value / lag(value) OVER w - 1 AS ret,
+      |    ln(value / lag(value) OVER w) AS log_ret
+      |  FROM events WHERE value > 0
       |  WINDOW w AS (PARTITION BY user_id ORDER BY event_id))
       |SELECT user_id, count(*) AS n_ticks,
       |  round(stddev_pop(value), 4) AS price_std,
       |  round(stddev_pop(ret), 4) AS return_std,
       |  round(stddev_pop(log_ret), 4) AS log_return_std,
       |  round(max(value) - min(value), 6) AS price_range,
-      |  CASE WHEN min(value) > 0
-      |    THEN round(max(value) / min(value), 6) END AS high_low_ratio,
+      |  round(max(value) / min(value), 6) AS high_low_ratio,
       |  CAST(sum(CASE WHEN abs(ret) > 0.10 THEN 1 ELSE 0 END) AS BIGINT) AS spike_count
       |FROM r GROUP BY user_id ORDER BY user_id""".stripMargin
 
@@ -136,7 +131,7 @@ object AnalyticsQueries {
       .select(col("event_id"), col("user_id"), col("value"),
         runPeak.as("running_peak"),
         (col("rn") - peakRn).cast("long").as("rows_since_peak"),
-        // guarded like q45: a zero first price makes the running peak 0
+        // guarded: a zero first price makes the running peak 0
         // (ANSI Spark errors on /0; DuckDB float-divides)
         // `+ 0.0` normalizes IEEE -0.0 to +0.0 (x + (+0.0) = +0.0 when
         // x = -0.0): DuckDB's round keeps the sign of a tiny negative,
@@ -185,13 +180,13 @@ object AnalyticsQueries {
   // (shorter prefixes are NaN and dropped) — then POPULATION std of the
   // rolling series per entity; 0.0 below 20 returns. Relational form: rank
   // the non-null returns, rolling stddev_samp over 9 preceding, keep frames
-  // with rn >= 10, stddev_pop in the final groupBy.
+  // with rn >= 10, stddev_pop in the final groupBy. Prices are P8-cleaned
+  // before the returns, as in q45.
   val q52VolOfVol: Q = (s, d) => {
     val prev = lag(col("value"), 1).over(wOrd)
-    val ok = col("value") > 0 && prev > 0
-    val ret = when(ok, col("value") / prev - 1)
     val base = Tables.events(s, d)
-      .withColumn("ret", ret)
+      .filter(col("value") > 0)
+      .withColumn("ret", col("value") / prev - 1)
       .filter(col("ret").isNotNull)
     val wr = Window.partitionBy("user_id").orderBy("event_id")
     val w10 = wr.rowsBetween(-9, 0)
@@ -210,9 +205,8 @@ object AnalyticsQueries {
   val q52Sql: String =
     """WITH r AS (
       |  SELECT user_id, event_id,
-      |    CASE WHEN value > 0 AND lag(value) OVER w > 0
-      |      THEN value / lag(value) OVER w - 1 END AS ret
-      |  FROM events
+      |    value / lag(value) OVER w - 1 AS ret
+      |  FROM events WHERE value > 0
       |  WINDOW w AS (PARTITION BY user_id ORDER BY event_id)),
       |f AS (SELECT user_id, event_id, ret FROM r WHERE ret IS NOT NULL),
       |n AS (

@@ -7,7 +7,7 @@ import org.apache.spark.sql.functions._
 
 /** Tests over the complete_game fixture of FIXTURES.md §2: duplicated game
   * emissions (rolling-history re-broadcast), sidebets straddling the win
-  * boundary, rug-tick detection, volatility metrics.
+  * boundary, rug-tick detection.
   */
 class GameAnalyticsSpec extends SparkSpec {
 
@@ -84,18 +84,6 @@ class GameAnalyticsSpec extends SparkSpec {
       .filter($"game_id" === "gameA" && $"player_id" === "p3").head()
     assert(p3.getAs[Int]("ticks_to_rug") === -1)
     assert(!p3.getAs[Boolean]("was_near_miss"))
-  }
-
-  test("volatility metrics: population stddev over prices and returns") {
-    val b = GameAnalytics.volatilityMetrics(deduped)
-      .filter($"game_id" === "gameB").head()
-    val p = Seq(1.0, 1.2, 1.4, 1.6)
-    val mean = p.sum / p.size
-    val popStd = math.sqrt(p.map(x => (x - mean) * (x - mean)).sum / p.size)
-    assert(math.abs(b.getAs[Double]("price_std") - popStd) < 1e-12)
-    assert(math.abs(b.getAs[Double]("price_range") - 0.6) < 1e-9)
-    assert(b.getAs[Int]("spike_count") === 3) // all returns > 10%
-    assert(!b.getAs[Boolean]("is_profitable_sidebet_zone"))
   }
 
   test("win-rate by entry bucket aggregates labeled sidebets") {
