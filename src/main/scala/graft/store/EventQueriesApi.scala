@@ -9,13 +9,31 @@ import org.apache.spark.sql.functions._
   *
   * Every method is declarative — Catalyst does partition pruning, predicate
   * pushdown, and broadcast selection; the N+1 per-game loop of the reference
-  * (`duckdb.py:155-184`) becomes one job with a single shuffle (SURVEY §3.3).
+  * (`duckdb.py:155-184`) becomes one broadcast semi-join and one range sort
+  * ([[episodes]]: 5 jobs for any number of games, EventStoreSpec pins it).
+  *
+  * Each method is planned for the size of its result. A bounded one (one
+  * game's rows, ≤ 10 doc_type groups) is ordered after one exchange with
+  * `sortWithinPartitions`: a global `orderBy` would add a range-partition
+  * sampling job and its exchange, sized for a result that cannot occur.
+  * An unbounded one (`episodes`, `playerGameEvents`, `gamesByIds`,
+  * `tickFeatures` of every game) keeps the range-partitioned `orderBy`,
+  * so no sort collapses to a single task. Nothing narrows to one
+  * partition ahead of a scan: `game_id` is not a partition column, so
+  * that would scan the whole store in one task. Jobs per lookup on
+  * `local[4]` (LookupPlanSpec pins them): `EventStore.read` 1,
+  * `gameEpisode` 2, `tickFeatures` of one game 2, `listGamesPaged` 2,
+  * `recentEvents` 1, `docTypeStats` 3.
   */
 object EventQueriesApi {
 
-  /** Episode fetch (`duckdb.py:129-153`): all events of one game, seq order. */
+  /** Episode fetch (`duckdb.py:129-153`): all events of one game, seq order.
+    * Bounded by one game: the filtered rows meet in one partition and sort
+    * there, one exchange and no range sampling.
+    */
   def gameEpisode(envelopes: DataFrame, gameId: String): DataFrame =
-    envelopes.filter(col("game_id") === gameId).orderBy("seq")
+    envelopes.filter(col("game_id") === gameId)
+      .repartition(1).sortWithinPartitions("seq")
 
   /** Qualifying games (`duckdb.py:186-238`, J1/A4): tick-count CTE + HAVING
     * min_ticks, joined back to events. The tick-count side is tiny ⇒
@@ -71,11 +89,9 @@ object EventQueriesApi {
     envelopes.filter(col("game_id").isin(gameIds: _*))
       .orderBy("game_id", "seq")
 
-  /** Discovery (`duckdb.py:226-237,340-384`, A5/O4). */
-  def listGames(envelopes: DataFrame, limit: Int): DataFrame =
-    envelopes.filter(col("game_id").isNotNull)
-      .select("game_id").distinct().orderBy("game_id").limit(limit)
-
+  /** Discovery (`duckdb.py:226-237,340-384`, A5/O4); games are listed by
+    * [[listGamesPaged]].
+    */
   def listPlayers(envelopes: DataFrame, limit: Int): DataFrame =
     envelopes.filter(col("player_id").isNotNull)
       .select("player_id").distinct().orderBy("player_id").limit(limit)
@@ -101,7 +117,8 @@ object EventQueriesApi {
   }
 
   /** Store stats (`query_session.py:43-53,161-179`, A1–A3): per-doc_type
-    * counts, time range, distinct sessions.
+    * counts, time range, distinct sessions. The store has ≤ 10 doc_types,
+    * so the final aggregate runs as one task and sorts its groups in place.
     */
   def docTypeStats(envelopes: DataFrame): DataFrame =
     envelopes.groupBy("doc_type").agg(
@@ -109,7 +126,7 @@ object EventQueriesApi {
       min("ts").as("min_ts"),
       max("ts").as("max_ts"),
       countDistinct(col("session_id")).as("n_sessions"))
-      .orderBy("doc_type")
+      .coalesce(1).sortWithinPartitions("doc_type")
 
   /** Recent events (`query_session.py:100-110`, O2). */
   def recentEvents(envelopes: DataFrame, n: Int): DataFrame =
@@ -121,7 +138,9 @@ object EventQueriesApi {
     * volatility, running max, drawdown — one shared window, per-game
     * partitioned so the sort never collapses to a single reducer.
     * `price` is decimal-as-string on disk and CAST here, exactly like
-    * `duckdb.py:435`.
+    * `duckdb.py:435`. For one game the window's `game_id` exchange already
+    * puts every row in one partition in (game_id, seq) order, so there is
+    * no final sort; `ordered` only applies to the features of every game.
     */
   def tickFeatures(envelopes: DataFrame, gameId: Option[String] = None,
       ordered: Boolean = true): DataFrame = {
@@ -146,7 +165,7 @@ object EventQueriesApi {
     // ordered=false keeps ordering partition-local (per-game, which is all
     // a feature consumer needs) — over the bucketed layout even that Sort
     // vanishes, so the whole query runs shuffle-free and sort-free
-    if (ordered) out.orderBy("game_id", "seq")
+    if (ordered && gameId.isEmpty) out.orderBy("game_id", "seq")
     else out.sortWithinPartitions("game_id", "seq")
   }
 }

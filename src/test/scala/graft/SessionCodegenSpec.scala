@@ -1,7 +1,6 @@
 package graft
 
 import graft.streaming.{Ingest, StreamingSpec}
-import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.streaming.Trigger
@@ -18,13 +17,6 @@ class SessionCodegenSpec extends SparkSpec {
 
   import spark.implicits._
   implicit lazy val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-
-  /** Classes Janino compiled in this JVM while `body` ran. */
-  private def compiles(body: => Unit): Long = {
-    val before = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
-    body
-    CodegenMetrics.METRIC_COMPILATION_TIME.getCount - before
-  }
 
   test("a query run again on a new session compiles no class") {
     def q(s: SparkSession) = s.range(0, 100000, 1, 4)

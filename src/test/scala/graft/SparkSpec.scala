@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -12,6 +13,24 @@ import org.scalatest.funsuite.AnyFunSuite
   */
 trait SparkSpec extends AnyFunSuite {
   lazy val spark: SparkSession = SparkSpec.session
+
+  /** Jobs the session's context submitted while `body` ran. */
+  def jobsOf(body: => Unit): Long = {
+    val tally = new Bench.CpuTally
+    spark.sparkContext.addSparkListener(tally)
+    try {
+      val before = tally.settled()
+      body
+      (tally.settled() - before).jobs
+    } finally spark.sparkContext.removeSparkListener(tally)
+  }
+
+  /** Classes Janino compiled in this JVM while `body` ran. */
+  def compiles(body: => Unit): Long = {
+    val before = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+    body
+    CodegenMetrics.METRIC_COMPILATION_TIME.getCount - before
+  }
 }
 
 object SparkSpec {

@@ -1,6 +1,6 @@
 package graft.similarity
 
-import graft.{Bench, SparkEntry, SparkSpec}
+import graft.{SparkEntry, SparkSpec}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -26,16 +26,6 @@ class LloydSpec extends SparkSpec {
 
   private def emb: DataFrame = graft.Tables.embeddings(spark, d)
     .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
-
-  private def jobsOf(body: => Unit): Long = {
-    val tally = new Bench.CpuTally
-    spark.sparkContext.addSparkListener(tally)
-    try {
-      val before = tally.settled()
-      body
-      (tally.settled() - before).jobs
-    } finally spark.sparkContext.removeSparkListener(tally)
-  }
 
   // the init collect, then per round the codebook's broadcast build and
   // the update collect: the job chain behind q38/q69/q74/q90's counts

@@ -51,8 +51,13 @@ class EventStoreSpec extends SparkSpec {
     assert(ids === Set("game-001", "game-002"))
   }
 
-  test("episodes of qualifying games come back in one job, game/seq ordered") {
-    val rows = EventQueriesApi.episodes(env, 5).collect()
+  test("episodes of qualifying games come back in 5 jobs, game/seq ordered") {
+    env.schema // the read's schema-merge job runs before the count
+    // the tick-count exchange, the broadcast of the qualifying ids, then
+    // the range sort's sampling job, its exchange and the result: one
+    // semi-join for every game, not one fetch per game
+    var rows: Array[Row] = Array.empty
+    assert(jobsOf { rows = EventQueriesApi.episodes(env, 5).collect() } === 5)
     assert(rows.map(_.getAs[String]("game_id")).distinct.toSet ===
       Set("game-001", "game-002"))
     val g1 = rows.filter(_.getAs[String]("game_id") == "game-001").map(_.getAs[Long]("seq"))
@@ -70,6 +75,26 @@ class EventStoreSpec extends SparkSpec {
     val stats = EventQueriesApi.docTypeStats(env).collect()
       .map(r => r.getAs[String]("doc_type") -> r.getAs[Long]("n_events")).toMap
     assert(stats === Map("game_tick" -> 18L, "player_action" -> 4L))
+    // every column, in doc_type order
+    val rows = EventQueriesApi.docTypeStats(env).collect().toSeq
+    assert(rows.map(_.toSeq) === Seq(
+      Seq("game_tick", 18L, "2026-01-01T00:00:00.000000+00:00",
+        "2026-01-03T00:00:02.000000+00:00", 1L),
+      Seq("player_action", 4L, "2026-01-01T00:01:00.000000+00:00",
+        "2026-01-03T00:01:00.000000+00:00", 1L)))
+  }
+
+  test("listPlayers: distinct non-null players in player_id order, limited") {
+    def players(n: Int) = EventQueriesApi.listPlayers(env, n).collect().map(_.getString(0)).toSeq
+    assert(players(10) === Seq("player-alice", "player-bob"))
+    assert(players(1) === Seq("player-alice"))
+  }
+
+  test("gamesByIds: every event of the listed games, game/seq ordered") {
+    val rows = EventQueriesApi.gamesByIds(env, Seq("game-003", "game-001", "game-404"))
+      .collect().map(r => (r.getAs[String]("game_id"), r.getAs[Long]("seq"))).toSeq
+    assert(rows === ((0L until 10L) ++ Seq(100L, 101L)).map(("game-001", _)) ++
+      Seq(300L, 301L, 302L, 310L).map(("game-003", _)))
   }
 
   test("tickFeatures matches hand-computed values for game-001") {
