@@ -141,13 +141,6 @@ object GraftSession {
       .config("spark.sql.parquet.filterPushdown", "true")
       .config("spark.sql.files.maxPartitionBytes", maxPartitionBytes)
       .config("spark.sql.files.openCostInBytes", openCostInBytes)
-      // Bucket-sorted scans report their sort order (off by default since
-      // Spark 3.1 because MULTI-file buckets would interleave); Spark still
-      // guards with the one-file-per-bucket check, and Partitioning
-      // .writeBucketed repartitions on the bucket key so that check holds.
-      // This is what lets the bucketed event-store layout run window and
-      // episode queries with no Sort at all (BucketedLayoutSpec).
-      .config("spark.sql.legacy.bucketedTableScan.outputOrdering", "true")
       // static, read once per JVM: see the scaladoc's codegen-cache caveat
       .config("spark.sql.codegen.cache.maxEntries", 4096)
       // one executor class loader for every session and clone, so a class

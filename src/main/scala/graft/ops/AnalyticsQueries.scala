@@ -72,6 +72,9 @@ object AnalyticsQueries {
   // log space: exp(Σ log1p(r_i)) over the running frame — no driver-side
   // loop, partition-local per entity. Half-fraction participation keeps the
   // product from telescoping. Running peak + drawdown on top (W3/W4 shape).
+  // No P8 cleaning: the wallet fold (`backtest_service.py:358-572`) steps
+  // through every tick, so a non-positive price stays a row and compounds
+  // as a flat step, and so does the row after it (see COVERAGE.md P8).
   val q46Equity: Q = (s, d) => {
     val prev = lag(col("value"), 1).over(wOrd)
     // bad ticks (zero price / zero prev / first row) participate as flat
@@ -117,7 +120,10 @@ object AnalyticsQueries {
   // q50 — RL observation builder (D2, sidebet_v1_env.py:33-135): running
   // peak, rows since peak, drawdown-from-peak, 5-row momentum, 10-row
   // volatility, per-second velocity — one shared window family, all
-  // partition-local per entity.
+  // partition-local per entity. No P8 cleaning: the environment observes
+  // every price (`sidebet_v1_env.py:237-338`), so a non-positive price
+  // stays an observation; its drawdown is NULL while the running peak is 0
+  // (see COVERAGE.md P8).
   val q50ObsFeatures: Q = (s, d) => {
     val w10 = wOrd.rowsBetween(-9, 0)
     val rn = row_number().over(wOrd)

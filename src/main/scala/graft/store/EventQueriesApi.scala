@@ -55,23 +55,6 @@ object EventQueriesApi {
       .orderBy("game_id", "seq")
   }
 
-  /** [[episodes]] for the bucketed layout ([[EventStore.writeBucketed]]):
-    * episode consumers need PER-GAME seq order, not a global order across
-    * games, so the global `orderBy` (a range-partitioning Exchange) is
-    * replaced by `sortWithinPartitions` — and over storage that is
-    * bucketed by game_id and bucket-sorted by (game_id, seq) even that
-    * partition-local Sort is removed by the planner (the scan already
-    * reports the ordering), leaving a plan with no shuffle Exchange and
-    * no Sort at all: scan → broadcast semi-join, done
-    * (BucketedLayoutSpec pins this). The qualifying-count aggregation
-    * also rides the bucket distribution — no Exchange there either.
-    */
-  def episodesPartitionLocal(envelopes: DataFrame, minTicks: Long): DataFrame = {
-    val ids = qualifyingGameIds(envelopes, minTicks).select("game_id")
-    envelopes.join(broadcast(ids), Seq("game_id"), "left_semi")
-      .sortWithinPartitions("game_id", "seq")
-  }
-
   /** Player history (`duckdb.py:296-310`, J2): all events of every game the
     * player appeared in — the DISTINCT player_games CTE is exactly a
     * left-semi join.
@@ -138,12 +121,13 @@ object EventQueriesApi {
     * volatility, running max, drawdown — one shared window, per-game
     * partitioned so the sort never collapses to a single reducer.
     * `price` is decimal-as-string on disk and CAST here, exactly like
-    * `duckdb.py:435`. For one game the window's `game_id` exchange already
-    * puts every row in one partition in (game_id, seq) order, so there is
-    * no final sort; `ordered` only applies to the features of every game.
+    * `duckdb.py:435`. The lag and the running max are bound to columns
+    * first, so each is one window expression however often the features
+    * use it. For one game the window's `game_id` exchange already puts
+    * every row in one partition in (game_id, seq) order, so there is no
+    * final sort; the features of every game keep their range sort.
     */
-  def tickFeatures(envelopes: DataFrame, gameId: Option[String] = None,
-      ordered: Boolean = true): DataFrame = {
+  def tickFeatures(envelopes: DataFrame, gameId: Option[String] = None): DataFrame = {
     val ticks0 = envelopes.filter(col("doc_type") === "game_tick")
     val ticks = gameId.fold(ticks0)(g => ticks0.filter(col("game_id") === g))
       .withColumn("price_d", col("price").cast("double"))
@@ -151,21 +135,23 @@ object EventQueriesApi {
     val w5 = w.rowsBetween(-4, 0)
     val w10 = w.rowsBetween(-9, 0)
     val wRun = w.rowsBetween(Window.unboundedPreceding, 0)
-    val prev = lag(col("price_d"), 1).over(w)
-    val runMax = max(col("price_d")).over(wRun)
     def nullifZero(c: Column): Column = when(c === 0, null).otherwise(c)
+    val price = col("price_d")
+    val prev = col("prev")
+    val runMax = col("running_max")
     val out = ticks.select(
-      col("game_id"), col("seq"), col("tick"), col("price_d").as("price"),
-      (col("price_d") - prev).as("price_delta"),
-      ((col("price_d") - prev) / nullifZero(prev)).as("pct_change"),
-      when(count(lit(1)).over(w5) >= 2, stddev(col("price_d")).over(w5)).as("volatility_5"),
-      when(count(lit(1)).over(w10) >= 2, stddev(col("price_d")).over(w10)).as("volatility_10"),
-      runMax.as("running_max"),
-      (col("price_d") / nullifZero(runMax) - 1).as("drawdown"))
-    // ordered=false keeps ordering partition-local (per-game, which is all
-    // a feature consumer needs) — over the bucketed layout even that Sort
-    // vanishes, so the whole query runs shuffle-free and sort-free
-    if (ordered && gameId.isEmpty) out.orderBy("game_id", "seq")
+      col("game_id"), col("seq"), col("tick"), price,
+      lag(price, 1).over(w).as("prev"),
+      when(count(lit(1)).over(w5) >= 2, stddev(price).over(w5)).as("volatility_5"),
+      when(count(lit(1)).over(w10) >= 2, stddev(price).over(w10)).as("volatility_10"),
+      max(price).over(wRun).as("running_max"))
+      .select(
+        col("game_id"), col("seq"), col("tick"), price.as("price"),
+        (price - prev).as("price_delta"),
+        ((price - prev) / nullifZero(prev)).as("pct_change"),
+        col("volatility_5"), col("volatility_10"), runMax,
+        (price / nullifZero(runMax) - 1).as("drawdown"))
+    if (gameId.isEmpty) out.orderBy("game_id", "seq")
     else out.sortWithinPartitions("game_id", "seq")
   }
 }

@@ -90,30 +90,6 @@ object EventStore {
       .partitionBy("doc_type", "date")
       .parquet(path)
 
-  /** Opt-in ALTERNATIVE physical layout: the envelope table bucketed by
-    * `game_id` and bucket-sorted by (game_id, seq). The Hive layout above
-    * optimizes doc_type/date pruning (the reference's read pattern); this
-    * one optimizes the OTHER hot family — per-game episode fetches,
-    * per-game windows (tickFeatures), and events⋈games joins — by paying
-    * the game_id shuffle ONCE at write time. Every subsequent
-    * groupBy/join/window on game_id then runs without an Exchange, and
-    * the (game_id, seq) bucket sort feeds window/episode ordering without
-    * a Sort (BucketedLayoutSpec pins both eliminations end-to-end).
-    * At 100 TB this is the difference between re-sorting the corpus per
-    * query and never sorting it at all.
-    */
-  def writeBucketed(df: DataFrame, table: String, buckets: Int): Unit =
-    Partitioning.writeBucketed(
-      df.withColumn("date", date_format(to_timestamp(col("ts")), "yyyy-MM-dd")),
-      table, "game_id", buckets, Seq("game_id", "seq"))
-
-  /** Scan of the bucketed layout — a plain metastore table read; the
-    * bucket spec rides along in the catalog and Catalyst uses it for
-    * distribution/ordering, no reader-side options needed.
-    */
-  def readBucketed(spark: SparkSession, table: String): DataFrame =
-    spark.table(table)
-
   /** Hive-partitioned scan with schema merge — the `hive_partitioning=true,
     * union_by_name=true` glob read (`query_session.py:49`). Filters on
     * doc_type/date prune partitions in Catalyst (S2/S3).

@@ -3,7 +3,6 @@ package graft.streaming
 import java.sql.Timestamp
 
 import org.apache.spark.sql.{Dataset, SparkSession}
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 /** Stateful stream detectors (SURVEY §2.9 T5/T7/T8), each a
   * `flatMapGroupsWithState` keyed by its natural entity so state shards
@@ -27,45 +26,24 @@ object Detectors {
     */
   val PairIdleTimeoutMs = 60 * 1000L
 
-  def detectPairsGroup(evict: Boolean)(
-      gameId: String,
-      events: Iterator[RugEmission],
-      state: GroupState[PairState]): Iterator[RugDetection] = {
-    if (state.hasTimedOut) { state.remove(); return Iterator.empty }
-    var last = state.getOption.map(_.lastRugMs).getOrElse(Long.MinValue)
-    val out = events.toSeq.sortBy(_.ts.getTime).map { e =>
+  def detectPairsGroup(gameId: String, events: Seq[RugEmission],
+      state: PairState): (PairState, Seq[RugDetection]) = {
+    var last = state.lastRugMs
+    val out = events.sortBy(_.ts.getTime).map { e =>
       val ms = e.ts.getTime
       val dup = last != Long.MinValue && ms - last <= PairWindowMs
       if (!dup) last = ms
       RugDetection(gameId, e.ts, dup)
     }
-    state.update(PairState(last))
-    // deadline = TTL past the newest emission, floored at the watermark
-    // (first-batch watermark is 0 — see Normalizer.normalizeGroup)
-    if (evict) {
-      val newestMs = out.lastOption.map(_.ts.getTime).getOrElse(0L)
-      state.setTimeoutTimestamp(
-        math.max(newestMs, state.getCurrentWatermarkMs()) + PairIdleTimeoutMs)
-    }
-    out.iterator
+    (PairState(last), out)
   }
 
-  /** Event-time state eviction when streaming (watermark + timeout; a
-    * processing-time timeout would hot-loop the no-data re-trigger);
-    * NoTimeout in batch where state dies with the job.
-    */
+  /** Keyed by game; streaming evicts past [[PairIdleTimeoutMs]] ([[KeyedFold]]). */
   def detectRugPairs(rugs: Dataset[RugEmission]): Dataset[RugDetection] = {
     val spark: SparkSession = rugs.sparkSession
     import spark.implicits._
-    if (rugs.isStreaming)
-      rugs.withWatermark("ts", Normalizer.WatermarkDelay)
-        .groupByKey(_.game_id)
-        .flatMapGroupsWithState(OutputMode.Append,
-          GroupStateTimeout.EventTimeTimeout)(detectPairsGroup(evict = true))
-    else
-      rugs.groupByKey(_.game_id)
-        .flatMapGroupsWithState(OutputMode.Append,
-          GroupStateTimeout.NoTimeout)(detectPairsGroup(evict = false))
+    KeyedFold(rugs)(_.game_id, _.ts, PairIdleTimeoutMs, PairState(Long.MinValue))(
+      detectPairsGroup)
   }
 
   // -------------------------------------------------------------------------
@@ -90,13 +68,10 @@ object Detectors {
     */
   val GapIdleTimeoutMs = 10 * 60 * 1000L
 
-  def detectGapsGroup(evict: Boolean)(
-      sessionId: String,
-      events: Iterator[TickArrival],
-      state: GroupState[GapState]): Iterator[GapSignal] = {
-    if (state.hasTimedOut) { state.remove(); return Iterator.empty }
-    var lastMs = state.getOption.map(_.lastMs).getOrElse(Long.MinValue)
-    val out = events.toSeq.sortBy(_.ts.getTime).flatMap { e =>
+  def detectGapsGroup(sessionId: String, events: Seq[TickArrival],
+      state: GapState): (GapState, Seq[GapSignal]) = {
+    var lastMs = state.lastMs
+    val out = events.sortBy(_.ts.getTime).flatMap { e =>
       val ms = e.ts.getTime
       val sig = if (lastMs == Long.MinValue) None
       else {
@@ -106,26 +81,14 @@ object Detectors {
       lastMs = ms
       sig
     }
-    state.update(GapState(lastMs))
-    // deadline = TTL past the newest tick, floored at the watermark
-    if (evict)
-      state.setTimeoutTimestamp(
-        math.max(lastMs, state.getCurrentWatermarkMs()) + GapIdleTimeoutMs)
-    out.iterator
+    (GapState(lastMs), out)
   }
 
   def detectGaps(ticks: Dataset[TickArrival]): Dataset[GapSignal] = {
     val spark: SparkSession = ticks.sparkSession
     import spark.implicits._
-    if (ticks.isStreaming)
-      ticks.withWatermark("ts", Normalizer.WatermarkDelay)
-        .groupByKey(_.session_id)
-        .flatMapGroupsWithState(OutputMode.Append,
-          GroupStateTimeout.EventTimeTimeout)(detectGapsGroup(evict = true))
-    else
-      ticks.groupByKey(_.session_id)
-        .flatMapGroupsWithState(OutputMode.Append,
-          GroupStateTimeout.NoTimeout)(detectGapsGroup(evict = false))
+    KeyedFold(ticks)(_.session_id, _.ts, GapIdleTimeoutMs, GapState(Long.MinValue))(
+      detectGapsGroup)
   }
 
   // -------------------------------------------------------------------------
@@ -147,41 +110,22 @@ object Detectors {
     */
   val RingIdleTimeoutMs = 30 * 60 * 1000L
 
-  def ringGroup(capacity: Int, evict: Boolean = false)(
-      gameId: String,
-      events: Iterator[Tick],
-      state: GroupState[RingState]): Iterator[RingSnapshot] = {
-    if (state.hasTimedOut) { state.remove(); return Iterator.empty }
-    val prev = state.getOption.map(_.ticks).getOrElse(Nil)
-    val batch = events.toSeq
-    val merged = (prev ++ batch.sortBy(_.tick).map(t => (t.tick, t.price)))
+  def ringGroup(capacity: Int)(gameId: String, events: Seq[Tick],
+      state: RingState): (RingState, Seq[RingSnapshot]) = {
+    val merged = (state.ticks ++ events.sortBy(_.tick).map(t => (t.tick, t.price)))
       .takeRight(capacity)
-    state.update(RingState(merged))
-    // deadline = TTL past the newest tick, floored at the watermark
-    if (evict) {
-      val newestMs = batch.iterator.map(_.ts.getTime).maxOption.getOrElse(0L)
-      state.setTimeoutTimestamp(
-        math.max(newestMs, state.getCurrentWatermarkMs()) + RingIdleTimeoutMs)
-    }
-    if (merged.isEmpty) Iterator.empty
-    else Iterator(RingSnapshot(gameId, merged.size,
-      // min/max scanned, not head/last: a late cross-batch tick makes the
-      // concatenation only per-batch sorted
-      merged.iterator.map(_._1).min, merged.iterator.map(_._1).max,
-      merged.last._2))
+    (RingState(merged),
+      if (merged.isEmpty) Nil
+      else Seq(RingSnapshot(gameId, merged.size,
+        // min/max scanned, not head/last: a late cross-batch tick makes the
+        // concatenation only per-batch sorted
+        merged.iterator.map(_._1).min, merged.iterator.map(_._1).max,
+        merged.last._2)))
   }
 
   def ringBuffer(ticks: Dataset[Tick], capacity: Int = RingCapacity): Dataset[RingSnapshot] = {
     val spark: SparkSession = ticks.sparkSession
     import spark.implicits._
-    if (ticks.isStreaming)
-      ticks.withWatermark("ts", Normalizer.WatermarkDelay)
-        .groupByKey(_.game_id)
-        .flatMapGroupsWithState(OutputMode.Append,
-          GroupStateTimeout.EventTimeTimeout)(ringGroup(capacity, evict = true))
-    else
-      ticks.groupByKey(_.game_id)
-        .flatMapGroupsWithState(OutputMode.Append,
-          GroupStateTimeout.NoTimeout)(ringGroup(capacity))
+    KeyedFold(ticks)(_.game_id, _.ts, RingIdleTimeoutMs, RingState(Nil))(ringGroup(capacity))
   }
 }

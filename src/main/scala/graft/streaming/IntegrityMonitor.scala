@@ -3,7 +3,6 @@ package graft.streaming
 import java.sql.Timestamp
 
 import org.apache.spark.sql.{Dataset, SparkSession}
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 /** Feed-health state machines (T10/T12 adjuncts): the reference's
   * DataIntegrityMonitor (`src/sources/data_integrity_monitor.py:38-230` —
@@ -18,8 +17,8 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   * stream), and ALL timing is event time (the event's own ts drives
   * recovery windows), so a replay of a recorded feed reproduces the exact
   * mode history the live run saw — the reference's wall-clock version
-  * can't do that. Same batch/streaming dual dispatch and watermark-based
-  * state eviction as [[Detectors]].
+  * can't do that. Batch/streaming dispatch and watermark-based state
+  * eviction are [[KeyedFold]]'s, as for [[Detectors]].
   */
 object IntegrityMonitor {
 
@@ -62,14 +61,11 @@ object IntegrityMonitor {
     * or records an issue (gap/bad game), not on every tick — the
     * monitoring stream is sparse even on a dense feed.
     */
-  def integrityGroup(thresholdType: String, thresholdValue: Int,
-      evict: Boolean)(
+  def integrityGroup(thresholdType: String, thresholdValue: Int)(
       sessionId: String,
-      events: Iterator[FeedEvent],
-      state: GroupState[IntegrityState]): Iterator[IntegritySignal] = {
-    if (state.hasTimedOut) { state.remove(); return Iterator.empty }
-    var s = state.getOption.getOrElse(
-      IntegrityState(triggered = false, 0, 0, -1, 0L))
+      events: Seq[FeedEvent],
+      state: IntegrityState): (IntegrityState, Seq[IntegritySignal]) = {
+    var s = state
     val out = scala.collection.mutable.ArrayBuffer.empty[IntegritySignal]
     // Always emits: the contract is a row for every issue record, so a
     // gap/bad-game/lost-connection arriving while ALREADY triggered still
@@ -79,7 +75,7 @@ object IntegrityMonitor {
       out += IntegritySignal(sessionId, e.ts, issue,
         triggered = true, s.tickGaps, s.badGames)
     }
-    events.toSeq.sortBy(_.ts.getTime).foreach { e =>
+    events.sortBy(_.ts.getTime).foreach { e =>
       s = s.copy(lastEventMs = e.ts.getTime)
       e.kind match {
         case "tick" =>
@@ -118,12 +114,7 @@ object IntegrityMonitor {
         case _ => ()
       }
     }
-    state.update(s)
-    if (evict)
-      state.setTimeoutTimestamp(
-        math.max(s.lastEventMs, state.getCurrentWatermarkMs()) +
-          IntegrityIdleTimeoutMs)
-    out.iterator
+    (s, out.toSeq)
   }
 
   def monitor(events: Dataset[FeedEvent],
@@ -131,17 +122,9 @@ object IntegrityMonitor {
       thresholdValue: Int = 20): Dataset[IntegritySignal] = {
     val spark: SparkSession = events.sparkSession
     import spark.implicits._
-    if (events.isStreaming)
-      events.withWatermark("ts", Normalizer.WatermarkDelay)
-        .groupByKey(_.session_id)
-        .flatMapGroupsWithState(OutputMode.Append,
-          GroupStateTimeout.EventTimeTimeout)(
-          integrityGroup(thresholdType, thresholdValue, evict = true))
-    else
-      events.groupByKey(_.session_id)
-        .flatMapGroupsWithState(OutputMode.Append,
-          GroupStateTimeout.NoTimeout)(
-          integrityGroup(thresholdType, thresholdValue, evict = false))
+    KeyedFold(events)(_.session_id, _.ts, IntegrityIdleTimeoutMs,
+      IntegrityState(triggered = false, 0, 0, -1, 0L))(
+      integrityGroup(thresholdType, thresholdValue))
   }
 
   // --- GracefulDegradationManager ------------------------------------------
@@ -171,12 +154,11 @@ object IntegrityMonitor {
     * time, checked as each event arrives) clears the counters → NORMAL.
     */
   def degradationGroup(errorThreshold: Int, spikeThreshold: Int,
-      recoveryWindowMs: Long, evict: Boolean)(
+      recoveryWindowMs: Long)(
       sessionId: String,
-      events: Iterator[HealthEvent],
-      state: GroupState[ModeState]): Iterator[ModeChange] = {
-    if (state.hasTimedOut) { state.remove(); return Iterator.empty }
-    var s = state.getOption.getOrElse(ModeState(Normal, 0, 0, Long.MinValue, 0L))
+      events: Seq[HealthEvent],
+      state: ModeState): (ModeState, Seq[ModeChange]) = {
+    var s = state
     val out = scala.collection.mutable.ArrayBuffer.empty[ModeChange]
     def setMode(ts: Timestamp, mode: String): Unit =
       if (s.mode != mode) {
@@ -189,7 +171,7 @@ object IntegrityMonitor {
         else if (s.errors >= errorThreshold || s.spikes >= spikeThreshold)
           setMode(ts, Degraded)
       }
-    events.toSeq.sortBy(_.ts.getTime).foreach { e =>
+    events.sortBy(_.ts.getTime).foreach { e =>
       val ms = e.ts.getTime
       // event-time check_recovery before processing the new event. Runs
       // in NORMAL too: the counters are windowed ("errors_in_window"), so
@@ -213,11 +195,7 @@ object IntegrityMonitor {
       }
       s = s.copy(lastEventMs = ms)
     }
-    state.update(s)
-    if (evict)
-      state.setTimeoutTimestamp(
-        math.max(s.lastEventMs, state.getCurrentWatermarkMs()) + ModeIdleTimeoutMs)
-    out.iterator
+    (s, out.toSeq)
   }
 
   def degradation(events: Dataset[HealthEvent], errorThreshold: Int = 10,
@@ -225,18 +203,8 @@ object IntegrityMonitor {
       recoveryWindowMs: Long = 60000L): Dataset[ModeChange] = {
     val spark: SparkSession = events.sparkSession
     import spark.implicits._
-    if (events.isStreaming)
-      events.withWatermark("ts", Normalizer.WatermarkDelay)
-        .groupByKey(_.session_id)
-        .flatMapGroupsWithState(OutputMode.Append,
-          GroupStateTimeout.EventTimeTimeout)(
-          degradationGroup(errorThreshold, spikeThreshold, recoveryWindowMs,
-            evict = true))
-    else
-      events.groupByKey(_.session_id)
-        .flatMapGroupsWithState(OutputMode.Append,
-          GroupStateTimeout.NoTimeout)(
-          degradationGroup(errorThreshold, spikeThreshold, recoveryWindowMs,
-            evict = false))
+    KeyedFold(events)(_.session_id, _.ts, ModeIdleTimeoutMs,
+      ModeState(Normal, 0, 0, Long.MinValue, 0L))(
+      degradationGroup(errorThreshold, spikeThreshold, recoveryWindowMs))
   }
 }

@@ -1,7 +1,6 @@
 package graft.streaming
 
 import org.apache.spark.sql.{Dataset, SparkSession}
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 /** T2/T3 (SURVEY §2.9): raw wire events → normalized events with a monotonic
   * per-session `seq`, game_id carry-forward, and a validated phase machine.
@@ -33,13 +32,10 @@ object Normalizer {
     */
   val WatermarkDelay = "10 minutes"
 
-  def normalizeGroup(evict: Boolean)(
-      sessionId: String,
-      events: Iterator[RawEvent],
-      state: GroupState[SessionState]): Iterator[NormalizedEvent] = {
-    if (state.hasTimedOut) { state.remove(); return Iterator.empty }
-    var st = state.getOption.getOrElse(SessionState(0L, None, Phases.Cooldown))
-    val out = events.toSeq.sortBy(e => (e.ts.getTime, e.event_name)).map { e =>
+  def normalizeGroup(sessionId: String, events: Seq[RawEvent],
+      state: SessionState): (SessionState, Seq[NormalizedEvent]) = {
+    var st = state
+    val out = events.sortBy(e => (e.ts.getTime, e.event_name)).map { e =>
       val gameId = e.game_id.orElse(st.lastGameId)
       val (phase, valid) = Phases.proposed(e.event_name) match {
         case Some(p) if Phases.legal(st.phase).contains(p) => (p, true)
@@ -51,36 +47,16 @@ object Normalizer {
       st = SessionState(st.nextSeq + 1, gameId, phase)
       n
     }
-    state.update(st)
-    // event-time eviction: the deadline is TTL past the newest event this
-    // session has produced (floored at the watermark — in the first batch
-    // the watermark is still 0, and a deadline anchored there would expire
-    // the moment real 2020s timestamps advance it). A processing-time
-    // timeout is not an option: shouldRunAnotherBatch is always true under
-    // it, hot-looping the no-data re-trigger.
-    if (evict) {
-      val newestMs = out.lastOption.map(_.ts.getTime).getOrElse(0L)
-      state.setTimeoutTimestamp(
-        math.max(newestMs, state.getCurrentWatermarkMs()) + SessionIdleTimeoutMs)
-    }
-    out.iterator
+    (st, out)
   }
 
-  /** Works on both a streaming and a batch Dataset. Streaming adds a
-    * watermark and evicts idle-session state past the timeout horizon;
-    * batch state dies with the job, so eviction is skipped (NoTimeout).
+  /** Works on both a streaming and a batch Dataset ([[KeyedFold]]):
+    * streaming evicts a session idle past [[SessionIdleTimeoutMs]].
     */
   def normalize(raw: Dataset[RawEvent]): Dataset[NormalizedEvent] = {
     val spark: SparkSession = raw.sparkSession
     import spark.implicits._
-    if (raw.isStreaming)
-      raw.withWatermark("ts", WatermarkDelay)
-        .groupByKey(_.session_id)
-        .flatMapGroupsWithState(OutputMode.Append,
-          GroupStateTimeout.EventTimeTimeout)(normalizeGroup(evict = true))
-    else
-      raw.groupByKey(_.session_id)
-        .flatMapGroupsWithState(OutputMode.Append,
-          GroupStateTimeout.NoTimeout)(normalizeGroup(evict = false))
+    KeyedFold(raw)(_.session_id, _.ts, SessionIdleTimeoutMs,
+      SessionState(0L, None, Phases.Cooldown))(normalizeGroup)
   }
 }

@@ -87,6 +87,25 @@ class AnalyticsQueriesSpec extends SparkSpec {
     assert(q52Rows(4L).getAs[Double]("vol_of_vol") === 0.0039)
   }
 
+  test("q46 keeps a zero price as a flat step, not cleaned (P8 is the study's)") {
+    val rows = AnalyticsQueries.q46Equity(spark, events(
+      1L -> Seq(1.0, 1.2, 0.0, 1.5, 1.8))).collect()
+    // every row stays; the zero row and the row after it (prev 0) compound
+    // nothing, so the 1.2 -> 1.5 move is lost, where the cleaned series
+    // would span it (ln 1.125 = 0.117783 more)
+    assert(rows.map(_.getAs[Double]("log_bankroll")).toSeq ===
+      Seq(0.0, 0.09531, 0.09531, 0.09531, 0.19062))
+  }
+
+  test("q50 keeps a zero price as an observation, drawdown NULL while the peak is 0") {
+    val rows = AnalyticsQueries.q50ObsFeatures(spark, events(
+      1L -> Seq(0.0, 1.0, 0.0, 0.5))).collect()
+    assert(rows.map(_.getAs[Double]("running_peak")).toSeq === Seq(0.0, 1.0, 1.0, 1.0))
+    assert(rows.map(r => Option(r.getAs[java.lang.Double]("drawdown_from_peak"))
+      .map(_.doubleValue)).toSeq === Seq(None, Some(0.0), Some(-1.0), Some(-0.5)))
+    assert(rows.map(_.getAs[Long]("rows_since_peak")).toSeq === Seq(0L, 0L, 1L, 2L))
+  }
+
   test("q50 observation features follow the running peak through a crash") {
     val rows = AnalyticsQueries.q50ObsFeatures(spark, events(
       1L -> crash,

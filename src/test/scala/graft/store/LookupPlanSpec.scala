@@ -2,6 +2,10 @@ package graft.store
 
 import graft.SparkSpec
 import org.apache.spark.sql.{DataFrame, SaveMode}
+import org.apache.spark.sql.catalyst.expressions.{Lag, WindowExpression}
+import org.apache.spark.sql.catalyst.expressions.aggregate.{AggregateExpression, Max}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.window.WindowExec
 import org.apache.spark.sql.functions._
 import java.nio.file.Files
 
@@ -12,7 +16,7 @@ import java.nio.file.Files
   * the compile counts pin that a new literal reuses the shape's classes,
   * and the order cases pin that no rewrite changed a row or its position.
   */
-class LookupPlanSpec extends SparkSpec {
+class LookupPlanSpec extends SparkSpec with AdaptiveSparkPlanHelper {
 
   // game-003 renamed game-006: with 4 shuffle partitions game-001 and
   // game-003 hash to the same one, game-006 to its own
@@ -103,11 +107,26 @@ class LookupPlanSpec extends SparkSpec {
       val ordered = keys(EventQueriesApi.tickFeatures(env))
       assert(ordered.map(_._1).distinct === games)
       assert(ordered === ordered.sorted)
-      // without the range sort the games come back in hash-partition
-      // order, which for these ids is not game_id order
-      val local = keys(EventQueriesApi.tickFeatures(env, ordered = false))
+      // the same features ordered only within their game_id hash
+      // partitions come back in partition order, which for these ids is
+      // not game_id order: the check above can fail
+      val local = keys(EventQueriesApi.tickFeatures(env)
+        .repartition(col("game_id")).sortWithinPartitions("game_id", "seq"))
       assert(local.sorted === ordered)
       assert(local !== ordered)
     }
+  }
+
+  test("tickFeatures computes its lag and its running max once") {
+    val tf = EventQueriesApi.tickFeatures(env, Some("game-001"))
+    tf.collect()
+    val fns = collect(tf.queryExecution.executedPlan) { case w: WindowExec =>
+      w.windowExpression.flatMap(_.collect { case WindowExpression(f, _) => f })
+    }.flatten
+    assert(fns.count(_.isInstanceOf[Lag]) === 1, fns)
+    assert(fns.count {
+      case AggregateExpression(_: Max, _, _, _, _) => true
+      case _ => false
+    } === 1, fns)
   }
 }
