@@ -447,8 +447,7 @@ object Mp4Demux {
     }
     val fixtures = s.createDataset(Seq(
       Multimodal.MediaRow(1L, "video", bytes, 64, 48, 0, 0, VidN, "mp4")))
-    val dir = java.nio.file.Files.createTempDirectory("graft-q91-store")
-    dir.toFile.deleteOnExit()
+    val dir = graft.store.LocalFs.scratchDir("graft-q91-store")
     graft.store.EventStore.write(
       fixtures.toDF()
         .withColumn("doc_type", col("kind"))

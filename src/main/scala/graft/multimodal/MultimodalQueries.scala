@@ -68,8 +68,7 @@ object MultimodalQueries {
     // could not trip q75. Now the fixtures are written via
     // EventStore.write, scanned back via EventStore.read, and every
     // decode below reads its bytes off parquet files.
-    val dir = java.nio.file.Files.createTempDirectory("graft-q75-store")
-    dir.toFile.deleteOnExit()
+    val dir = graft.store.LocalFs.scratchDir("graft-q75-store")
     graft.store.EventStore.write(
       fixtures.toDF()
         .withColumn("doc_type", col("kind"))

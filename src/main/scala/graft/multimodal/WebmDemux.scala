@@ -456,8 +456,7 @@ object WebmDemux {
     }
     val fixtures = s.createDataset(Seq(
       Multimodal.MediaRow(1L, "video", bytes, 64, 48, 0, 0, VidN, "webm")))
-    val dir = java.nio.file.Files.createTempDirectory("graft-q92-store")
-    dir.toFile.deleteOnExit()
+    val dir = graft.store.LocalFs.scratchDir("graft-q92-store")
     graft.store.EventStore.write(
       fixtures.toDF()
         .withColumn("doc_type", col("kind"))

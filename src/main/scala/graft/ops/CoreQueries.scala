@@ -1,6 +1,7 @@
 package graft.ops
 
 import graft.{Q, Tables}
+import graft.functions.DecimalKernels.{dec, dec_mul, dec_sum}
 import org.apache.spark.sql.functions._
 
 /** Core relational operator surface (SURVEY.md §2.1–§2.4, §2.6–§2.7),
@@ -26,22 +27,25 @@ object CoreQueries {
     * Decimal addition is associative ⇒ shuffle/merge order cannot change the
     * result, unlike naive double sums. (SURVEY §2.4 A1/A3 oracle parity.)
     *
-    * Input precision is a per-column CONTRACT, and it is a 2× CPU lever:
-    * Spark's sum buffer is decimal(prec+10, scale), and a buffer at
-    * precision ≤ 18 stays long-backed in codegen while anything wider
-    * drops to BigDecimal arithmetic (measured on q01: the old blanket
-    * decimal(28,4) casts cost 1.21 s vs 0.69 s with (8,2) inputs — the
-    * decimal ops, not the scan, dominated the whole query). The default
-    * (8,2) fits every money/measure column in this schema (2-decimal
-    * values, |v| < 10^6: quantities ≤ 50, prices ≤ 5·10^5, balances
-    * ≤ 10^4) with a (18,2) buffer good to ~10^16 cents — overflow only
-    * past ~10^11 max-value rows, and a deployment summing beyond that
-    * widens `prec` here (Spark then nulls an overflowed sum rather than
-    * wrapping, so the failure mode is loud in oracle checks, not silent
-    * corruption).
+    * Input precision is a per-column CONTRACT. The default (8,2) fits
+    * every money/measure column in this schema (2-decimal values,
+    * |v| < 10^6: quantities ≤ 50, prices ≤ 5·10^5, balances ≤ 10^4) with a
+    * (18,2) buffer good to ~10^16 cents — overflow only past ~10^11
+    * max-value rows (Spark then raises or nulls an overflowed sum rather
+    * than wrapping, so the failure mode is loud in oracle checks, not
+    * silent corruption).
+    *
+    * Cost: the cast is `dec` ([[graft.functions.DecimalKernels]]), which
+    * settles the value in double arithmetic instead of Spark's
+    * `Double.toString` + `BigDecimal` per row. At p ≤ 8 Spark's
+    * `DecimalAggregates` rewrites the sum to a long sum, so it needs no
+    * kernel. A column that needs 9–18 digits is summed with `dec_sum`, as
+    * q01's product is: Spark's own sum of it adds `BigDecimal`s in a
+    * decimal(p+10) buffer (measured on q01: blanket decimal(28,4) casts cost
+    * 1.21 s vs 0.69 s with (8,2) inputs), `dec_sum` adds longs.
     */
   private def dsum(colName: String, prec: Int = 8, scale: Int = 2) =
-    sum(col(colName).cast(s"decimal($prec,$scale)")).cast("double")
+    sum(dec(col(colName), prec, scale)).cast("double")
 
   // ---------------------------------------------------------------------------
   // q01 — GROUP BY + multi-aggregate (A3): per-flag/status rollup of lineitem.
@@ -57,9 +61,10 @@ object CoreQueries {
         // rare shortest-repr boundary rows (Spark casts via the shortest
         // decimal repr, DuckDB rounds the binary value), drifting the exact
         // decimal sums ~1e-6 at 600k rows. Input widths (8,2)/(4,2) per the
-        // dsum contract (2-decimal data); the product is (14,4).
-        round(sum((col("l_extendedprice").cast("decimal(8,2)") *
-          (lit(1).cast("decimal(4,2)") - col("l_discount").cast("decimal(4,2)")))
+        // dsum contract (2-decimal data); the product is (14,4), its sum
+        // (24,4) — dec_mul/dec_sum keep both in longs.
+        round(dec_sum(dec_mul(dec(col("l_extendedprice"), 8, 2),
+          lit(1).cast("decimal(4,2)") - dec(col("l_discount"), 4, 2))
         ).cast("double"), 2).as("sum_disc_price"),
         min("l_shipdate").as("min_ship"),
         max("l_shipdate").as("max_ship"))
@@ -243,7 +248,7 @@ object CoreQueries {
       .agg(
         sum(when(col("l_discount") > 0.05, 1).otherwise(0)).as("n_discounted"),
         sum(when(col("l_discount") <= 0.05, 1).otherwise(0)).as("n_full_price"),
-        sum(when(col("l_tax") > 0.04, col("l_quantity").cast("decimal(8,2)")))
+        sum(when(col("l_tax") > 0.04, dec(col("l_quantity"), 8, 2)))
           .cast("double").as("taxed_qty")) // (8,2) per the dsum contract
       .orderBy("l_linestatus")
   val q12Sql: String =

@@ -1,6 +1,7 @@
 package graft.ops
 
 import graft.{Q, Tables}
+import graft.functions.DecimalKernels.dec
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -117,8 +118,8 @@ object EventQueries {
       .agg(countDistinct(col("user_id")).as("dau"),
         count(lit(1)).as("n_events"),
         // (8,2): events.value is 2-decimal, < 10^3 (CoreQueries.dsum
-        // contract — the long-backed (18,2) buffer is the 2x CPU lever)
-        sum(col("value").cast("decimal(8,2)")).cast("double").as("sum_value"))
+        // contract — Spark sums a p ≤ 8 decimal in a long)
+        sum(dec(col("value"), 8, 2)).cast("double").as("sum_value"))
       .orderBy("day")
   val q29Sql: String =
     """SELECT CAST(ts AS DATE) AS day, count(DISTINCT user_id) AS dau,

@@ -1,6 +1,7 @@
 package graft.similarity
 
 import graft.{Q, Tables}
+import graft.functions.DecimalKernels.{dec, dec_sum}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -89,7 +90,7 @@ object ProductQuantization {
     codes.join(broadcast(dt), Seq("sub", "cid"))
       .filter(col("qid") =!= col("vec_id"))
       .groupBy(col("qid"), col("vec_id").as("nid"))
-      .agg(sum(col("dd").cast("decimal(18,6)")).cast("double").as("adc"))
+      .agg(dec_sum(dec(col("dd"), 18, 6)).cast("double").as("adc"))
       .withColumn("rank", row_number().over(w))
       .filter(col("rank") <= PqTopK)
       .select("qid", "rank", "nid", "adc")

@@ -1,6 +1,7 @@
 package graft.similarity
 
 import graft.{Q, Tables}
+import graft.functions.DecimalKernels.{dec, dec_sum}
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -857,7 +858,7 @@ object SimilarityQueries {
   val q76RhLshStats: Q = (s, d) =>
     q51Pairs(s, d).agg(
       count(lit(1)).as("n_pairs"),
-      sum(col("cosine").cast("decimal(18,6)")).cast("double").as("sum_cos6"),
+      dec_sum(dec(col("cosine"), 18, 6)).cast("double").as("sum_cos6"),
       min("cosine").as("min_cosine"),
       max("cosine").as("max_cosine"))
 
@@ -947,7 +948,7 @@ object SimilarityQueries {
       .filter(col("cosine") >= 0.35)
       .agg(
         count(lit(1)).as("n_pairs"),
-        sum(col("cosine").cast("decimal(18,6)")).cast("double").as("sum_cos6"),
+        dec_sum(dec(col("cosine"), 18, 6)).cast("double").as("sum_cos6"),
         min("cosine").as("min_cosine"),
         max("cosine").as("max_cosine"))
 

@@ -97,3 +97,34 @@ class NioRawLocalFs(uri: URI, conf: Configuration) extends DelegateToFileSystem(
   override def getServerDefaults() = LocalConfigKeys.getServerDefaults
   override def isValidName(src: String): Boolean = true
 }
+
+/** Scratch directories under `java.io.tmpdir` that go away with the JVM.
+  * `File.deleteOnExit` only removes an empty directory, so a scratch store
+  * written into one stayed behind on every run; these are deleted whole
+  * by one shutdown hook. A query that returns a lazy plan over its scratch
+  * files (q75, q91, q92) cannot delete them any earlier.
+  */
+object LocalFs {
+
+  private val scratch = new java.util.concurrent.ConcurrentLinkedQueue[java.nio.file.Path]()
+
+  private lazy val hook: Unit = Runtime.getRuntime.addShutdownHook(
+    new Thread(() => scratch.forEach(d => deleteTree(d)), "graft-scratch-cleanup"))
+
+  /** A new directory under `java.io.tmpdir`, deleted with its contents at JVM exit. */
+  def scratchDir(prefix: String): java.nio.file.Path = {
+    hook
+    val dir = Files.createTempDirectory(prefix)
+    scratch.add(dir)
+    dir
+  }
+
+  /** Deletes `root` and everything under it; a missing `root` is a no-op. */
+  def deleteTree(root: java.nio.file.Path): Unit =
+    if (Files.exists(root)) {
+      val paths = Files.walk(root)
+      try paths.sorted(java.util.Comparator.reverseOrder[java.nio.file.Path]())
+        .forEach(p => Files.deleteIfExists(p))
+      finally paths.close()
+    }
+}

@@ -1,6 +1,13 @@
 package graft
 
+import graft.functions.{DecimalCast, DecimalSum}
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.expressions.{Cast, Expression, MakeDecimal, Multiply}
+import org.apache.spark.sql.catalyst.expressions.aggregate.Sum
+import org.apache.spark.sql.execution.WholeStageCodegenExec
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.aggregate.{BaseAggregateExec, HashAggregateExec}
+import org.apache.spark.sql.types.{DecimalType, DoubleType}
 
 /** Physical-plan assertions for the registered queries: the point of a
   * declarative engine is WHICH plan Catalyst picks — these lock in the
@@ -8,7 +15,7 @@ import org.apache.spark.sql.DataFrame
   * joins on dimension sides, no stray cartesian products), so a regression
   * that silently drops a broadcast or pushdown fails CI, not a cluster run.
   */
-class PlanSpec extends SparkSpec {
+class PlanSpec extends SparkSpec with AdaptiveSparkPlanHelper {
 
   private val d = "/root/testdata/sf0.001"
 
@@ -287,5 +294,50 @@ class PlanSpec extends SparkSpec {
     assert(p.contains("isFinalPlan=true"), p.take(1500))
     assert(p.contains("ReusedExchange"),
       s"the df count must read the tf branch's exchange, not rescan:\n$p")
+  }
+
+  /** Every expression node of the optimized plan, where `dec_mul` is
+    * already replaced by its long product.
+    */
+  private def optimizedExpressions(name: String): Seq[Expression] =
+    SparkEntry.queries(name)(spark, d).queryExecution.optimizedPlan
+      .collectWithSubqueries { case p => p.expressions }.flatten
+      .flatMap(_.collect { case e => e })
+
+  private def decimalPrecision(e: Expression): Option[Int] = e.dataType match {
+    case t: DecimalType => Some(t.precision)
+    case _ => None
+  }
+
+  test("decimal kernels: no per-row BigDecimal cast, product or sum in the switched queries") {
+    Seq("q01_group_agg", "q03_join_agg", "q04_semi_join", "q05_having", "q08_in_list",
+      "q12_conditional_agg", "q16_desc_stats", "q17_star_join", "q19_date_agg",
+      "q29_daily_active", "q38_ivfpq_ann", "q76_rh_lsh_stats", "q90_pq_ann",
+      "q93_rh_wide_stats").foreach { q =>
+      val es = optimizedExpressions(q)
+      val bigDecimalPaths = es.collect {
+        case c @ Cast(child, t: DecimalType, _, _)
+            if child.dataType == DoubleType && t.precision <= 18 => c
+        case m @ Multiply(l, r, _)
+            if decimalPrecision(l).isDefined && decimalPrecision(r).isDefined => m
+        case s @ Sum(child, _) if decimalPrecision(child).exists(p => p >= 9 && p <= 18) => s
+      }
+      assert(bigDecimalPaths.isEmpty, s"$q: $bigDecimalPaths")
+      assert(es.exists(_.isInstanceOf[DecimalCast]), s"$q casts through dec")
+    }
+    val q01 = optimizedExpressions("q01_group_agg")
+    assert(q01.count(_.isInstanceOf[DecimalCast]) === 4)
+    assert(q01.exists(_.isInstanceOf[DecimalSum]))
+    assert(q01.exists { case MakeDecimal(_: Multiply, 14, 4, _) => true; case _ => false })
+  }
+
+  test("q01: one whole-stage-codegen'd HashAggregate pair, in two jobs") {
+    val df = SparkEntry.queries("q01_group_agg")(spark, d)
+    assert(jobsOf(df.collect()) === 2)
+    val p = df.queryExecution.executedPlan
+    assert(collect(p) { case a: BaseAggregateExec => a.getClass.getSimpleName } ===
+      Seq("HashAggregateExec", "HashAggregateExec"))
+    assert(collect(p) { case w: WholeStageCodegenExec =>
+      w.collect { case h: HashAggregateExec => h } }.flatten.size === 2)
   }
 }

@@ -22,6 +22,10 @@ class CodegenSpec extends SparkSpec {
     assert(!classOf[CodegenFallback].isAssignableFrom(classOf[RandomHyperplaneSignature]))
     assert(!classOf[CodegenFallback].isAssignableFrom(classOf[CosineSimilarity]))
     assert(!classOf[CodegenFallback].isAssignableFrom(classOf[L2Distance]))
+    assert(!classOf[CodegenFallback].isAssignableFrom(classOf[DecimalCast]))
+    assert(!classOf[CodegenFallback].isAssignableFrom(classOf[DecimalMultiply]))
+    assert(!classOf[CodegenFallback].isAssignableFrom(classOf[DecimalSum]))
+    assert(!classOf[CodegenFallback].isAssignableFrom(classOf[Int128Decimal]))
   }
 
   private def withFactoryMode[A](mode: String)(body: => A): A = {

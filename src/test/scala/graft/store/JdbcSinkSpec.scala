@@ -1,13 +1,34 @@
 package graft.store
 
 import graft.SparkSpec
+import org.scalatest.BeforeAndAfterAll
 
-class JdbcSinkSpec extends SparkSpec {
+class JdbcSinkSpec extends SparkSpec with BeforeAndAfterAll {
 
   import spark.implicits._
 
+  private lazy val root = java.nio.file.Files.createTempDirectory("graft-derby")
+
+  // Embedded Derby writes derby.log into the working directory (the
+  // checkout) unless this is set before it boots; it boots on this spec's
+  // first connection and reads the property once.
+  private val derbyLog = "derby.stream.error.file"
+  private var prevDerbyLog: Option[String] = None
+
+  override def beforeAll(): Unit = {
+    super.beforeAll()
+    prevDerbyLog = sys.props.get(derbyLog)
+    sys.props(derbyLog) = root.resolve("derby.log").toString
+  }
+
+  override def afterAll(): Unit =
+    try prevDerbyLog match {
+      case Some(v) => sys.props(derbyLog) = v
+      case None => sys.props -= derbyLog
+    } finally super.afterAll()
+
   private def freshUrl(): String = {
-    val dir = java.nio.file.Files.createTempDirectory("graft-derby").toString
+    val dir = java.nio.file.Files.createTempDirectory(root, "db").toString
     s"jdbc:derby:$dir/gamesdb;create=true"
   }
 

@@ -84,4 +84,16 @@ class LocalFsSpec extends SparkSpec {
     intercept[FileNotFoundException](
       FileContext.getLocalFSFileContext(conf).getFileLinkStatus(missing))
   }
+
+  test("a scratch dir's tree delete removes a populated store") {
+    val dir = LocalFs.scratchDir("graft-localfs-scratch")
+    spark.range(3).selectExpr("id", "id % 2 AS k").write.partitionBy("k")
+      .parquet(dir.resolve("store").toString)
+    assert(Files.list(dir.resolve("store")).count() > 1)
+    // what deleteOnExit did: File.delete refuses a directory with contents
+    assert(!dir.toFile.delete())
+    LocalFs.deleteTree(dir)
+    assert(!Files.exists(dir))
+    LocalFs.deleteTree(dir) // already gone: a no-op
+  }
 }
