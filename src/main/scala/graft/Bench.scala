@@ -271,7 +271,7 @@ object Bench {
     if (n <= 0) return """{"skipped":true}""" // growth probes time batch only
     val sessions = 64
     val base = 1700000000000L
-    def tmp(p: String) = java.nio.file.Files.createTempDirectory(p).toString
+    def tmp(p: String) = store.LocalFs.scratchDir(p).toString
     def r1(x: Double): Double = math.round(x * 10.0) / 10.0
     // a leg's compiles: the JVM-wide counters' deltas since `from`
     def counters(): (Long, Long) = (compileCount(), compileNanos())
@@ -478,7 +478,7 @@ object Bench {
     */
   private def quietRootLogger(): Unit =
     try {
-      val props = java.nio.file.Files.createTempFile("graft-bench-log4j2", ".properties")
+      val props = store.LocalFs.scratchDir("graft-bench-log4j2").resolve("log4j2.properties")
       java.nio.file.Files.write(props,
         """rootLogger.level = error
           |appender.console.type = Console

@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow, TernaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -126,23 +125,9 @@ object ArgminL2 {
     StructField("cid", IntegerType, nullable = false),
     StructField("dist2", DoubleType, nullable = false)))
 
-  def build(exprs: Seq[Expression]): Expression = exprs match {
-    case Seq(v, ids, flat) => ArgminL2(v, ids, flat)
-    case _ => throw new IllegalArgumentException("argmin_l2(v, cids, cvs_flat)")
-  }
-
-  /** Idempotent (see MinHashSignature.register). */
-  def register(spark: org.apache.spark.sql.SparkSession): Unit =
-    if (!spark.sessionState.functionRegistry
-        .functionExists(FunctionIdentifier("argmin_l2")))
-      spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-        "argmin_l2", build, "built-in")
-
   /** Column helper built from Catalyst expressions (Cols bridge). */
-  def argmin_l2(spark: org.apache.spark.sql.SparkSession, vCol: String,
-      cidsCol: String, cvsFlatCol: String): org.apache.spark.sql.Column = {
-    register(spark)
+  def argmin_l2(vCol: String, cidsCol: String,
+      cvsFlatCol: String): org.apache.spark.sql.Column =
     Cols.column(ArgminL2(Cols.expression(vCol), Cols.expression(cidsCol),
       Cols.expression(cvsFlatCol)))
-  }
 }

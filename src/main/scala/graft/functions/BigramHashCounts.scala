@@ -1,8 +1,7 @@
 package graft.functions
 
-import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.Column
+import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
@@ -25,93 +24,57 @@ import org.apache.spark.unsafe.types.UTF8String
   * full exchange plus a 10M-row localCheckpoint (the r17 decomposition
   * probe: that stage alone was ~3.2 s of q80's 6.1 s wall at 10×). A
   * document's transition counts are a function of the document alone:
-  * this expression walks the token spans once, hashes each bigram span
-  * and its prev-token span with [[Hash64]] (zero-copy views over the
-  * text bytes), counts duplicates in a small per-doc map, and emits a
-  * compact struct array. Downstream `explode` reproduces the old
+  * this expression walks the token spans once ([[TokenSpans]]), hashes
+  * each bigram span and its prev-token span with [[Hash64]] (zero-copy
+  * views over the text bytes), counts duplicates in a small per-doc
+  * map, and emits a compact struct array. Downstream `explode` reproduces the old
   * relation with NO exchange: the target-side model aggregates shuffle
   * only distinct-bigram rows of the TARGET slice, and the per-doc score
   * sum collapses map-side because a doc's rows are contiguous.
   *
   * hp/hb values are bit-identical to the compositional hash64 chain
-  * (BigramHashCountsSpec pins the exploded comparison), so the q80
+  * (GramCountsSpec pins the exploded comparison), so the q80
   * scoring joins can mix this with hash64-derived model keys, and the
   * DuckDB oracle keeps its string-keyed SQL (the q47/q78 injective-hash
   * class, argued at the q80 call site).
   *
   * Semantics: null text → null; < 2 tokens → empty array (the explode
-  * drops the doc, matching the old `size >= 2` filter); token split is
-  * `split(text, ' ')` with Spark's -1 limit. Output order is first
+  * drops the doc, matching the old `size >= 2` filter); tokens as
+  * `split(text, ' ')` ([[TokenSpans]]). Output order is first
   * occurrence — irrelevant downstream (consumed by explode+aggregate).
   */
-case class BigramHashCounts(child: Expression) extends UnaryExpression {
+case class BigramHashCounts(child: Expression) extends TextKernel {
 
   override def dataType: DataType = BigramHashCounts.Schema
 
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    child.dataType match {
-      case StringType =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case other =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-          s"bigram_hash_counts expects string, got ${other.sql}")
-    }
-
-  /** One pass; shared by interpreted eval and generated code. */
   def compute(text: UTF8String): ArrayData = {
-    val bytes = text.getBytes // copies only when the UTF8String is offset
-    val len = bytes.length
-    var m = 1
-    var i = 0
-    while (i < len) { if (bytes(i) == ' ') m += 1; i += 1 }
-    if (m < 2) return new GenericArrayData(Array.empty[Any])
-    val starts = new Array[Int](m)
-    starts(0) = 0
-    var t = 1
-    i = 0
-    while (i < len) {
-      if (bytes(i) == ' ') { starts(t) = i + 1; t += 1 }
-      i += 1
-    }
+    val t = new TokenSpans(text)
+    val m = t.spans(2)
     // distinct (hp, hb, cnt) via a per-doc map keyed on hb (equal hb ⇒
     // equal bigram ⇒ equal hp, modulo the accepted 64-bit collision class)
-    val hpArr = new Array[Long](m - 1)
-    val hbArr = new Array[Long](m - 1)
-    val cntArr = new Array[Long](m - 1)
+    val hp = new Array[Long](m)
+    val hb = new Array[Long](m)
+    val cnt = new Array[Long](m)
     val idx = new java.util.HashMap[java.lang.Long, Integer](m * 2)
     var k = 0
     var s = 0
-    while (s < m - 1) {
-      val from = starts(s)
-      val until = if (s + 2 < m) starts(s + 2) - 1 else len
-      val hb = Hash64.hash(UTF8String.fromBytes(bytes, from, until - from))
-      val prior = idx.get(hb)
-      if (prior == null) {
-        val pUntil = if (s + 1 < m) starts(s + 1) - 1 else len
-        hpArr(k) = Hash64.hash(UTF8String.fromBytes(bytes, from, pUntil - from))
-        hbArr(k) = hb
-        cntArr(k) = 1L
-        idx.put(hb, k)
+    while (s < m) {
+      val h = Hash64.hash(t.utf8(s, 2))
+      val prior = idx.get(h)
+      if (prior != null) cnt(prior) += 1L
+      else {
+        hp(k) = Hash64.hash(t.utf8(s, 1))
+        hb(k) = h
+        cnt(k) = 1L
+        idx.put(h, k)
         k += 1
-      } else cntArr(prior) += 1L
+      }
       s += 1
     }
     val out = new Array[Any](k)
-    i = 0
-    while (i < k) {
-      out(i) = new GenericInternalRow(Array[Any](hpArr(i), hbArr(i), cntArr(i)))
-      i += 1
-    }
+    s = 0
+    while (s < k) { out(s) = new GenericInternalRow(Array[Any](hp(s), hb(s), cnt(s))); s += 1 }
     new GenericArrayData(out)
-  }
-
-  override def nullSafeEval(text: Any): Any =
-    compute(text.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("bigramHashCountsExpr", this,
-      classOf[BigramHashCounts].getName)
-    nullSafeCodeGen(ctx, ev, t => s"${ev.value} = $ref.compute($t);")
   }
 
   override def prettyName: String = "bigram_hash_counts"
@@ -127,19 +90,9 @@ object BigramHashCounts {
     StructField("hb", LongType, nullable = false),
     StructField("cnt", LongType, nullable = false))), containsNull = false)
 
-  /** Idempotent (see MinHashSignature.register). */
-  def register(spark: org.apache.spark.sql.SparkSession): Unit =
-    if (!spark.sessionState.functionRegistry
-        .functionExists(FunctionIdentifier("bigram_hash_counts")))
-      spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-        "bigram_hash_counts", exprs => BigramHashCounts(exprs.head), "built-in")
-
   /** Column helper built directly from the Catalyst expression (Cols
     * bridge — no SQL string interpolation, r13 ADVICE convention).
     */
-  def bigram_hash_counts(spark: org.apache.spark.sql.SparkSession,
-      textCol: String): org.apache.spark.sql.Column = {
-    register(spark)
+  def bigram_hash_counts(textCol: String): Column =
     Cols.column(BigramHashCounts(Cols.expression(textCol)))
-  }
 }

@@ -1,10 +1,7 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
-import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.BloomFilterMightContain
-import org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate
-import org.apache.spark.sql.functions.call_function
+import org.apache.spark.sql.Column
+import org.apache.spark.sql.functions.{call_function, lit}
 
 /** SQL surface over Catalyst's native bloom-filter pair — the same
   * expressions Spark's runtime row-level filtering injects
@@ -27,50 +24,15 @@ import org.apache.spark.sql.functions.call_function
   *
   * This is intentionally NOT a reimplementation: the sketch layout,
   * hashing, and eval come from `org.apache.spark.util.sketch.BloomFilter`
-  * via the shipped expressions; graft only registers names for them.
+  * via the shipped expressions; graft only names them (GraftExtensions).
   */
 object BloomFunctions {
 
-  /** Arity-dispatching builders — the ONE definition shared by [[register]]
-    * (temp-function path) and GraftExtensions.injectFunction (session
-    * extension path), so the two registration routes cannot drift.
-    */
-  val aggBuilder: Seq[org.apache.spark.sql.catalyst.expressions.Expression] =>
-      org.apache.spark.sql.catalyst.expressions.Expression = {
-    case Seq(child) => new BloomFilterAggregate(child)
-    case Seq(child, items) => new BloomFilterAggregate(child, items)
-    case Seq(child, items, bits) => new BloomFilterAggregate(child, items, bits)
-    case other => throw new IllegalArgumentException(
-      s"bloom_agg(xxhash64(key) [, estItems [, numBits]]), got ${other.size} args")
-  }
-  val containsBuilder: Seq[org.apache.spark.sql.catalyst.expressions.Expression] =>
-      org.apache.spark.sql.catalyst.expressions.Expression = {
-    case Seq(filter, value) => BloomFilterMightContain(filter, value)
-    case other => throw new IllegalArgumentException(
-      s"bloom_contains(filter, xxhash64(key)), got ${other.size} args")
-  }
-
-  /** Idempotent (see MinHashSignature.register). */
-  def register(spark: SparkSession): Unit = {
-    val reg = spark.sessionState.functionRegistry
-    if (!reg.functionExists(FunctionIdentifier("bloom_agg")))
-      reg.createOrReplaceTempFunction("bloom_agg", aggBuilder, "built-in")
-    if (!reg.functionExists(FunctionIdentifier("bloom_contains")))
-      reg.createOrReplaceTempFunction("bloom_contains", containsBuilder, "built-in")
-  }
-
   /** Aggregate a column of XXH64 longs into one serialized bloom filter. */
-  def bloomAgg(spark: SparkSession, hashed: Column, estItems: Long,
-      numBits: Long): Column = {
-    register(spark)
-    call_function("bloom_agg", hashed,
-      org.apache.spark.sql.functions.lit(estItems),
-      org.apache.spark.sql.functions.lit(numBits))
-  }
+  def bloomAgg(hashed: Column, estItems: Long, numBits: Long): Column =
+    call_function("bloom_agg", hashed, lit(estItems), lit(numBits))
 
   /** Probe a (foldable) serialized filter with a column of XXH64 longs. */
-  def bloomContains(spark: SparkSession, filter: Column, hashed: Column): Column = {
-    register(spark)
+  def bloomContains(filter: Column, hashed: Column): Column =
     call_function("bloom_contains", filter, hashed)
-  }
 }

@@ -1,7 +1,6 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
@@ -110,19 +109,6 @@ case class CosineSimilarity(left: Expression, right: Expression)
 }
 
 object CosineSimilarity {
-  /** Idempotent (see MinHashSignature.register). */
-  def register(spark: org.apache.spark.sql.SparkSession): Unit =
-    if (!spark.sessionState.functionRegistry
-        .functionExists(FunctionIdentifier("cosine_similarity")))
-      spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-        "cosine_similarity",
-        exprs => CosineSimilarity(exprs(0), exprs(1)),
-        "built-in")
-
-  def cosine_similarity(spark: org.apache.spark.sql.SparkSession,
-      aCol: String, bCol: String): Column = {
-    register(spark)
-    Cols.column(
-      CosineSimilarity(Cols.expression(aCol), Cols.expression(bCol)))
-  }
+  def cosine_similarity(aCol: String, bCol: String): Column =
+    Cols.column(CosineSimilarity(Cols.expression(aCol), Cols.expression(bCol)))
 }

@@ -1,8 +1,7 @@
 package graft.functions
 
-import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression, UnsafeArrayData}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.Column
+import org.apache.spark.sql.catalyst.expressions.{Expression, UnsafeArrayData}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
@@ -26,9 +25,9 @@ import org.apache.spark.unsafe.types.UTF8String
   * a full exchange — the r17 decomposition probe measured that count
   * shuffle as half of q79's wall at 10×. A document's gram→bucket counts
   * are a function of the document alone, so they belong scan-side: this
-  * expression walks token spans (the [[TextShingles]] byte-span
-  * identity), MD5-buckets each unigram/bigram span in place
-  * ([[Md5Prefix32.hashBytes]] — no hex round-trip, no substring), and
+  * expression walks token spans ([[TokenSpans]]), MD5-buckets each
+  * unigram/bigram span in place ([[Md5Prefix32.hashBytes]] — no hex
+  * round-trip, no substring), and
   * emits one fixed-width vector per doc. Downstream, `posexplode` +
   * `filter(cnt > 0)` reproduces the old relation EXACTLY (a zero slot is
   * a gram-free bucket, which the old groupBy never emitted) with no
@@ -37,71 +36,36 @@ import org.apache.spark.unsafe.types.UTF8String
   * because a document's rows are contiguous after its own explode.
   *
   * Oracle parity: bucket ids and counts are bit-identical to the
-  * compositional md5 chain (DsirBucketCountsSpec pins the dense vector
+  * compositional md5 chain (GramCountsSpec pins the dense vector
   * against the exploded groupBy), so the DuckDB oracle keeps its
   * idiomatic substring(md5(..)) SQL untouched.
   *
-  * Semantics: null text → null; tokens are `split(text, ' ')` with
-  * Spark's -1 limit (empty tokens kept — the empty string has ONE
+  * Semantics: null text → null; tokens as `split(text, ' ')`
+  * ([[TokenSpans]]: empty tokens kept — the empty string has ONE
   * unigram, matching `string_split`), bigrams exist for docs with ≥ 2
   * tokens. Scale shape: per-row work is one MD5 per gram (the same MD5s
   * the old plan paid post-explode); output is b × 8 bytes regardless of
   * document length.
   */
-case class DsirBucketCounts(child: Expression, b: Int) extends UnaryExpression {
+case class DsirBucketCounts(child: Expression, b: Int) extends TextKernel {
   require(b >= 1, s"dsir_bucket_counts b must be >= 1, got $b")
 
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
 
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    child.dataType match {
-      case StringType =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case other =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-          s"dsir_bucket_counts expects string, got ${other.sql}")
-    }
-
-  /** One pass; shared by interpreted eval and generated code. */
   def compute(text: UTF8String): ArrayData = {
-    val bytes = text.getBytes // copies only when the UTF8String is offset
-    val len = bytes.length
-    var m = 1
-    var i = 0
-    while (i < len) { if (bytes(i) == ' ') m += 1; i += 1 }
-    val starts = new Array[Int](m)
-    starts(0) = 0
-    var t = 1
-    i = 0
-    while (i < len) {
-      if (bytes(i) == ' ') { starts(t) = i + 1; t += 1 }
-      i += 1
-    }
+    val t = new TokenSpans(text)
     val counts = new Array[Long](b)
-    var s = 0
-    while (s < m) { // unigrams: every token, empties included
-      val from = starts(s)
-      val until = if (s + 1 < m) starts(s + 1) - 1 else len
-      counts((Md5Prefix32.hashBytes(bytes, from, until - from) % b).toInt) += 1L
-      s += 1
-    }
-    s = 0
-    while (s < m - 1) { // bigrams: adjacent token spans incl. the joining space
-      val from = starts(s)
-      val until = if (s + 2 < m) starts(s + 2) - 1 else len
-      counts((Md5Prefix32.hashBytes(bytes, from, until - from) % b).toInt) += 1L
-      s += 1
+    var n = 1
+    while (n <= 2) { // unigrams (empties included), then bigrams
+      var s = 0
+      while (s < t.spans(n)) {
+        val from = t.starts(s)
+        counts((Md5Prefix32.hashBytes(t.bytes, from, t.end(s, n) - from) % b).toInt) += 1L
+        s += 1
+      }
+      n += 1
     }
     UnsafeArrayData.fromPrimitiveArray(counts)
-  }
-
-  override def nullSafeEval(text: Any): Any =
-    compute(text.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("dsirBucketCountsExpr", this,
-      classOf[DsirBucketCounts].getName)
-    nullSafeCodeGen(ctx, ev, t => s"${ev.value} = $ref.compute($t);")
   }
 
   override def prettyName: String = "dsir_bucket_counts"
@@ -112,26 +76,9 @@ case class DsirBucketCounts(child: Expression, b: Int) extends UnaryExpression {
 
 object DsirBucketCounts {
 
-  /** Shared by [[register]] and GraftExtensions — one builder, no drift. */
-  def build(exprs: Seq[Expression]): Expression = exprs match {
-    case Seq(t, k) =>
-      DsirBucketCounts(t, k.eval().asInstanceOf[Number].intValue())
-    case _ => throw new IllegalArgumentException("dsir_bucket_counts(text, b)")
-  }
-
-  /** Idempotent (see MinHashSignature.register). */
-  def register(spark: org.apache.spark.sql.SparkSession): Unit =
-    if (!spark.sessionState.functionRegistry
-        .functionExists(FunctionIdentifier("dsir_bucket_counts")))
-      spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-        "dsir_bucket_counts", build, "built-in")
-
   /** Column helper built directly from the Catalyst expression (Cols
     * bridge — no SQL string interpolation, r13 ADVICE convention).
     */
-  def dsir_bucket_counts(spark: org.apache.spark.sql.SparkSession,
-      textCol: String, b: Int): org.apache.spark.sql.Column = {
-    register(spark)
+  def dsir_bucket_counts(textCol: String, b: Int): Column =
     Cols.column(DsirBucketCounts(Cols.expression(textCol), b))
-  }
 }

@@ -1,7 +1,6 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.types._
@@ -139,18 +138,6 @@ object Hash64 {
       acc = acc * PolyMult + cp
     }
     fmix64(acc)
-  }
-
-  /** Idempotent (see MinHashSignature.register). */
-  def register(spark: org.apache.spark.sql.SparkSession): Unit =
-    if (!spark.sessionState.functionRegistry
-        .functionExists(FunctionIdentifier("hash64")))
-      spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-        "hash64", exprs => Hash64(exprs.head), "built-in")
-
-  def hash64(spark: org.apache.spark.sql.SparkSession, colName: String): Column = {
-    register(spark)
-    Cols.column(Hash64(Cols.expression(colName)))
   }
 
   /** Column-in, Column-out — for derived columns (q80 hashes the bigram

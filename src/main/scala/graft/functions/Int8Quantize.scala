@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
@@ -99,22 +98,7 @@ case class Int8Quantize(child: Expression) extends UnaryExpression {
 
 object Int8Quantize {
 
-  def build(exprs: Seq[Expression]): Expression = exprs match {
-    case Seq(v) => Int8Quantize(v)
-    case _ => throw new IllegalArgumentException("int8_quantize(v)")
-  }
-
-  /** Idempotent (see MinHashSignature.register). */
-  def register(spark: org.apache.spark.sql.SparkSession): Unit =
-    if (!spark.sessionState.functionRegistry
-        .functionExists(FunctionIdentifier("int8_quantize")))
-      spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-        "int8_quantize", build, "built-in")
-
   /** Column helper built from Catalyst expressions (Cols bridge). */
-  def int8_quantize(spark: org.apache.spark.sql.SparkSession,
-      vCol: String): org.apache.spark.sql.Column = {
-    register(spark)
+  def int8_quantize(vCol: String): org.apache.spark.sql.Column =
     Cols.column(Int8Quantize(Cols.expression(vCol)))
-  }
 }

@@ -1,7 +1,6 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
@@ -90,16 +89,6 @@ case class L2Distance(left: Expression, right: Expression)
 }
 
 object L2Distance {
-  /** Idempotent (see MinHashSignature.register). */
-  def register(spark: org.apache.spark.sql.SparkSession): Unit =
-    if (!spark.sessionState.functionRegistry
-        .functionExists(FunctionIdentifier("l2_sq")))
-      spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-        "l2_sq", exprs => L2Distance(exprs(0), exprs(1)), "built-in")
-
-  def l2_sq(spark: org.apache.spark.sql.SparkSession,
-      aCol: String, bCol: String): Column = {
-    register(spark)
+  def l2_sq(aCol: String, bCol: String): Column =
     Cols.column(L2Distance(Cols.expression(aCol), Cols.expression(bCol)))
-  }
 }

@@ -1,7 +1,6 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.types._
@@ -74,8 +73,8 @@ object Md5Prefix32 {
   }
 
   /** Same hash over a byte RANGE — the form the fused per-document gram
-    * counters ([[DsirBucketCounts]]) call per token span, with no
-    * UTF8String or substring materialized.
+    * counters ([[DsirBucketCounts]], [[SpanHash]]) call per token span,
+    * with no UTF8String or substring materialized.
     */
   def hashBytes(bytes: Array[Byte], off: Int, len: Int): Long = {
     val d = digest.get()
@@ -85,13 +84,6 @@ object Md5Prefix32 {
     ((out(0) & 0xffL) << 24) | ((out(1) & 0xffL) << 16) |
       ((out(2) & 0xffL) << 8) | (out(3) & 0xffL)
   }
-
-  /** Idempotent (see MinHashSignature.register). */
-  def register(spark: org.apache.spark.sql.SparkSession): Unit =
-    if (!spark.sessionState.functionRegistry
-        .functionExists(FunctionIdentifier("md5_prefix32")))
-      spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-        "md5_prefix32", exprs => Md5Prefix32(exprs.head), "built-in")
 
   /** Column-in, Column-out (no SQL string interpolation — Cols bridge). */
   def md5_prefix32(c: Column): Column =

@@ -1,8 +1,7 @@
 package graft.functions
 
-import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.Column
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
@@ -25,71 +24,31 @@ import org.apache.spark.unsafe.types.UTF8String
   * equals min over its support, so duplicate shingles cannot change any
   * signature slot.
   *
-  * Semantics: null text → null; fewer than 3 tokens → all-Long.MaxValue
-  * slots (empty shingle set — callers filter on token count). Token
-  * split is single-space, matching `split(text, ' ')` with Spark's -1
-  * limit (trailing empty tokens kept). Hashing matches MinHashSignature:
-  * hash64(shingle) once ([[Hash64]], the oracle-expressible base hash),
-  * then the same SplitMix64-seeded multiply-shift family.
+  * Each 3-gram is a byte span of the text ([[TokenSpans]]) hashed in
+  * place with `Hash64.hash(UTF8String)`: no decode, no split, no
+  * re-joined string. That form equals the `CharSequence` hash of the
+  * decoded 3-gram (Hash64Spec; TokenSpansSpec checks whole signatures
+  * against a decode-split-join reference on 4-byte code points).
+  *
+  * Semantics: null text → null; k ≥ 1 required; fewer than 3 tokens →
+  * all-Long.MaxValue slots (empty shingle set — callers filter on token
+  * count). Hashing matches MinHashSignature: hash64(shingle) once
+  * ([[Hash64]], the oracle-expressible base hash), then the same
+  * SplitMix64-seeded multiply-shift family ([[MinHashSignature.Slots]]).
   */
-case class MinHashFromText(child: Expression, numHashes: Int)
-    extends UnaryExpression {
+case class MinHashFromText(child: Expression, numHashes: Int) extends TextKernel {
+  require(numHashes >= 1, s"minhash_text numHashes must be >= 1, got $numHashes")
+
+  @transient private lazy val slots = new MinHashSignature.Slots(numHashes)
 
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
 
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    child.dataType match {
-      case StringType =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case other =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-          s"minhash_text expects string, got ${other.sql}")
-    }
-
-  @transient private lazy val (multA, addB) = {
-    val a = new Array[Long](numHashes)
-    val b = new Array[Long](numHashes)
-    var i = 0
-    while (i < numHashes) {
-      a(i) = MinHashSignature.splitmix64(2L * i) | 1L
-      b(i) = MinHashSignature.splitmix64(2L * i + 1L)
-      i += 1
-    }
-    (a, b)
-  }
-
-  /** One fused pass; shared by interpreted eval and generated code. */
   def compute(text: UTF8String): ArrayData = {
-    val mins = Array.fill(numHashes)(Long.MaxValue)
-    // identical token semantics to split(text, ' ') (Java limit -1)
-    val toks = text.toString.split(" ", -1)
-    val as = multA
-    val bs = addB
-    val sb = new java.lang.StringBuilder(64)
-    var i = 0
-    val last = toks.length - 3
-    while (i <= last) {
-      sb.setLength(0)
-      sb.append(toks(i)).append(' ').append(toks(i + 1)).append(' ')
-        .append(toks(i + 2))
-      val x = Hash64.hash(sb)
-      var h = 0
-      while (h < numHashes) {
-        val hv = as(h) * x + bs(h)
-        if (hv < mins(h)) mins(h) = hv
-        h += 1
-      }
-      i += 1
-    }
+    val t = new TokenSpans(text)
+    val mins = slots.empty()
+    var s = 0
+    while (s < t.spans(3)) { slots.fold(mins, Hash64.hash(t.utf8(s, 3))); s += 1 }
     new GenericArrayData(mins)
-  }
-
-  override def nullSafeEval(text: Any): Any =
-    compute(text.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("minhashTextExpr", this, classOf[MinHashFromText].getName)
-    nullSafeCodeGen(ctx, ev, t => s"${ev.value} = $ref.compute($t);")
   }
 
   override def prettyName: String = "minhash_text"
@@ -99,25 +58,6 @@ case class MinHashFromText(child: Expression, numHashes: Int)
 }
 
 object MinHashFromText {
-
-  /** Shared by [[register]] and GraftExtensions — one builder, no drift. */
-  def build(exprs: Seq[Expression]): Expression = exprs match {
-    case Seq(t) => MinHashFromText(t, 16)
-    case Seq(t, k) =>
-      MinHashFromText(t, k.eval().asInstanceOf[Number].intValue())
-    case _ => throw new IllegalArgumentException("minhash_text(text [, numHashes])")
-  }
-
-  /** Idempotent (see MinHashSignature.register). */
-  def register(spark: org.apache.spark.sql.SparkSession): Unit =
-    if (!spark.sessionState.functionRegistry
-        .functionExists(FunctionIdentifier("minhash_text")))
-      spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-        "minhash_text", build, "built-in")
-
-  def minhash_text(spark: org.apache.spark.sql.SparkSession,
-      textCol: String, numHashes: Int): org.apache.spark.sql.Column = {
-    register(spark)
+  def minhash_text(textCol: String, numHashes: Int): Column =
     Cols.column(MinHashFromText(Cols.expression(textCol), numHashes))
-  }
 }

@@ -1,7 +1,6 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
@@ -36,21 +35,9 @@ import org.apache.spark.sql.types._
   */
 case class MinHashSignature(child: Expression, numHashes: Int)
     extends UnaryExpression {
+  require(numHashes >= 1, s"minhash_signature numHashes must be >= 1, got $numHashes")
 
-  /** Per-slot multiply-shift constants, derived deterministically from the
-    * slot index (recomputed per executor; tiny).
-    */
-  @transient private lazy val (multA, addB) = {
-    val a = new Array[Long](numHashes)
-    val b = new Array[Long](numHashes)
-    var i = 0
-    while (i < numHashes) {
-      a(i) = MinHashSignature.splitmix64(2L * i) | 1L // odd multiplier
-      b(i) = MinHashSignature.splitmix64(2L * i + 1L)
-      i += 1
-    }
-    (a, b)
-  }
+  @transient private lazy val slots = new MinHashSignature.Slots(numHashes)
 
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
 
@@ -65,21 +52,11 @@ case class MinHashSignature(child: Expression, numHashes: Int)
 
   /** One fused pass; shared by interpreted eval and generated code. */
   def compute(a: ArrayData): ArrayData = {
-    val mins = Array.fill(numHashes)(Long.MaxValue)
-    val as = multA
-    val bs = addB
+    val mins = slots.empty()
     var i = 0
     val n = a.numElements()
     while (i < n) {
-      if (!a.isNullAt(i)) {
-        val x = Hash64.hash(a.getUTF8String(i))
-        var h = 0
-        while (h < numHashes) {
-          val hv = as(h) * x + bs(h)
-          if (hv < mins(h)) mins(h) = hv
-          h += 1
-        }
-      }
+      if (!a.isNullAt(i)) slots.fold(mins, Hash64.hash(a.getUTF8String(i)))
       i += 1
     }
     new GenericArrayData(mins)
@@ -108,31 +85,29 @@ object MinHashSignature {
     z ^ (z >>> 31)
   }
 
-  /** Shared by [[register]] and GraftExtensions — one builder, no drift. */
-  def build(exprs: Seq[Expression]): Expression = exprs match {
-    case Seq(arr) => MinHashSignature(arr, 16)
-    case Seq(arr, k) =>
-      MinHashSignature(arr, k.eval().asInstanceOf[Number].intValue())
-    case _ => throw new IllegalArgumentException(
-      "minhash_signature(arr [, numHashes])")
-  }
-
-  /** Register `minhash_signature(arr [, k])` in the session's function
-    * registry so it is usable from both SQL text and `expr(...)` columns
-    * (the public route to a custom Expression; Column's catalyst
-    * constructor is private[sql] in Spark 4). Idempotent: sessions built
-    * through GraftExtensions already have it — skip the re-registration
-    * (and its per-query "replaced a previously registered function" churn).
+  /** The k-slot family: per-slot multiply-shift constants derived
+    * deterministically from the slot index (odd a_h, b_h from SplitMix64;
+    * recomputed per executor, tiny), and the fold of one base hash into a
+    * signature. Shared by [[MinHashSignature]] and [[MinHashFromText]].
     */
-  def register(spark: org.apache.spark.sql.SparkSession): Unit =
-    if (!spark.sessionState.functionRegistry
-        .functionExists(FunctionIdentifier("minhash_signature")))
-      spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-        "minhash_signature", build, "built-in")
+  final class Slots(k: Int) {
+    private val multA = Array.tabulate(k)(h => splitmix64(2L * h) | 1L) // odd multiplier
+    private val addB = Array.tabulate(k)(h => splitmix64(2L * h + 1L))
 
-  def minhash_signature(spark: org.apache.spark.sql.SparkSession,
-      arrCol: String, numHashes: Int): Column = {
-    register(spark)
-    Cols.column(MinHashSignature(Cols.expression(arrCol), numHashes))
+    /** The signature of the empty set: every slot Long.MaxValue. */
+    def empty(): Array[Long] = Array.fill(k)(Long.MaxValue)
+
+    /** mins(h) = min(mins(h), a_h·x + b_h) for every slot h. */
+    def fold(mins: Array[Long], x: Long): Unit = {
+      var h = 0
+      while (h < k) {
+        val hv = multA(h) * x + addB(h)
+        if (hv < mins(h)) mins(h) = hv
+        h += 1
+      }
+    }
   }
+
+  def minhash_signature(arrCol: String, numHashes: Int): Column =
+    Cols.column(MinHashSignature(Cols.expression(arrCol), numHashes))
 }

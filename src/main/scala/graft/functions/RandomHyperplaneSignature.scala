@@ -1,7 +1,6 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
@@ -98,24 +97,6 @@ object RandomHyperplaneSignature {
     if ((z & 1L) == 1L) 1.0 else -1.0
   }
 
-  /** Idempotent (see MinHashSignature.register). */
-  def register(spark: org.apache.spark.sql.SparkSession): Unit =
-    if (!spark.sessionState.functionRegistry
-        .functionExists(FunctionIdentifier("rh_signature")))
-      spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-        "rh_signature",
-        exprs => exprs match {
-          case Seq(arr) => RandomHyperplaneSignature(arr, 16)
-          case Seq(arr, k) =>
-            RandomHyperplaneSignature(arr, k.eval().asInstanceOf[Number].intValue())
-          case _ => throw new IllegalArgumentException("rh_signature(arr [, k])")
-        },
-        "built-in")
-
-  def rh_signature(spark: org.apache.spark.sql.SparkSession,
-      arrCol: String, numPlanes: Int): Column = {
-    register(spark)
-    Cols.column(
-      RandomHyperplaneSignature(Cols.expression(arrCol), numPlanes))
-  }
+  def rh_signature(arrCol: String, numPlanes: Int): Column =
+    Cols.column(RandomHyperplaneSignature(Cols.expression(arrCol), numPlanes))
 }

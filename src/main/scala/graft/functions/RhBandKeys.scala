@@ -1,7 +1,6 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
@@ -100,25 +99,6 @@ case class RhBandKeys(child: Expression, bandBits: Int, numBands: Int)
 
 object RhBandKeys {
 
-  /** Idempotent (see MinHashSignature.register). */
-  def register(spark: org.apache.spark.sql.SparkSession): Unit =
-    if (!spark.sessionState.functionRegistry
-        .functionExists(FunctionIdentifier("rh_band_keys")))
-      spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-        "rh_band_keys",
-        exprs => exprs match {
-          case Seq(arr, bits, bands) =>
-            RhBandKeys(arr,
-              bits.eval().asInstanceOf[Number].intValue(),
-              bands.eval().asInstanceOf[Number].intValue())
-          case _ =>
-            throw new IllegalArgumentException("rh_band_keys(arr, bandBits, numBands)")
-        },
-        "built-in")
-
-  def rh_band_keys(spark: org.apache.spark.sql.SparkSession,
-      arrCol: String, bandBits: Int, numBands: Int): Column = {
-    register(spark)
+  def rh_band_keys(arrCol: String, bandBits: Int, numBands: Int): Column =
     Cols.column(RhBandKeys(Cols.expression(arrCol), bandBits, numBands))
-  }
 }

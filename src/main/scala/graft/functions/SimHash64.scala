@@ -1,7 +1,6 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
@@ -76,17 +75,5 @@ case class SimHash64(child: Expression)
 }
 
 object SimHash64 {
-  /** Idempotent (see MinHashSignature.register). */
-  def register(spark: org.apache.spark.sql.SparkSession): Unit =
-    if (!spark.sessionState.functionRegistry
-        .functionExists(FunctionIdentifier("simhash64")))
-      spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-        "simhash64",
-        exprs => SimHash64(exprs.head),
-        "built-in")
-
-  def simhash64(spark: org.apache.spark.sql.SparkSession, arrCol: String): Column = {
-    register(spark)
-    Cols.column(SimHash64(Cols.expression(arrCol)))
-  }
+  def simhash64(arrCol: String): Column = Cols.column(SimHash64(Cols.expression(arrCol)))
 }

@@ -1,6 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.catalyst.FunctionIdentifier
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
@@ -83,17 +83,9 @@ case class SlidingMin(child: Expression, w: Int) extends UnaryExpression {
 
 object SlidingMin {
 
-  /** Shared by [[register]] and GraftExtensions — one builder, no drift. */
-  def build(exprs: Seq[Expression]): Expression = exprs match {
-    case Seq(a, w) =>
-      SlidingMin(a, w.eval().asInstanceOf[Number].intValue())
-    case _ => throw new IllegalArgumentException("sliding_min(arr, w)")
-  }
-
-  /** Idempotent (see MinHashSignature.register). */
-  def register(spark: org.apache.spark.sql.SparkSession): Unit =
-    if (!spark.sessionState.functionRegistry
-        .functionExists(FunctionIdentifier("sliding_min")))
-      spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-        "sliding_min", build, "built-in")
+  /** Column helper built directly from the Catalyst expression (Cols
+    * bridge — no SQL string interpolation, r13 ADVICE convention).
+    */
+  def sliding_min(arrCol: String, w: Int): Column =
+    Cols.column(SlidingMin(Cols.expression(arrCol), w))
 }

@@ -1,31 +1,35 @@
 package graft.functions
 
-import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression, XxHash64Function}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
+import org.apache.spark.sql.Column
+import org.apache.spark.sql.catalyst.expressions.{Expression, UnsafeArrayData, XXH64}
+import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types._
+import org.apache.spark.unsafe.Platform
 import org.apache.spark.unsafe.types.UTF8String
 
-/** Fused shingle-and-hash: `text_shingle_hashes(text, n)` ≡
-  * `transform(text_shingles(text, n), x -> xxhash64(x))` — the XXH64
-  * (seed 42, Spark's `xxhash64`) of every n-token shingle, in ONE
-  * codegen'd pass that never materializes a shingle string.
+/** Fused shingle-and-hash: the 64-bit hash of every n-token shingle, in
+  * ONE codegen'd pass that never materializes a shingle string. One
+  * expression, three SQL names, one per [[SpanHash]]:
   *
-  * Why: shingle CONSUMERS that only ever hash (q58/q86's postings join,
-  * q78's window frequency) paid three avoidable costs in the
-  * string-array form — a UTF8String allocation per shingle position, an
-  * `array_distinct` comparing multi-token STRINGS byte-by-byte, and a
-  * shuffle/join carrying ~50-byte shingle strings where 8-byte longs
-  * determine the answer. The lambda form additionally dispatches through
-  * Catalyst's interpreted higher-order evaluator per element (the
-  * CodegenFallback trap: [[TextShingles]] scaladoc, r15 text_stats fix).
-  * Here each shingle is located as a byte span (the [[TextShingles]]
-  * structural identity: tokens split on single spaces re-join to exactly
-  * the original span) and hashed in place via the SAME function
-  * `xxhash64(col)` evaluates — `XxHash64Function.hash` at seed 42 — so a
-  * consumer can mix this expression with `xxhash64` over the string form
-  * and the values agree bit-for-bit (TextShingleHashesSpec pins it).
+  *   - `text_shingle_hashes(text, n)` ≡ `transform(text_shingles(text, n),
+  *     x -> xxhash64(x))` (q58/q86's postings join, q78's window
+  *     frequency, q36/q55's shingle sets);
+  *   - `text_shingle_hash64s(text, n)` ≡ `... x -> hash64(x)` (q48's
+  *     winnowing);
+  *   - `text_shingle_md5p32s(text, n)` ≡ `... x -> md5_prefix32(x)` (q81's
+  *     winnowing fingerprint hash).
+  *
+  * Why: shingle CONSUMERS that only ever hash paid three avoidable costs
+  * in the string-array form — a UTF8String allocation per shingle
+  * position, an `array_distinct` comparing multi-token STRINGS
+  * byte-by-byte, and a shuffle/join carrying ~50-byte shingle strings
+  * where 8-byte longs determine the answer. The lambda form additionally
+  * dispatches through Catalyst's interpreted higher-order evaluator per
+  * element (the CodegenFallback trap: [[TextShingles]] scaladoc, r15
+  * text_stats fix). Here each shingle is a byte span ([[TokenSpans]])
+  * hashed in place with the SAME function the scalar expression
+  * evaluates, so values are bit-identical to the lambda forms
+  * (TextShingleHashesSpec and TextShingleKernelHashesSpec pin them).
   *
   * The downstream join/dedup then works on longs; the report never
   * outputs a shingle, so correctness vs the string-keyed oracle rests on
@@ -35,91 +39,69 @@ import org.apache.spark.unsafe.types.UTF8String
   * postings lists, the q78-accepted divergence class).
   *
   * Semantics: null text → null; fewer than n tokens → empty array;
-  * duplicates kept (wrap in `array_distinct` — codegen'd, and cheaper
-  * over longs than strings — for set semantics).
+  * duplicates kept, order positional (winnowing needs both; wrap in
+  * `array_distinct` — codegen'd, and cheaper over longs than strings —
+  * for set semantics).
   */
-case class TextShingleHashes(child: Expression, n: Int) extends UnaryExpression {
-  require(n >= 1, s"text_shingle_hashes n must be >= 1, got $n")
+case class TextShingleHashes(child: Expression, n: Int, hash: SpanHash = SpanHash.XxHash64)
+    extends TextKernel {
+  require(n >= 1, s"${hash.name} n must be >= 1, got $n")
 
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
 
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    child.dataType match {
-      case StringType =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case other =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-          s"text_shingle_hashes expects string, got ${other.sql}")
-    }
-
-  /** One pass; shared by interpreted eval and generated code. Span logic
-    * identical to [[TextShingles.compute]]; the only difference is that a
-    * span is hashed (zero-copy UTF8String view) instead of materialized.
-    */
   def compute(text: UTF8String): ArrayData = {
-    val bytes = text.getBytes // copies only when the UTF8String is offset
-    val len = bytes.length
-    var m = 1
-    var i = 0
-    while (i < len) { if (bytes(i) == ' ') m += 1; i += 1 }
-    if (m < n) return new GenericArrayData(Array.empty[Any])
-    val starts = new Array[Int](m)
-    starts(0) = 0
-    var t = 1
-    i = 0
-    while (i < len) {
-      if (bytes(i) == ' ') { starts(t) = i + 1; t += 1 }
-      i += 1
-    }
-    val out = new Array[Any](m - n + 1)
+    val t = new TokenSpans(text)
+    val out = new Array[Long](t.spans(n))
     var s = 0
-    while (s <= m - n) {
-      val from = starts(s)
-      val until = if (s + n < m) starts(s + n) - 1 else len
-      out(s) = XxHash64Function.hash(
-        UTF8String.fromBytes(bytes, from, until - from), StringType, 42L)
-      s += 1
-    }
-    new GenericArrayData(out)
+    while (s < out.length) { out(s) = hash(t.bytes, t.starts(s), t.end(s, n)); s += 1 }
+    UnsafeArrayData.fromPrimitiveArray(out)
   }
 
-  override def nullSafeEval(text: Any): Any =
-    compute(text.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("textShingleHashesExpr", this,
-      classOf[TextShingleHashes].getName)
-    nullSafeCodeGen(ctx, ev, t => s"${ev.value} = $ref.compute($t);")
-  }
-
-  override def prettyName: String = "text_shingle_hashes"
+  override def prettyName: String = hash.name
 
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)
 }
 
+/** The per-span hash of [[TextShingleHashes]], named by its SQL function.
+  * An abstract method on a sealed kind, so the hot loop's call returns a
+  * primitive long: no boxing, no generic function object.
+  */
+sealed abstract class SpanHash(val name: String) {
+  def apply(bytes: Array[Byte], from: Int, until: Int): Long
+}
+
+object SpanHash {
+
+  /** Spark's `xxhash64` (XXH64, seed 42) over the span's bytes. */
+  case object XxHash64 extends SpanHash("text_shingle_hashes") {
+    def apply(bytes: Array[Byte], from: Int, until: Int): Long =
+      XXH64.hashUnsafeBytes(bytes, Platform.BYTE_ARRAY_OFFSET + from, until - from, 42L)
+  }
+
+  /** graft's [[Hash64]]. */
+  case object Hash64 extends SpanHash("text_shingle_hash64s") {
+    def apply(bytes: Array[Byte], from: Int, until: Int): Long =
+      graft.functions.Hash64.hash(UTF8String.fromBytes(bytes, from, until - from))
+  }
+
+  /** [[Md5Prefix32]]. */
+  case object Md5Prefix32 extends SpanHash("text_shingle_md5p32s") {
+    def apply(bytes: Array[Byte], from: Int, until: Int): Long =
+      graft.functions.Md5Prefix32.hashBytes(bytes, from, until - from)
+  }
+}
+
+/** Column helpers built directly from the Catalyst expression (Cols
+  * bridge — no SQL string interpolation, r13 ADVICE convention).
+  */
 object TextShingleHashes {
-
-  /** Shared by [[register]] and GraftExtensions — one builder, no drift. */
-  def build(exprs: Seq[Expression]): Expression = exprs match {
-    case Seq(t, k) =>
-      TextShingleHashes(t, k.eval().asInstanceOf[Number].intValue())
-    case _ => throw new IllegalArgumentException("text_shingle_hashes(text, n)")
-  }
-
-  /** Idempotent (see MinHashSignature.register). */
-  def register(spark: org.apache.spark.sql.SparkSession): Unit =
-    if (!spark.sessionState.functionRegistry
-        .functionExists(FunctionIdentifier("text_shingle_hashes")))
-      spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-        "text_shingle_hashes", build, "built-in")
-
-  /** Column helper built directly from the Catalyst expression (Cols
-    * bridge — no SQL string interpolation, r13 ADVICE convention).
-    */
-  def text_shingle_hashes(spark: org.apache.spark.sql.SparkSession,
-      textCol: String, n: Int): org.apache.spark.sql.Column = {
-    register(spark)
+  def text_shingle_hashes(textCol: String, n: Int): Column =
     Cols.column(TextShingleHashes(Cols.expression(textCol), n))
-  }
+
+  def text_shingle_hash64s(textCol: String, n: Int): Column =
+    Cols.column(TextShingleHashes(Cols.expression(textCol), n, SpanHash.Hash64))
+
+  def text_shingle_md5p32s(textCol: String, n: Int): Column =
+    Cols.column(TextShingleHashes(Cols.expression(textCol), n, SpanHash.Md5Prefix32))
 }

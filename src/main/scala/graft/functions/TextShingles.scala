@@ -1,8 +1,7 @@
 package graft.functions
 
-import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.Column
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
@@ -17,68 +16,25 @@ import org.apache.spark.unsafe.types.UTF8String
   * evaluator, which does not participate in whole-stage codegen — under
   * the round-13 full-materialization bench protocol it measured ~500 µs
   * per 128-token document, the dominant cost of the whole
-  * decontamination/heavy-hitter text family. This expression exploits a
-  * structural identity instead of re-joining anything: tokens are split
-  * on single spaces, so n tokens re-joined with single spaces are EXACTLY
-  * the original byte span from the start of token i to the end of token
-  * i+n−1 — including the empty tokens consecutive spaces produce. Each
-  * shingle is therefore a (near zero-copy) substring of the input, found
-  * by scanning for 0x20 bytes (a byte that cannot occur inside a
-  * multi-byte UTF-8 sequence). Duplicates are KEPT (bigram counting
-  * needs multiplicity); wrap in `array_distinct` (codegen'd) for set
-  * semantics.
+  * decontamination/heavy-hitter text family. Each shingle is instead a
+  * (near zero-copy) byte span of the input ([[TokenSpans]]). Duplicates
+  * are KEPT (bigram counting needs multiplicity); wrap in
+  * `array_distinct` (codegen'd) for set semantics.
   *
-  * Semantics: null text → null; n ≥ 1 required; token split matches
-  * `split(text, ' ')` with Spark's -1 limit (trailing empty tokens kept).
+  * Semantics: null text → null; n ≥ 1 required; tokens as
+  * `split(text, ' ')` ([[TokenSpans]]).
   */
-case class TextShingles(child: Expression, n: Int) extends UnaryExpression {
+case class TextShingles(child: Expression, n: Int) extends TextKernel {
   require(n >= 1, s"text_shingles n must be >= 1, got $n")
 
   override def dataType: DataType = ArrayType(StringType, containsNull = false)
 
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    child.dataType match {
-      case StringType =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case other =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-          s"text_shingles expects string, got ${other.sql}")
-    }
-
-  /** One pass; shared by interpreted eval and generated code. */
   def compute(text: UTF8String): ArrayData = {
-    val bytes = text.getBytes // copies only when the UTF8String is offset
-    val len = bytes.length
-    // token start offsets: 0 and every byte after a space
-    var m = 1
-    var i = 0
-    while (i < len) { if (bytes(i) == ' ') m += 1; i += 1 }
-    if (m < n) return new GenericArrayData(Array.empty[Any])
-    val starts = new Array[Int](m)
-    starts(0) = 0
-    var t = 1
-    i = 0
-    while (i < len) {
-      if (bytes(i) == ' ') { starts(t) = i + 1; t += 1 }
-      i += 1
-    }
-    val out = new Array[Any](m - n + 1)
+    val t = new TokenSpans(text)
+    val out = new Array[Any](t.spans(n))
     var s = 0
-    while (s <= m - n) {
-      val from = starts(s)
-      val until = if (s + n < m) starts(s + n) - 1 else len
-      out(s) = UTF8String.fromBytes(bytes, from, until - from)
-      s += 1
-    }
+    while (s < out.length) { out(s) = t.utf8(s, n); s += 1 }
     new GenericArrayData(out)
-  }
-
-  override def nullSafeEval(text: Any): Any =
-    compute(text.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("textShinglesExpr", this, classOf[TextShingles].getName)
-    nullSafeCodeGen(ctx, ev, t => s"${ev.value} = $ref.compute($t);")
   }
 
   override def prettyName: String = "text_shingles"
@@ -89,27 +45,10 @@ case class TextShingles(child: Expression, n: Int) extends UnaryExpression {
 
 object TextShingles {
 
-  /** Shared by [[register]] and GraftExtensions — one builder, no drift. */
-  def build(exprs: Seq[Expression]): Expression = exprs match {
-    case Seq(t, k) =>
-      TextShingles(t, k.eval().asInstanceOf[Number].intValue())
-    case _ => throw new IllegalArgumentException("text_shingles(text, n)")
-  }
-
-  /** Idempotent (see MinHashSignature.register). */
-  def register(spark: org.apache.spark.sql.SparkSession): Unit =
-    if (!spark.sessionState.functionRegistry
-        .functionExists(FunctionIdentifier("text_shingles")))
-      spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-        "text_shingles", build, "built-in")
-
   /** Column helper built directly from the Catalyst expression — no SQL
     * string interpolation, so qualified/backtick-needing column names work
     * and nothing is injectable (r13 ADVICE).
     */
-  def text_shingles(spark: org.apache.spark.sql.SparkSession,
-      textCol: String, n: Int): org.apache.spark.sql.Column = {
-    register(spark)
+  def text_shingles(textCol: String, n: Int): Column =
     Cols.column(TextShingles(Cols.expression(textCol), n))
-  }
 }

@@ -1,9 +1,8 @@
 package graft.functions
 
-import org.apache.spark.sql.catalyst.FunctionIdentifier
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow}
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -41,22 +40,13 @@ import org.apache.spark.unsafe.types.UTF8String
   *
   * Scale shape: per-row work is linear in the document's bytes; the only
   * allocations are zero-copy UTF8String token views feeding the
-  * uniqueness set. Stays inside whole-stage codegen via the same
-  * addReferenceObj bridge as [[TextShingles]].
+  * uniqueness set. Stays inside whole-stage codegen via the
+  * [[TextKernel]] bridge.
   */
 case class TextStats(child: Expression, stopwords: Seq[String])
-    extends UnaryExpression {
+    extends TextKernel {
 
   override def dataType: DataType = TextStats.Schema
-
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    child.dataType match {
-      case StringType =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case other =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-          s"text_stats expects string, got ${other.sql}")
-    }
 
   /** Compiled stopword set (UTF8String equality = byte equality). */
   @transient private lazy val stopSet: java.util.HashSet[UTF8String] = {
@@ -106,14 +96,6 @@ case class TextStats(child: Expression, stopwords: Seq[String])
       nTokens, seen.size, nStop, nSubword, nPunct, text.numChars()))
   }
 
-  override def nullSafeEval(text: Any): Any =
-    compute(text.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("textStatsExpr", this, classOf[TextStats].getName)
-    nullSafeCodeGen(ctx, ev, t => s"${ev.value} = $ref.compute($t);")
-  }
-
   override def prettyName: String = "text_stats"
 
   override protected def withNewChildInternal(newChild: Expression): Expression =
@@ -130,29 +112,9 @@ object TextStats {
     StructField("n_punct_chars", IntegerType, nullable = false),
     StructField("n_chars", IntegerType, nullable = false)))
 
-  /** Shared by [[register]] and GraftExtensions — one builder, no drift.
-    * SQL form: `text_stats(text, 'the', 'a', ...)` (stopwords as string
-    * literals; may be empty).
-    */
-  def build(exprs: Seq[Expression]): Expression = exprs match {
-    case t +: rest =>
-      TextStats(t, rest.map(_.eval().asInstanceOf[UTF8String].toString))
-    case _ => throw new IllegalArgumentException("text_stats(text, stopwords*)")
-  }
-
-  /** Idempotent (see MinHashSignature.register). */
-  def register(spark: org.apache.spark.sql.SparkSession): Unit =
-    if (!spark.sessionState.functionRegistry
-        .functionExists(FunctionIdentifier("text_stats")))
-      spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-        "text_stats", build, "built-in")
-
   /** Column helper built directly from the Catalyst expression (no SQL
     * string interpolation — Cols bridge, r13 ADVICE convention).
     */
-  def text_stats(spark: org.apache.spark.sql.SparkSession, textCol: String,
-      stopwords: Seq[String] = Nil): org.apache.spark.sql.Column = {
-    register(spark)
+  def text_stats(textCol: String, stopwords: Seq[String] = Nil): Column =
     Cols.column(TextStats(Cols.expression(textCol), stopwords))
-  }
 }

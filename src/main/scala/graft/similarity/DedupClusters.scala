@@ -90,15 +90,14 @@ object DedupClusters {
     // form ran `transform(shingles, xxhash64)` — a higher-order function,
     // interpreted per element — over string shingles that only existed to
     // be hashed. text_shingle_hashes emits the same XXH64 longs (the
-    // TextShingles structural identity, spec-pinned) in one codegen'd
+    // TokenSpans structural identity, spec-pinned) in one codegen'd
     // pass; distinct-then-hash ≡ hash-then-distinct under the family's
     // injective-hash argument.
-    val s = docs.sparkSession
     val sub = docs
       .filter(size(split(col("text"), " ")) >= 3)
       .select(col("doc_id"),
         array_sort(array_distinct(graft.functions.TextShingleHashes
-          .text_shingle_hashes(s, "text", 3))).as("sh"))
+          .text_shingle_hashes("text", 3))).as("sh"))
     val n = size(col("sh"))
     val prefixLen = (n - ceil(lit(threshold) * n) + 1).cast("int")
     val prefixPosts = sub

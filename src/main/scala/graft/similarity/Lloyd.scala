@@ -82,7 +82,7 @@ object Lloyd {
     val keep = points.columns.toSeq.map(col)
     group.fold(points.crossJoin(layout))(g => points.join(layout, Seq(g)))
       .select(keep :+ graft.functions.ArgminL2
-        .argmin_l2(s, vec, "cids", "cvs_flat").as("m"): _*)
+        .argmin_l2(vec, "cids", "cvs_flat").as("m"): _*)
       .select(keep ++ Seq(col("m.cid").as("cid"), col("m.dist2").as("dist2")): _*)
   }
 

@@ -44,8 +44,8 @@ object ProductQuantization {
   val PqTopK = 3      // q40's top-k convention
   val PqNQueries = 5  // q40's query set: vec_id < 5
 
-  private def l2sq6(s: SparkSession, a: String, b: String): Column =
-    round(graft.functions.L2Distance.l2_sq(s, a, b), 6)
+  private def l2sq6(a: String, b: String): Column =
+    round(graft.functions.L2Distance.l2_sq(a, b), 6)
 
   /** (vec_id, sub, sv): each vector split into M contiguous subvectors —
     * sublen derived in-row from the array length so Spark and the
@@ -85,7 +85,7 @@ object ProductQuantization {
       .select(col("vec_id").as("qid"), col("sub"), col("sv"))
     val dt = qsub.join(broadcast(cents), Seq("sub"))
       .select(col("qid"), col("sub"), col("cid"),
-        l2sq6(s, "sv", "cv").as("dd")) // |Q|·M·K rows, data-independent
+        l2sq6("sv", "cv").as("dd")) // |Q|·M·K rows, data-independent
     val w = Window.partitionBy("qid").orderBy(asc("adc"), asc("nid"))
     codes.join(broadcast(dt), Seq("sub", "cid"))
       .filter(col("qid") =!= col("vec_id"))

@@ -43,7 +43,7 @@ object QuantizedAnn {
   val q87Int8Ann: Q = (s, d) => {
     val emb = Tables.embeddings(s, d)
       .select(col("vec_id"),
-        graft.functions.Int8Quantize.int8_quantize(s, "embedding").as("qv"))
+        graft.functions.Int8Quantize.int8_quantize("embedding").as("qv"))
     val q = emb.filter(col("vec_id") < 5)
       .select(col("vec_id").as("qid"), col("qv").as("qa"))
     val cand = emb
@@ -60,7 +60,7 @@ object QuantizedAnn {
     cand.join(broadcast(q), col("qid") =!= col("nid"))
       .withColumn("cosine_q",
         round(graft.functions.CosineSimilarity
-          .cosine_similarity(s, "qa", "qb"), 6))
+          .cosine_similarity("qa", "qb"), 6))
       .withColumn("rank", row_number().over(w))
       .filter(col("rank") <= 3)
       .select("qid", "rank", "nid", "cosine_q")

@@ -30,9 +30,8 @@ object SimilarityQueries {
     * pair in interpreted HOF eval. Rounded 6dp BEFORE any ranking so Spark
     * and DuckDB rank identical values identically.
     */
-  private def cos6(s: org.apache.spark.sql.SparkSession,
-      aCol: String, bCol: String): org.apache.spark.sql.Column =
-    round(graft.functions.CosineSimilarity.cosine_similarity(s, aCol, bCol), 6)
+  private def cos6(aCol: String, bCol: String): org.apache.spark.sql.Column =
+    round(graft.functions.CosineSimilarity.cosine_similarity(aCol, bCol), 6)
 
   // ---------------------------------------------------------------------------
   // q40 — brute-force cosine top-k ANN baseline: 3 nearest neighbors for each
@@ -46,7 +45,7 @@ object SimilarityQueries {
     val cand = emb.select(col("vec_id").as("nid"), col("embedding").as("nvec"))
     val scored = cand.join(broadcast(q), col("qid") =!= col("nid"))
       .withColumn("cosine",
-        cos6(s, "qvec", "nvec"))
+        cos6("qvec", "nvec"))
     val w = Window.partitionBy("qid").orderBy(desc("cosine"), asc("nid"))
     scored.withColumn("rank", row_number().over(w))
       .filter(col("rank") <= 3)
@@ -90,7 +89,7 @@ object SimilarityQueries {
     // q04/q09, whose build sides grow with data and keep AQE's choice).
     a.join(broadcast(b), col("id_a") < col("id_b"))
       .withColumn("cosine",
-        cos6(s, "vec_a", "vec_b"))
+        cos6("vec_a", "vec_b"))
       .filter(col("cosine") >= 0.35)
       .select("id_a", "id_b", "cosine")
       .orderBy("id_a", "id_b")
@@ -135,7 +134,7 @@ object SimilarityQueries {
       dropText: Boolean = false): DataFrame = {
     val out = df.withColumn(outCol,
       array_distinct(graft.functions.TextShingles
-        .text_shingles(df.sparkSession, textCol, 3)))
+        .text_shingles(textCol, 3)))
     if (dropText) out.drop(textCol) else out
   }
 
@@ -225,8 +224,7 @@ object SimilarityQueries {
     docs
       .filter(size(split(col("text"), " ")) >= 3)
       .withColumn("minhash",
-        graft.functions.MinHashFromText.minhash_text(
-          docs.sparkSession, "text", NumHashes))
+        graft.functions.MinHashFromText.minhash_text("text", NumHashes))
 
   // Output is posexploded to (doc_id, slot, min_hash) scalars: the harness
   // sorts result rows with pandas, and a raw array<bigint> column is
@@ -296,7 +294,7 @@ object SimilarityQueries {
     Tables.documents(s, d)
       .withColumn("__toks", split(col("text"), " "))
       .select(col("doc_id"),
-        graft.functions.SimHash64.simhash64(s, "__toks").as("simhash"))
+        graft.functions.SimHash64.simhash64("__toks").as("simhash"))
       .orderBy("doc_id")
 
   // ---------------------------------------------------------------------------
@@ -350,7 +348,7 @@ object SimilarityQueries {
     val sigs = Tables.documents(s, d)
       .withColumn("__toks", split(col("text"), " "))
       .select(col("doc_id").as("vec_id"),
-        graft.functions.SimHash64.simhash64(s, "__toks").as("v"))
+        graft.functions.SimHash64.simhash64("__toks").as("v"))
       .localCheckpoint(eager = false)
     simhashVerified(bandedPairs(sigs, SimNumBands, SimBandBits) { (v, b) =>
       shiftrightunsigned(v, b * SimBandBits)
@@ -417,7 +415,7 @@ object SimilarityQueries {
     val sigs = Tables.documents(s, d)
       .withColumn("__toks", split(col("text"), " "))
       .select(col("doc_id").as("vec_id"),
-        graft.functions.SimHash64.simhash64(s, "__toks").as("v"))
+        graft.functions.SimHash64.simhash64("__toks").as("v"))
       .localCheckpoint(eager = false) // see q63: two reads, one simhash scan
     def block(v: Column, i: Int) =
       shiftrightunsigned(v, SimBlockOffsets(i))
@@ -447,9 +445,9 @@ object SimilarityQueries {
       .select(col("doc_id"),
         // fused shingle+hash (r17): replaces the interpreted
         // transform(shingles, xxhash64) lambda — same longs by the
-        // TextShingleHashes structural identity; set ops don't see order
+        // TokenSpans structural identity; set ops don't see order
         array_distinct(graft.functions.TextShingleHashes
-          .text_shingle_hashes(s, "text", 3)).as("shingles"))
+          .text_shingle_hashes("text", 3)).as("shingles"))
     val a = sub.select(col("doc_id").as("id_a"), col("shingles").as("sh_a"))
     val b = sub.select(col("doc_id").as("id_b"), col("shingles").as("sh_b"))
     // broadcast: bounded-by-predicate side (doc_id < 150) — the q41
@@ -492,7 +490,6 @@ object SimilarityQueries {
   private val WinnowWindow = 4
 
   val q48Winnowing: Q = (s, d) => {
-    graft.functions.SlidingMin.register(s)
     // ORDERED shingle hash64s via the fused native expression (r17:
     // duplicates kept, positional — winnowing needs both; the r16
     // `transform(__osh, x -> hash64(x))` lambda evaluated INTERPRETED per
@@ -501,11 +498,11 @@ object SimilarityQueries {
     // shuffle before the final orderBy. >= w hashed shingles ⇔ the old
     // >= 2+w token filter (n−2 shingles for n ≥ 3, none below).
     Tables.documents(s, d)
-      .withColumn("hs", graft.functions.TextShingleHash64s
-        .text_shingle_hash64s(s, "text", 3))
+      .withColumn("hs", graft.functions.TextShingleHashes
+        .text_shingle_hash64s("text", 3))
       .filter(size(col("hs")) >= WinnowWindow)
       .withColumn("fps",
-        array_distinct(expr(s"sliding_min(hs, $WinnowWindow)")))
+        array_distinct(graft.functions.SlidingMin.sliding_min("hs", WinnowWindow)))
       .select(col("doc_id"),
         size(col("hs")).as("n_shingles"),
         size(col("fps")).as("n_fingerprints"),
@@ -538,7 +535,7 @@ object SimilarityQueries {
     val wAssign = Window.partitionBy("vec_id").orderBy(desc("ccos"), asc("cid"))
     val scored = emb.join(broadcast(cents))
       .withColumn("ccos",
-        cos6(s, "embedding", "cvec"))
+        cos6("embedding", "cvec"))
       .withColumn("rk", row_number().over(wAssign))
     // database side: every vector lives in exactly ONE cell (rk = 1), so a
     // candidate meets a query through at most one probe — no dedup needed
@@ -553,7 +550,7 @@ object SimilarityQueries {
     assigned.join(broadcast(probes),
         col("cid") === col("qcid") && col("vec_id") =!= col("qid"))
       .withColumn("cosine",
-        cos6(s, "qvec", "embedding"))
+        cos6("qvec", "embedding"))
       .withColumn("rank", row_number().over(wRank))
       .filter(col("rank") <= 3)
       .select(col("qid"), col("rank"), col("vec_id").as("nid"), col("cosine"))
@@ -753,7 +750,7 @@ object SimilarityQueries {
       .select(col("vec_id"), col("cid"), col("v"))
       .localCheckpoint(eager = false)
     val dropped = semPairs(a.select(col("cid"), col("vec_id"), col("v")))
-      .withColumn("cosine", cos6(s, "va", "vb"))
+      .withColumn("cosine", cos6("va", "vb"))
       .filter(col("cosine") >= SemDedupTheta)
       .select(col("id_b").as("vec_id")).distinct()
     a.select(col("vec_id"), col("cid").as("cluster"))
@@ -883,7 +880,7 @@ object SimilarityQueries {
     val signed = emb.select(col("vec_id"),
       struct(col("embedding").as("e"),
         graft.functions.RandomHyperplaneSignature
-          .rh_signature(s, "embedding", 4 * bandBits).as("sg")).as("v"))
+          .rh_signature("embedding", 4 * bandBits).as("sg")).as("v"))
     // chunkSize 2048 (not the old 256): grid shuffle volume per hot
     // bucket is rows·(nchunks/2)·rowWidth per side, and the 100× replica
     // corpus concentrates 15-20k rows into single band buckets
@@ -893,7 +890,7 @@ object SimilarityQueries {
     bandedPairs(signed, 4, bandBits, chunkSize = 2048) { (v, b) =>
       shiftright(v.getField("sg"), b * bandBits).bitwiseAND(lit(mask))
     }
-      .withColumn("cosine", cos6(s, "va.e", "vb.e"))
+      .withColumn("cosine", cos6("va.e", "vb.e"))
       .filter(col("cosine") >= 0.35)
       .select("id_a", "id_b", "cosine")
   }
@@ -935,7 +932,7 @@ object SimilarityQueries {
     val keyed = Tables.embeddings(s, d)
       .select(col("vec_id"), struct(col("embedding").as("e"),
         graft.functions.RhBandKeys
-          .rh_band_keys(s, "embedding", bandBits, 4).as("sg")).as("v"))
+          .rh_band_keys("embedding", bandBits, 4).as("sg")).as("v"))
     bandedPairs(keyed, 4, bandBits, chunkSize = 2048) { (v, b) =>
       v.getField("sg").getItem(b)
     }.select(col("id_a"), col("id_b"), col("va"), col("vb"))
@@ -944,7 +941,7 @@ object SimilarityQueries {
   /** q93 — q76's aggregate tail over the wide-signature pipeline. */
   val q93RhWideStats: Q = (s, d) =>
     rhWideCandidates(s, d)
-      .withColumn("cosine", cos6(s, "va.e", "vb.e"))
+      .withColumn("cosine", cos6("va.e", "vb.e"))
       .filter(col("cosine") >= 0.35)
       .agg(
         count(lit(1)).as("n_pairs"),

@@ -191,7 +191,7 @@ object VectorIndex {
         embedded
           .withColumn("cell",
             graft.functions.RandomHyperplaneSignature
-              .rh_signature(spark, "embedding", CellBits))
+              .rh_signature("embedding", CellBits))
           .write.mode("append").partitionBy("cell").parquet(indexPath)
         chunks.agg(max("max_ts")).head().getString(0)
       }
@@ -256,7 +256,7 @@ object VectorIndex {
     val qRow = qEmbedded
       .withColumn("cell",
         graft.functions.RandomHyperplaneSignature
-          .rh_signature(spark, "embedding", CellBits))
+          .rh_signature("embedding", CellBits))
       .select("embedding", "cell").head()
     val qVec = qRow.getSeq[Double](0)
     val qCell = qRow.getLong(1)
@@ -266,7 +266,7 @@ object VectorIndex {
       .filter(col("cell").isin(cells: _*)) // partition-pruned cell read
       .withColumn("qvec", typedLit(qVec))
       .withColumn("cosine", round(
-        graft.functions.CosineSimilarity.cosine_similarity(spark, "qvec", "embedding"), 6))
+        graft.functions.CosineSimilarity.cosine_similarity("qvec", "embedding"), 6))
       .withColumn("rank", row_number().over(
         Window.orderBy(desc("cosine"), asc("session_id"), asc("chunk_id"))))
       .filter(col("rank") <= k)

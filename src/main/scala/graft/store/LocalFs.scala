@@ -109,7 +109,9 @@ object LocalFs {
   private val scratch = new java.util.concurrent.ConcurrentLinkedQueue[java.nio.file.Path]()
 
   private lazy val hook: Unit = Runtime.getRuntime.addShutdownHook(
-    new Thread(() => scratch.forEach(d => deleteTree(d)), "graft-scratch-cleanup"))
+    new Thread(() => scratch.forEach(d =>
+      try deleteTree(d) catch { case _: java.io.IOException | _: java.io.UncheckedIOException => () }),
+      "graft-scratch-cleanup"))
 
   /** A new directory under `java.io.tmpdir`, deleted with its contents at JVM exit. */
   def scratchDir(prefix: String): java.nio.file.Path = {

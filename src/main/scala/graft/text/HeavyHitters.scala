@@ -94,7 +94,7 @@ object HeavyHitters {
     */
   private def bigrams(s: org.apache.spark.sql.SparkSession, d: String) =
     Tables.documents(s, d).select(
-      explode(graft.functions.TextShingles.text_shingles(s, "text", 2))
+      explode(graft.functions.TextShingles.text_shingles("text", 2))
         .as("gram"))
 
   // ---------------------------------------------------------------------------

@@ -44,7 +44,7 @@ object TextQueries {
   val q32TokenCount: Q = (s, d) =>
     Tables.documents(s, d)
       .select(col("doc_id"), col("lang"),
-        graft.functions.TextStats.text_stats(s, "text").as("st"))
+        graft.functions.TextStats.text_stats("text").as("st"))
       .select(col("doc_id"), col("lang"),
         col("st.n_tokens").as("n_tokens"),
         col("st.n_chars").as("text_len"),
@@ -69,7 +69,7 @@ object TextQueries {
     val nChars = col("st.n_chars")
     Tables.documents(s, d)
       .select(col("doc_id"),
-        graft.functions.TextStats.text_stats(s, "text", stopwords).as("st"))
+        graft.functions.TextStats.text_stats("text", stopwords).as("st"))
       .select(col("doc_id"),
         nTok.as("n_tokens"),
         (col("st.n_stopword_tokens").cast("double") / nTok.cast("double"))
@@ -154,7 +154,7 @@ object TextQueries {
       .select(col("doc_id"),
         (n - 2).as("n_shingles"),
         size(array_distinct(graft.functions.TextShingleHashes
-          .text_shingle_hashes(s, "text", 3))).as("n_unique_shingles"))
+          .text_shingle_hashes("text", 3))).as("n_unique_shingles"))
       .orderBy("doc_id")
   }
   val q36Sql: String =
@@ -177,7 +177,7 @@ object TextQueries {
     Tables.documents(s, d)
       .select(col("doc_id"), col("lang"),
         graft.functions.TextStats
-          .text_stats(s, "text", Seq("the", "a", "of")).as("st"))
+          .text_stats("text", Seq("the", "a", "of")).as("st"))
       .select(col("doc_id"), col("lang"),
         enHits.as("en_stopword_hits"),
         (enHits.cast("double") / col("st.n_tokens").cast("double"))
@@ -276,7 +276,7 @@ object TextQueries {
     Tables.documents(s, d)
       .select(col("doc_id"),
         array_distinct(graft.functions.TextShingleHashes
-          .text_shingle_hashes(s, "text", n)).as("shingles"),
+          .text_shingle_hashes("text", n)).as("shingles"),
         (graft.hashBucket01(col("doc_id")) < TrainFraction).as("is_train"))
   }
 
@@ -346,14 +346,14 @@ object TextQueries {
     // old xxhash64(shingle-string), per the text_shingle_hashes contract
     val bf = trainShingles
       .agg(graft.functions.BloomFunctions
-        .bloomAgg(s, col("shingle"), BloomItems, BloomBits).as("bf"))
+        .bloomAgg(col("shingle"), BloomItems, BloomBits).as("bf"))
       .head.getAs[Array[Byte]]("bf") // bounded: numBits/8 bytes, data-independent
     val evalPostings = docs.filter(!col("is_train"))
       .select(col("doc_id"), explode(col("shingles")).as("shingle"))
     val prefiltered =
       if (bf == null) evalPostings.filter(lit(false)) // empty train side
       else evalPostings.filter(graft.functions.BloomFunctions
-        .bloomContains(s, lit(bf), col("shingle")))
+        .bloomContains(lit(bf), col("shingle")))
     val contaminated = prefiltered
       .join(trainShingles, Seq("shingle"), "left_semi")
       .select("doc_id").distinct()
@@ -431,7 +431,7 @@ object TextQueries {
         // values bit-equal to xxhash64(text_shingles(..)) by the
         // text_shingle_hashes contract
         posexplode(graft.functions.TextShingleHashes
-          .text_shingle_hashes(s, "text", w)).as(Seq("pos0", "h")))
+          .text_shingle_hashes("text", w)).as(Seq("pos0", "h")))
       .select(col("doc_id"), (col("pos0") + 1).cast("long").as("pos"), col("h"))
     val dup = wins
       .withColumn("occ", count(lit(1)).over(
@@ -537,7 +537,7 @@ object TextQueries {
     // extra job at the per-query floor
     val counts = docs.select(col("doc_id"), col("source"),
         graft.functions.DsirBucketCounts
-          .dsir_bucket_counts(s, "text", b).as("bc"))
+          .dsir_bucket_counts("text", b).as("bc"))
       .localCheckpoint(eager = false)
     // target source: a bounded driver action (1 row — the q62/q86 class),
     // read off the checkpointed counts (never a second parquet scan);
@@ -677,7 +677,7 @@ object TextQueries {
   val CurationSampleRate = 0.5
   val q59CurationPipeline: Q = (s, d) => {
     // one text_stats pass for the gate (same native kernel as q32/q33)
-    val st = graft.functions.TextStats.text_stats(s, "text", stopwords)
+    val st = graft.functions.TextStats.text_stats("text", stopwords)
     val quality = Tables.documents(s, d)
       .withColumn("__st", st)
       .filter(col("__st.n_tokens") >= QualityMinTokens &&
@@ -742,15 +742,15 @@ object TextQueries {
     // — and materialized a 2-gram struct array to hash after an explode.
     // The native expression hashes each n-token byte span in place with
     // the same XxHash64Function the scalar xxhash64(concat_ws(" ", ...))
-    // computed (the TextShingles structural identity, spec-pinned), so
+    // computed (the TokenSpans structural identity, spec-pinned), so
     // every downstream count is bit-identical.
     val g = Tables.documents(s, d)
       .withColumn("__t", toks)
       .filter(size(t) >= 2)
       .select(col("doc_id"), size(t).as("n_tokens"),
-        graft.functions.TextShingleHashes.text_shingle_hashes(s, "text", 2)
+        graft.functions.TextShingleHashes.text_shingle_hashes("text", 2)
           .as("g2"),
-        graft.functions.TextShingleHashes.text_shingle_hashes(s, "text", 3)
+        graft.functions.TextShingleHashes.text_shingle_hashes("text", 3)
           .as("g3"))
     val dup3 = when(size(col("g3")) > 0,
       round(lit(1.0) - size(array_distinct(col("g3"))).cast("double")
@@ -1135,7 +1135,7 @@ object TextQueries {
     // consumer (the tgt aggregate) materializes it — an eager barrier
     // here was a whole extra job at the per-query floor.
     val counts = docs.select(col("doc_id"), col("source"),
-        graft.functions.BigramHashCounts.bigram_hash_counts(s, "text").as("bgc"),
+        graft.functions.BigramHashCounts.bigram_hash_counts("text").as("bgc"),
         h64(substring_index(col("text"), " ", -1)).as("hl"))
       .localCheckpoint(eager = false)
     // target source: a bounded driver action (1 row — the q62/q86 class),
@@ -1297,7 +1297,6 @@ object TextQueries {
     */
   private[graft] def winnowFingerprints(s: org.apache.spark.sql.SparkSession,
       d: String): org.apache.spark.sql.DataFrame = {
-    graft.functions.SlidingMin.register(s)
     val k = WinnowK
     val w = WinnowW
     // fused shingle+md5-prefix hashes (r17): the r16 shape still ran a
@@ -1308,11 +1307,11 @@ object TextQueries {
     // m >= w shingles <=> len(tokens) >= k+w-1 (n-(k-1) grams for n >= k,
     // none below)
     Tables.documents(s, d)
-      .withColumn("hs", graft.functions.TextShingleMd5p32s
-        .text_shingle_md5p32s(s, "text", k))
+      .withColumn("hs", graft.functions.TextShingleHashes
+        .text_shingle_md5p32s("text", k))
       .filter(size(col("hs")) >= w)
       .select(col("doc_id"),
-        explode(array_distinct(expr(s"sliding_min(hs, $w)"))).as("h"))
+        explode(array_distinct(graft.functions.SlidingMin.sliding_min("hs", w))).as("h"))
   }
 
   val q81WinnowOverlap: Q = (s, d) => {

@@ -19,7 +19,7 @@ class EmptyTablesSpec extends AnyFunSuite {
   private lazy val spark = SparkSpec.session
 
   private lazy val emptyDir: String = {
-    val dir = java.nio.file.Files.createTempDirectory("graft-empty").toString
+    val dir = graft.store.LocalFs.scratchDir("graft-empty").toString
     val src = "/root/testdata/sf0.001"
     for (t <- Tables.all) {
       val schema = spark.read.parquet(s"$src/$t.parquet").schema

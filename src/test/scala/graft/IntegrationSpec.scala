@@ -33,8 +33,8 @@ class IntegrationSpec extends SparkSpec {
         } ++ g2.zipWithIndex.map { case (p, i) =>
           tick("s1", base + 1000L * (i + 10), "g2", i, p)
         }): _*)
-    val out = java.nio.file.Files.createTempDirectory("graft-e2e-out").toString
-    val ckpt = java.nio.file.Files.createTempDirectory("graft-e2e-ckpt").toString
+    val out = graft.store.LocalFs.scratchDir("graft-e2e-out").toString
+    val ckpt = graft.store.LocalFs.scratchDir("graft-e2e-ckpt").toString
     Ingest.start(input.toDS(), out, ckpt, Trigger.AvailableNow())
       .awaitTermination(60000)
 
@@ -77,8 +77,8 @@ class IntegrationSpec extends SparkSpec {
     val raw = SocketFrames.rawEvents(
       input.toDS().toDF("value", "arrival_ms"),
       lit("conn-e2e"), (col("arrival_ms") / 1000).cast("timestamp"))
-    val out = java.nio.file.Files.createTempDirectory("graft-wire-out").toString
-    val ckpt = java.nio.file.Files.createTempDirectory("graft-wire-ckpt").toString
+    val out = graft.store.LocalFs.scratchDir("graft-wire-out").toString
+    val ckpt = graft.store.LocalFs.scratchDir("graft-wire-ckpt").toString
     Ingest.start(raw, out, ckpt, Trigger.AvailableNow()).awaitTermination(60000)
 
     // tickCount 0 is phase evidence "game.active" (game start), so ticks 1

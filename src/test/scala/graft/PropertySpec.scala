@@ -176,7 +176,7 @@ class PropertySpec extends SparkSpec {
         .toDF("id", "shingles")
       val k = 8
       val gotMh = df.withColumn("sig",
-          graft.functions.MinHashSignature.minhash_signature(spark, "shingles", k))
+          graft.functions.MinHashSignature.minhash_signature("shingles", k))
         .select("id", "sig").collect()
         .map(r => r.getLong(0) -> r.getSeq[Long](1)).toMap
       docs.zipWithIndex.foreach { case (sh, i) =>
@@ -191,7 +191,7 @@ class PropertySpec extends SparkSpec {
         assert(gotMh(i.toLong) === expected, s"minhash doc $i")
       }
       val gotSh = df.withColumn("sig",
-          graft.functions.SimHash64.simhash64(spark, "shingles"))
+          graft.functions.SimHash64.simhash64("shingles"))
         .select("id", "sig").collect()
         .map(r => r.getLong(0) -> r.getLong(1)).toMap
       docs.zipWithIndex.foreach { case (sh, i) =>

@@ -15,7 +15,7 @@ class TablesSpec extends SparkSpec {
   import spark.implicits._
 
   test("memoized scan pins the listing; invalidate makes new files visible") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-tables").toString
+    val dir = graft.store.LocalFs.scratchDir("graft-tables").toString
     Seq(1, 2, 3).toDF("x").write.parquet(s"$dir/t.parquet")
     assert(Tables.load(spark, dir, "t").count() === 3)
     // same memoized plan comes back: the post-first-read arrival is invisible
@@ -30,7 +30,7 @@ class TablesSpec extends SparkSpec {
   }
 
   test("events reads TIMESTAMP(NANOS) and leaves the session conf as it found it") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-nanos").toString
+    val dir = graft.store.LocalFs.scratchDir("graft-nanos").toString
     val schema = MessageTypeParser.parseMessageType(
       "message events { required int64 ts (TIMESTAMP(NANOS,true)); required int64 id; }")
     val w = ExampleParquetWriter.builder(new Path(s"$dir/events.parquet/part-0.parquet"))

@@ -4,7 +4,7 @@ import graft.SparkSpec
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
 import org.apache.spark.sql.functions._
 
-/** The four native expressions are the per-row inner loop of 100 TB
+/** The native expressions are the per-row inner loop of 100 TB
   * dedup/ANN — they must participate in whole-stage codegen, not fall back
   * to interpreted eval with InternalRow boxing. CODEGEN_ONLY makes any
   * codegen failure throw instead of silently falling back, so these tests
@@ -18,6 +18,11 @@ class CodegenSpec extends SparkSpec {
   test("native expressions no longer declare CodegenFallback") {
     assert(!classOf[CodegenFallback].isAssignableFrom(classOf[MinHashSignature]))
     assert(!classOf[CodegenFallback].isAssignableFrom(classOf[MinHashFromText]))
+    assert(!classOf[CodegenFallback].isAssignableFrom(classOf[TextShingles]))
+    assert(!classOf[CodegenFallback].isAssignableFrom(classOf[TextShingleHashes]))
+    assert(!classOf[CodegenFallback].isAssignableFrom(classOf[BigramHashCounts]))
+    assert(!classOf[CodegenFallback].isAssignableFrom(classOf[DsirBucketCounts]))
+    assert(!classOf[CodegenFallback].isAssignableFrom(classOf[TextStats]))
     assert(!classOf[CodegenFallback].isAssignableFrom(classOf[SimHash64]))
     assert(!classOf[CodegenFallback].isAssignableFrom(classOf[RandomHyperplaneSignature]))
     assert(!classOf[CodegenFallback].isAssignableFrom(classOf[CosineSimilarity]))
@@ -40,30 +45,31 @@ class CodegenSpec extends SparkSpec {
   }
 
   private def allFour() = {
-    MinHashSignature.register(spark)
-    MinHashFromText.register(spark)
-    SimHash64.register(spark)
-    RandomHyperplaneSignature.register(spark)
-    CosineSimilarity.register(spark)
-    L2Distance.register(spark)
     Seq(
       (1L, Seq("a b c", "b c d", "c d e"), Seq(1.0f, 0.0f, 2.0f), Seq(1.0f, 1.0f, 2.0f)),
       (2L, Seq("x y z"), Seq(-1.0f, 3.0f, 0.5f), Seq(0.0f, 0.0f, 0.0f)),
       (3L, Seq.empty[String], Seq(0.25f, -0.5f, 1.5f), Seq(4.0f, 2.0f, -1.0f)))
       .toDF("id", "shingles", "vec_a", "vec_b")
+      .withColumn("txt", concat_ws(" 𝄞  ", col("shingles")))
       .selectExpr("id",
         "minhash_signature(shingles, 8) AS mh",
         "minhash_text(concat_ws(' ', shingles), 8) AS mht",
         "simhash64(shingles) AS sh",
         "rh_signature(vec_a, 16) AS rh",
         "cosine_similarity(vec_a, vec_b) AS cos",
-        "l2_sq(vec_a, vec_b) AS l2")
+        "l2_sq(vec_a, vec_b) AS l2",
+        // the text kernels (TextKernel), compared as whole values below
+        "text_shingles(txt, 2)", "text_shingle_hashes(txt, 2)",
+        "text_shingle_hash64s(txt, 3)", "text_shingle_md5p32s(txt, 1)",
+        "bigram_hash_counts(txt)", "dsir_bucket_counts(txt, 8)",
+        "text_stats(txt, 'a', 'x')")
       .orderBy("id")
       .collect()
       .map(r => (r.getLong(0), r.getSeq[Long](1), r.getSeq[Long](2),
         r.getLong(3), r.getLong(4),
         if (r.isNullAt(5)) null else r.getDouble(5),
-        if (r.isNullAt(6)) null else r.getDouble(6)))
+        if (r.isNullAt(6)) null else r.getDouble(6),
+        r.toSeq.drop(7)))
   }
 
   test("generated code compiles and matches interpreted eval") {
@@ -74,5 +80,7 @@ class CodegenSpec extends SparkSpec {
     assert(generated(1)._6 === null)
     // l2_sq known vector: (1,0,2) vs (1,1,2) -> 1.0
     assert(generated(0)._7 === 1.0)
+    // the text kernels produced values, not nulls, on every row
+    assert(generated.forall(_._8.forall(_ != null)))
   }
 }

@@ -2,8 +2,6 @@ package graft.functions
 
 import graft.SparkSpec
 import org.apache.spark.sql.functions._
-import org.scalacheck.Gen
-import org.scalacheck.rng.Seed
 
 /** The fused per-document gram counters equal the relational shapes they
   * replaced (explode + groupBy), element-for-element:
@@ -24,32 +22,12 @@ class GramCountsSpec extends SparkSpec {
 
   private val B = 64
 
-  private val textGen: Gen[String] = for {
-    k <- Gen.choose(0, 30)
-    toks <- Gen.listOfN(k, Gen.oneOf(
-      Gen.alphaNumStr.map(_.take(6)), Gen.const(""), Gen.const("héllo"),
-      Gen.const("the"), Gen.const("日本語"), Gen.const("a")))
-    lead <- Gen.oneOf("", " ", "  ")
-    trail <- Gen.oneOf("", " ")
-  } yield lead + toks.mkString(" ") + trail
-
-  private def texts(n: Int): Seq[String] = {
-    var seed = Seed(7171L)
-    val buf = List.newBuilder[String]
-    var done = 0
-    while (done < n) {
-      textGen.apply(Gen.Parameters.default.withSize(40), seed).foreach { a =>
-        buf += a; done += 1
-      }
-      seed = seed.next
-    }
-    buf.result()
-  }
+  private def texts(n: Int): Seq[String] = AdversarialText.texts(n, 7171L)
 
   test("dsir_bucket_counts equals the exploded md5-bucket groupBy") {
     val df = texts(80).zipWithIndex.map(_.swap).toDF("doc_id", "text")
     val toks = split(col("text"), " ")
-    val bi = TextShingles.text_shingles(spark, "text", 2)
+    val bi = TextShingles.text_shingles("text", 2)
     val relational = df
       .select(col("doc_id"), explode(concat(toks, bi)).as("gram"))
       .groupBy(col("doc_id"),
@@ -58,7 +36,7 @@ class GramCountsSpec extends SparkSpec {
       .collect()
       .map(r => (r.getInt(0), r.getLong(1)) -> r.getLong(2)).toMap
     val fused = df.select(col("doc_id"),
-      DsirBucketCounts.dsir_bucket_counts(spark, "text", B).as("bc"))
+      DsirBucketCounts.dsir_bucket_counts("text", B).as("bc"))
       .collect()
     for (r <- fused; (cnt, k) <- r.getSeq[Long](1).zipWithIndex) {
       val want = relational.getOrElse((r.getInt(0), k.toLong), 0L)
@@ -73,7 +51,7 @@ class GramCountsSpec extends SparkSpec {
     val df = texts(80).zipWithIndex.map(_.swap).toDF("doc_id", "text")
     val relational = df
       .select(col("doc_id"),
-        explode(TextShingles.text_shingles(spark, "text", 2)).as("bg"))
+        explode(TextShingles.text_shingles("text", 2)).as("bg"))
       .select(col("doc_id"),
         Hash64.hash64(substring_index(col("bg"), " ", 1)).as("hp"),
         Hash64.hash64(col("bg")).as("hb"))
@@ -82,7 +60,7 @@ class GramCountsSpec extends SparkSpec {
       .map(r => (r.getInt(0), r.getLong(1), r.getLong(2)) -> r.getLong(3))
       .toMap
     val fused = df.select(col("doc_id"),
-      BigramHashCounts.bigram_hash_counts(spark, "text").as("bgc"))
+      BigramHashCounts.bigram_hash_counts("text").as("bgc"))
       .select(col("doc_id"), explode(col("bgc")).as("e"))
       .select(col("doc_id"), col("e.hp"), col("e.hb"), col("e.cnt"))
       .collect()
@@ -97,8 +75,8 @@ class GramCountsSpec extends SparkSpec {
     val df = Seq((0, Some("")), (1, Some("solo")), (2, None),
       (3, Some("a a a"))).toDF("doc_id", "text")
     val rows = df.select(col("doc_id"),
-      DsirBucketCounts.dsir_bucket_counts(spark, "text", B).as("bc"),
-      BigramHashCounts.bigram_hash_counts(spark, "text").as("bgc"))
+      DsirBucketCounts.dsir_bucket_counts("text", B).as("bc"),
+      BigramHashCounts.bigram_hash_counts("text").as("bgc"))
       .collect().map(r => r.getInt(0) ->
         (if (r.isNullAt(1)) null else r.getSeq[Long](1),
           if (r.isNullAt(2)) null else r.getSeq[org.apache.spark.sql.Row](2)))
@@ -123,5 +101,10 @@ class GramCountsSpec extends SparkSpec {
         "bigram_hash_counts('x y') AS b").head
     assert(r.getSeq[Long](0).sum === 3L) // 2 unigrams + 1 bigram
     assert(r.getSeq[org.apache.spark.sql.Row](1).length === 1)
+    // every name GraftExtensions registers resolves on a new session
+    val fresh = spark.newSession()
+    for ((name, cls, _) <- GraftExtensions.Functions)
+      assert(fresh.catalog.getFunction(name).className === cls.getName, name)
+    assert(GraftExtensions.Functions.map(_._1).distinct.size === 21)
   }
 }

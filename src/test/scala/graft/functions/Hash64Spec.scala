@@ -42,7 +42,6 @@ class Hash64Spec extends SparkSpec {
   }
 
   test("known vectors through the registered SQL function (codegen path)") {
-    Hash64.register(spark)
     val inputs = knownVectors.map(_._1).toSeq
     val got = inputs.toDF("s").selectExpr("s", "hash64(s) AS h")
       .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
@@ -50,7 +49,6 @@ class Hash64Spec extends SparkSpec {
   }
 
   test("eval and codegen paths agree (CODEGEN_ONLY vs NO_CODEGEN)") {
-    Hash64.register(spark)
     val key = "spark.sql.codegen.factoryMode"
     val inputs = knownVectors.map(_._1).toSeq
     def run(): Seq[Long] =
@@ -76,7 +74,6 @@ class Hash64Spec extends SparkSpec {
   }
 
   test("null propagates; poly-31's constructible collisions are gone") {
-    Hash64.register(spark)
     val r = Seq((1, Option("x")), (2, Option.empty[String])).toDF("id", "s")
       .selectExpr("id", "hash64(s) AS h").orderBy("id").collect()
     assert(!r(0).isNullAt(1) && r(1).isNullAt(1))

@@ -28,7 +28,7 @@ class Int8QuantizeSpec extends SparkSpec {
     }
     val df = rows.toDF("id", "v")
       .select(col("id"),
-        Int8Quantize.int8_quantize(spark, "v").as("native"),
+        Int8Quantize.int8_quantize("v").as("native"),
         compositional(col("v")).as("composed"))
     val bad = df.filter(not(col("native") <=> col("composed"))).count()
     assert(bad == 0, s"$bad rows disagree with the compositional form")
@@ -40,7 +40,7 @@ class Int8QuantizeSpec extends SparkSpec {
       (2L, Array(1f, -1f, 0.5f)),
       (3L, Array.empty[Float])
     ).toDF("id", "v")
-      .select(col("id"), Int8Quantize.int8_quantize(spark, "v").as("q"))
+      .select(col("id"), Int8Quantize.int8_quantize("v").as("q"))
       .collect().map(r => r.getLong(0) -> r.getSeq[Byte](1)).toMap
     assert(df(1L) == Seq[Byte](0, 0, 0))
     assert(df(2L) == Seq[Byte](127, -127, 64))
@@ -71,11 +71,11 @@ class Int8QuantizeSpec extends SparkSpec {
       (i.toLong, Array.fill(64)((rnd.nextDouble() * 2 - 1).toFloat))
     }
     val q = rows.toDF("id", "v")
-      .select(col("id"), Int8Quantize.int8_quantize(spark, "v").as("qv"))
+      .select(col("id"), Int8Quantize.int8_quantize("v").as("qv"))
     val pairs = q.as("a").crossJoin(q.as("b"))
       .filter(col("a.id") < col("b.id"))
       .select(
-        CosineSimilarity.cosine_similarity(spark, "a.qv", "b.qv").as("fused"),
+        CosineSimilarity.cosine_similarity("a.qv", "b.qv").as("fused"),
         (aggregate(zip_with(col("a.qv"), col("b.qv"),
           (x, y) => x.cast("long") * y.cast("long")), lit(0L), _ + _)
           .cast("double") /

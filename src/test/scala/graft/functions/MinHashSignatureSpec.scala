@@ -13,7 +13,7 @@ class MinHashSignatureSpec extends SparkSpec {
       (2L, Seq("x y z")),
       (3L, Seq.empty[String])).toDF("id", "shingles")
     val native = df.withColumn("sig",
-      MinHashSignature.minhash_signature(spark, "shingles", 8))
+      MinHashSignature.minhash_signature("shingles", 8))
     val rows = native.select("id", "sig").collect()
       .map(r => r.getLong(0) -> r.getSeq[Long](1)).toMap
     assert(rows(1L).length === 8)
@@ -33,7 +33,7 @@ class MinHashSignatureSpec extends SparkSpec {
       (3L, shingles((1 to 50).map(i => s"z$i"))))
       .toDF("id", "shingles")
     val sig = df.withColumn("sig",
-        MinHashSignature.minhash_signature(spark, "shingles", 64))
+        MinHashSignature.minhash_signature("shingles", 64))
       .select("id", "sig").collect()
       .map(r => r.getLong(0) -> r.getSeq[Long](1)).toMap
     def agree(a: Seq[Long], b: Seq[Long]) =
@@ -43,7 +43,6 @@ class MinHashSignatureSpec extends SparkSpec {
   }
 
   test("registered function is callable from SQL text") {
-    MinHashSignature.register(spark)
     Seq((1L, Seq("a b c", "d e f"))).toDF("id", "shingles")
       .createOrReplaceTempView("mh_docs")
     val viaSql = spark.sql(
@@ -53,7 +52,24 @@ class MinHashSignatureSpec extends SparkSpec {
 
   test("null array yields null signature") {
     val df = spark.sql("SELECT CAST(NULL AS ARRAY<STRING>) AS shingles")
-    MinHashSignature.register(spark)
     assert(df.selectExpr("minhash_signature(shingles, 4)").head().isNullAt(0))
+  }
+
+  test("k < 1 fails on the driver before any task runs, naming the function") {
+    def messages(e: Throwable): String =
+      Iterator.iterate(e)(_.getCause).takeWhile(_ != null).map(_.getMessage).mkString(" | ")
+    for (k <- Seq(0, -1); fn <- Seq("minhash_text", "minhash_signature")) {
+      val arg = if (fn == "minhash_text") "'a b c'" else "array('a b c')"
+      var err: Throwable = null
+      val jobs = jobsOf {
+        err = intercept[Exception](spark.sql(s"SELECT $fn($arg, $k)").collect())
+      }
+      assert(jobs === 0L, s"$fn($k) ran a job")
+      assert(messages(err).contains(fn), messages(err))
+    }
+    assert(intercept[IllegalArgumentException](MinHashFromText.minhash_text("text", 0))
+      .getMessage.contains("minhash_text"))
+    assert(intercept[IllegalArgumentException](MinHashSignature.minhash_signature("sh", 0))
+      .getMessage.contains("minhash_signature"))
   }
 }

@@ -23,9 +23,9 @@ class RhBandKeysSpec extends SparkSpec {
       val mask = (1L << bandBits) - 1
       val rows = vecs(200, 64, seed = 41 + bandBits).toDF("vec_id", "embedding")
         .select(col("vec_id"),
-          RhBandKeys.rh_band_keys(spark, "embedding", bandBits, 4).as("keys"),
+          RhBandKeys.rh_band_keys("embedding", bandBits, 4).as("keys"),
           RandomHyperplaneSignature
-            .rh_signature(spark, "embedding", 4 * bandBits).as("sig"))
+            .rh_signature("embedding", 4 * bandBits).as("sig"))
         .collect()
       rows.foreach { r =>
         val keys = r.getSeq[Long](1)
@@ -43,10 +43,10 @@ class RhBandKeysSpec extends SparkSpec {
     val bandBits = 22 // 4×22 = 88 planes — impossible in one packed long
     val df = vecs(100, 64, seed = 7).toDF("vec_id", "embedding")
     val f = df.select(col("vec_id"),
-      RhBandKeys.rh_band_keys(spark, "embedding", bandBits, 4).as("keys"))
+      RhBandKeys.rh_band_keys("embedding", bandBits, 4).as("keys"))
     val d = df.select(col("vec_id"),
       transform(col("embedding"), _.cast("double")).as("v"))
-      .select(col("vec_id"), RhBandKeys.rh_band_keys(spark, "v", bandBits, 4).as("keys"))
+      .select(col("vec_id"), RhBandKeys.rh_band_keys("v", bandBits, 4).as("keys"))
     val fm = f.collect().map(r => r.getLong(0) -> r.getSeq[Long](1)).toMap
     val dm = d.collect().map(r => r.getLong(0) -> r.getSeq[Long](1)).toMap
     assert(fm == dm, "float input and its double cast must key identically")
@@ -78,7 +78,7 @@ class RhBandKeysSpec extends SparkSpec {
       (0L to 2L).map(i => i -> v(1)) ++
         (3L to 4L).map(i => i -> v(2)) ++
         (5L to 40L).map(i => i -> v(100 + i.toInt))
-    val dir = java.nio.file.Files.createTempDirectory("graft-rhwide").toString
+    val dir = graft.store.LocalFs.scratchDir("graft-rhwide").toString
     vecs.toDF("vec_id", "embedding")
       .write.mode("overwrite").parquet(s"$dir/embeddings.parquet")
     val cand = graft.similarity.SimilarityQueries

@@ -51,7 +51,6 @@ class SlidingMinSpec extends SparkSpec {
   }
 
   test("native sliding_min equals the compositional idiom") {
-    SlidingMin.register(spark)
     for (w <- Seq(1, 2, 4, 7)) {
       val df = samples(80).toDF("a")
       val got = df.select(
@@ -64,7 +63,6 @@ class SlidingMinSpec extends SparkSpec {
   }
 
   test("null array stays null; null element fails loudly; w >= 1 enforced") {
-    SlidingMin.register(spark)
     val rows = Seq(Some(Seq(1L, 2L)), None).toDF("a")
       .select(expr("sliding_min(a, 2)").as("m")).collect()
     assert(rows.exists(_.isNullAt(0)), "null in, null out")

@@ -2,8 +2,6 @@ package graft.functions
 
 import graft.SparkSpec
 import org.apache.spark.sql.functions._
-import org.scalacheck.Gen
-import org.scalacheck.rng.Seed
 
 /** text_shingle_hashes ≡ xxhash64 over text_shingles, element-for-element,
   * on adversarial strings — the bit-equality q86's bloom relies on (the
@@ -14,37 +12,12 @@ class TextShingleHashesSpec extends SparkSpec {
 
   import spark.implicits._
 
-  private val textGen: Gen[String] = for {
-    k <- Gen.choose(0, 30)
-    toks <- Gen.listOfN(k, Gen.oneOf(
-      Gen.alphaNumStr.map(_.take(6)), Gen.const(""), Gen.const("héllo"),
-      Gen.const("käse"), Gen.const("日本語"), Gen.const("a")))
-    lead <- Gen.oneOf("", " ", "  ")
-    trail <- Gen.oneOf("", " ")
-  } yield lead + toks.mkString(" ") + trail
-
-  private def forAll[A](gen: Gen[A], n: Int)(f: A => Unit): Unit = {
-    var seed = Seed(4242L)
-    var done = 0
-    while (done < n) {
-      gen.apply(Gen.Parameters.default.withSize(40), seed).foreach { a =>
-        f(a); done += 1
-      }
-      seed = seed.next
-    }
-  }
-
   test("fused hashes equal xxhash64(text_shingles) on adversarial text") {
     for (n <- Seq(1, 2, 3, 8)) {
-      val texts = {
-        val buf = List.newBuilder[String]
-        forAll(textGen, 60)(buf += _)
-        buf.result()
-      }
-      val df = texts.toDF("text")
+      val df = AdversarialText.texts(60, 4242L).toDF("text")
       val got = df.select(
-        TextShingleHashes.text_shingle_hashes(spark, "text", n).as("a"),
-        transform(TextShingles.text_shingles(spark, "text", n),
+        TextShingleHashes.text_shingle_hashes("text", n).as("a"),
+        transform(TextShingles.text_shingles("text", n),
           t => xxhash64(t)).as("b"))
         .collect()
       for (r <- got)
@@ -55,7 +28,7 @@ class TextShingleHashesSpec extends SparkSpec {
   test("null text stays null; short docs yield empty; duplicates kept") {
     val df = Seq(Some("a b a b a"), Some("one"), None).toDF("text")
     val rows = df.select(
-      TextShingleHashes.text_shingle_hashes(spark, "text", 2).as("h"),
+      TextShingleHashes.text_shingle_hashes("text", 2).as("h"),
       col("text")).collect()
     assert(rows.exists(_.isNullAt(0)), "null in, null out")
     val short = rows.find(r => !r.isNullAt(1) && r.getString(1) == "one").get

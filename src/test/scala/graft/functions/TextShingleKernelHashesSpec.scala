@@ -21,12 +21,10 @@ class TextShingleKernelHashesSpec extends SparkSpec {
 
   test("text_shingle_hash64s equals transform(text_shingles, hash64)") {
     import spark.implicits._
-    TextShingles.register(spark)
-    Hash64.register(spark)
     for (n <- Seq(1, 3, 4)) {
       val df = texts.toDF("text")
       val got = df.select(
-        TextShingleHash64s.text_shingle_hash64s(spark, "text", n)).collect()
+        TextShingleHashes.text_shingle_hash64s("text", n)).collect()
         .map(_.getSeq[Long](0))
       val want = df.select(
         expr(s"transform(text_shingles(text, $n), x -> hash64(x))")).collect()
@@ -37,12 +35,10 @@ class TextShingleKernelHashesSpec extends SparkSpec {
 
   test("text_shingle_md5p32s equals transform(text_shingles, md5_prefix32)") {
     import spark.implicits._
-    TextShingles.register(spark)
-    Md5Prefix32.register(spark)
     for (n <- Seq(1, 4)) {
       val df = texts.toDF("text")
       val got = df.select(
-        TextShingleMd5p32s.text_shingle_md5p32s(spark, "text", n)).collect()
+        TextShingleHashes.text_shingle_md5p32s("text", n)).collect()
         .map(_.getSeq[Long](0))
       val want = df.select(
         expr(s"transform(text_shingles(text, $n), x -> md5_prefix32(x))")).collect()
@@ -55,7 +51,7 @@ class TextShingleKernelHashesSpec extends SparkSpec {
     import spark.implicits._
     val df = Seq[Option[String]](None, Some("a b c d")).toDF("text")
     val got = df.select(
-      TextShingleHash64s.text_shingle_hash64s(spark, "text", 3)).collect()
+      TextShingleHashes.text_shingle_hash64s("text", 3)).collect()
     assert(got(0).isNullAt(0))
     assert(!got(1).isNullAt(0))
   }

@@ -2,12 +2,9 @@ package graft.functions
 
 import graft.SparkSpec
 import org.apache.spark.sql.functions._
-import org.scalacheck.Gen
-import org.scalacheck.rng.Seed
 
 /** text_shingles ≡ the compositional HOF idiom it replaces, on adversarial
-  * strings: multi-space runs (empty tokens), leading/trailing spaces,
-  * multi-byte UTF-8, single tokens, empty string. The oracle side of
+  * strings ([[AdversarialText]]). The oracle side of
   * q58/q85/q86 still runs the compositional SQL, so this spec is the
   * Spark-side half of the equivalence; the hash gate is the other half.
   */
@@ -15,45 +12,12 @@ class TextShinglesSpec extends SparkSpec {
 
   import spark.implicits._
 
-  private def compositional(n: Int) = {
-    val toks = split(col("text"), " ")
-    when(size(toks) >= n,
-      transform(sequence(lit(1), size(toks) - (n - 1)),
-        i => array_join(slice(toks, i, lit(n)), " ")))
-      .otherwise(array().cast("array<string>"))
-  }
-
-  private val textGen: Gen[String] = for {
-    k <- Gen.choose(0, 30)
-    toks <- Gen.listOfN(k, Gen.oneOf(
-      Gen.alphaNumStr.map(_.take(6)), Gen.const(""), Gen.const("héllo"),
-      Gen.const("käse"), Gen.const("日本語"), Gen.const("a")))
-    lead <- Gen.oneOf("", " ", "  ")
-    trail <- Gen.oneOf("", " ")
-  } yield lead + toks.mkString(" ") + trail
-
-  private def forAll[A](gen: Gen[A], n: Int)(f: A => Unit): Unit = {
-    var seed = Seed(1337L)
-    var done = 0
-    while (done < n) {
-      gen.apply(Gen.Parameters.default.withSize(40), seed).foreach { a =>
-        f(a); done += 1
-      }
-      seed = seed.next
-    }
-  }
-
   test("native shingles equal the compositional idiom on adversarial text") {
     for (n <- Seq(1, 2, 3, 8)) {
-      val texts = {
-        val buf = List.newBuilder[String]
-        forAll(textGen, 60)(buf += _)
-        buf.result()
-      }
-      val df = texts.toDF("text")
+      val df = AdversarialText.texts(60, 1337L).toDF("text")
       val got = df.select(
-        TextShingles.text_shingles(spark, "text", n).as("a"),
-        compositional(n).as("b"))
+        TextShingles.text_shingles("text", n).as("a"),
+        AdversarialText.compositional(col("text"), n).as("b"))
         .collect()
       for (r <- got)
         assert(r.getSeq[String](0) === r.getSeq[String](1),
@@ -63,7 +27,7 @@ class TextShinglesSpec extends SparkSpec {
 
   test("null text stays null; duplicates are kept") {
     val df = Seq(Some("a b a b a"), None).toDF("text")
-    val rows = df.select(TextShingles.text_shingles(spark, "text", 2).as("s"))
+    val rows = df.select(TextShingles.text_shingles("text", 2).as("s"))
       .collect()
     assert(rows.exists(_.isNullAt(0)), "null in, null out")
     val grams = rows.find(!_.isNullAt(0)).get.getSeq[String](0)

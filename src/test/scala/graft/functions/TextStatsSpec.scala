@@ -50,7 +50,7 @@ class TextStatsSpec extends SparkSpec {
         lit("[^A-Za-z0-9 ]"), lit(0))).as("n_punct_chars"),
       length(col("text")).as("n_chars")).collect()
     val got = df.select(col("text"),
-      TextStats.text_stats(spark, "text", stop).as("st"))
+      TextStats.text_stats("text", stop).as("st"))
       .select(col("text"), col("st.*")).collect()
     for ((e, g) <- expected.zip(got)) {
       assert(g.getString(0) === e.getString(0))
@@ -61,7 +61,6 @@ class TextStatsSpec extends SparkSpec {
   }
 
   test("null text yields null struct; SQL registration works") {
-    TextStats.register(spark)
     val r = spark.sql(
       "SELECT text_stats(t, 'the') AS st FROM VALUES ('the x'), (NULL) v(t)")
       .select(col("st.n_tokens"), col("st.n_stopword_tokens")).collect()
@@ -73,7 +72,7 @@ class TextStatsSpec extends SparkSpec {
     // range-backed input: a local Seq constant-folds to LocalTableScan
     val df = spark.range(1)
       .select(concat(lit("a b "), col("id").cast("string")).as("text"))
-      .select(TextStats.text_stats(spark, "text").as("st"))
+      .select(TextStats.text_stats("text").as("st"))
       .select(col("st.n_tokens"))
     val wsc = df.queryExecution.executedPlan.exists(
       _.isInstanceOf[org.apache.spark.sql.execution.WholeStageCodegenExec])

@@ -146,7 +146,7 @@ class MultimodalSpec extends SparkSpec {
   }
 
   test("media round-trips through parquet with binary column intact") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-media").toString
+    val dir = graft.store.LocalFs.scratchDir("graft-media").toString
     media.toDF().write.mode("overwrite").parquet(s"$dir/media.parquet")
     val back = spark.read.parquet(s"$dir/media.parquet").as[MediaRow]
       .collect().sortBy(_.media_id)

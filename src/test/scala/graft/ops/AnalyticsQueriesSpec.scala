@@ -19,7 +19,7 @@ class AnalyticsQueriesSpec extends SparkSpec {
     * second apart. Returns the table directory.
     */
   private def events(series: (Long, Seq[Double])*): String = {
-    val dir = java.nio.file.Files.createTempDirectory("graft-analytics").toString
+    val dir = graft.store.LocalFs.scratchDir("graft-analytics").toString
     val rows = series.flatMap { case (user, prices) =>
       prices.zipWithIndex.map { case (p, i) => (user, i, p) }
     }.zipWithIndex.map { case ((user, i, p), id) =>

@@ -19,7 +19,7 @@ class AsofOhlcSpec extends SparkSpec {
       .write.mode("overwrite").parquet(s"$dir/events.parquet")
 
   test("q67 as-of: latest prior quote wins; equal ts matches; no quote -> NULL") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-asof").toString
+    val dir = graft.store.LocalFs.scratchDir("graft-asof").toString
     events(dir,
       // user 1: quotes at 10:00 and 10:05; trades at 10:03 and 10:05
       (1L, "2024-01-01 10:00:00", 1L, "view", 5.0),
@@ -38,7 +38,7 @@ class AsofOhlcSpec extends SparkSpec {
   }
 
   test("q70 funnel: order matters — a click before any view does not advance") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-funnel").toString
+    val dir = graft.store.LocalFs.scratchDir("graft-funnel").toString
     events(dir,
       // user 1 completes in order: view < click < purchase -> stage 3
       (1L, "2024-01-01 10:00:00", 1L, "view", 0.0),
@@ -59,7 +59,7 @@ class AsofOhlcSpec extends SparkSpec {
   }
 
   test("q71 retention: cohort by signup week, offsets count distinct users") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-ret").toString
+    val dir = graft.store.LocalFs.scratchDir("graft-ret").toString
     events(dir,
       // user 1 signs up Mon 2024-01-01 week, active that week and +2 weeks
       (1L, "2024-01-02 10:00:00", 1L, "signup", 0.0),
@@ -80,7 +80,7 @@ class AsofOhlcSpec extends SparkSpec {
   }
 
   test("q68 ohlc: open/close by (ts, event_id) order; high/low over the bar") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-ohlc").toString
+    val dir = graft.store.LocalFs.scratchDir("graft-ohlc").toString
     events(dir,
       (10L, "2024-01-01 10:00:01", 1L, "click", 3.0),
       (11L, "2024-01-01 10:59:59", 2L, "click", 8.0),

@@ -40,7 +40,7 @@ class OrderStatisticsSpec extends SparkSpec {
   } yield vs
 
   private def write(vs: List[Double]): String = {
-    val dir = java.nio.file.Files.createTempDirectory("graft-os").toString
+    val dir = graft.store.LocalFs.scratchDir("graft-os").toString
     vs.zipWithIndex.map { case (v, i) => (i.toLong, v) }
       .toDF("event_id", "value")
       .withColumn("ts", lit("2026-01-01 00:00:00").cast("timestamp"))

@@ -25,7 +25,7 @@ class JsonRuleSpec extends SparkSpec {
   // LocalRelation projection eagerly and the optimized plan would show
   // neither form
   private lazy val fixturePath: String = {
-    val dir = java.nio.file.Files.createTempDirectory("graft-jsonrule").toString
+    val dir = graft.store.LocalFs.scratchDir("graft-jsonrule").toString
     Seq(
       (1L, """{"a": 1, "b": "two", "c": {"d": 3}}"""),
       (2L, """{"a": null, "b": "x"}"""),          // explicit null field

@@ -80,7 +80,7 @@ class DedupClustersSpec extends SparkSpec {
   }
 
   test("q55 shape: every doc labeled, exactly one representative per cluster") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-clusters").toString
+    val dir = graft.store.LocalFs.scratchDir("graft-clusters").toString
     val docs = Seq(
       (1L, "a b c d e f g h"),
       (2L, "a b c d e f g h"),      // dup of 1

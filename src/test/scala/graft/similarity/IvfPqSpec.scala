@@ -43,7 +43,7 @@ class IvfPqSpec extends SparkSpec {
       .partitionBy("qid").orderBy(asc("dist2"), asc("cid"))
     val probed = qv.crossJoin(broadcast(ccents))
       .withColumn("dist2",
-        round(graft.functions.L2Distance.l2_sq(spark, "v", "cv"), 6))
+        round(graft.functions.L2Distance.l2_sq("v", "cv"), 6))
       .withColumn("rk", row_number().over(w))
       .filter(col("rk") <= IvfPq.NProbe)
       .select("qid", "cid").collect()

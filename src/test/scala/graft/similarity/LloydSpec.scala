@@ -15,7 +15,7 @@ class LloydSpec extends SparkSpec {
   /** An embeddings table of random 8-dim vectors, one per id. */
   private def corpus(ids: Seq[Long]): String = {
     val r = new scala.util.Random(5)
-    val dir = java.nio.file.Files.createTempDirectory("graft-lloyd").toString
+    val dir = graft.store.LocalFs.scratchDir("graft-lloyd").toString
     ids.map(i => (i, Array.fill(8)(r.nextGaussian().toFloat)))
       .toDF("vec_id", "embedding")
       .write.mode("overwrite").parquet(s"$dir/embeddings.parquet")

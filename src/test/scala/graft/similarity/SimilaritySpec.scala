@@ -47,7 +47,7 @@ class SimilaritySpec extends SparkSpec {
       .map(r => r.getLong(0) -> r.getSeq[Long](1)).toMap
     val compositional = SimilarityQueries.withShingles(docs)
       .withColumn("minhash", graft.functions.MinHashSignature
-        .minhash_signature(spark, "shingles", 16))
+        .minhash_signature("shingles", 16))
       .select("doc_id", "minhash").collect()
       .map(r => r.getLong(0) -> r.getSeq[Long](1)).toMap
     assert(fused.keySet === compositional.keySet) // same >=3-token filter
@@ -60,7 +60,7 @@ class SimilaritySpec extends SparkSpec {
     val nearDup = (1 to 48).map(i => s"tok$i").mkString(" ") + " changedA changedB"
     val docs = Seq((1L, base), (2L, base), (3L, nearDup),
       (4L, (1 to 50).map(i => s"other$i").mkString(" "))).toDF("doc_id", "text")
-    val dir = java.nio.file.Files.createTempDirectory("graft-docs").toString
+    val dir = graft.store.LocalFs.scratchDir("graft-docs").toString
     docs.write.mode("overwrite").parquet(s"$dir/documents.parquet")
     val sig = SimilarityQueries.q44Simhash(spark, dir)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
@@ -75,7 +75,7 @@ class SimilaritySpec extends SparkSpec {
     val nearDup = (1 to 57).map(i => s"tok$i").mkString(" ") + " x y z"
     val docs = Seq((1L, base), (2L, base), (3L, nearDup),
       (4L, (1 to 60).map(i => s"other$i").mkString(" "))).toDF("doc_id", "text")
-    val dir = java.nio.file.Files.createTempDirectory("graft-winnow").toString
+    val dir = graft.store.LocalFs.scratchDir("graft-winnow").toString
     docs.write.mode("overwrite").parquet(s"$dir/documents.parquet")
     val rows = SimilarityQueries.q48Winnowing(spark, dir).collect()
       .map(r => r.getLong(0) -> (r.getInt(1), r.getInt(2), r.getLong(3))).toMap
@@ -96,7 +96,7 @@ class SimilaritySpec extends SparkSpec {
       (11L to 12L).map(i => (i, v(0.0, 1.0, i * 0.01))) ++
       (13L to 30L).map(i => (i, v(if (i % 2 == 0) 1.0 else 0.0,
         if (i % 2 == 0) 0.0 else 1.0, i * 0.002)))
-    val dir = java.nio.file.Files.createTempDirectory("graft-ivf").toString
+    val dir = graft.store.LocalFs.scratchDir("graft-ivf").toString
     vecs.toDF("vec_id", "embedding")
       .write.mode("overwrite").parquet(s"$dir/embeddings.parquet")
     val res = SimilarityQueries.q49IvfAnn(spark, dir).collect()
@@ -126,7 +126,7 @@ class SimilaritySpec extends SparkSpec {
         (9L to 12L).map(i => i -> at((i - 7) * 45.0 + 1.0)) ++ // other queries
         Seq(13L -> at(18.0), 14L -> at(28.0), 15L -> at(24.0),
           16L -> at(60.0), 17L -> at(200.0), 18L -> at(300.0))
-    val dir = java.nio.file.Files.createTempDirectory("graft-ivf-probe").toString
+    val dir = graft.store.LocalFs.scratchDir("graft-ivf-probe").toString
     vecs.toDF("vec_id", "embedding")
       .write.mode("overwrite").parquet(s"$dir/embeddings.parquet")
     // nprobe = #cells is exhaustive search — the exact ground truth
@@ -152,7 +152,7 @@ class SimilaritySpec extends SparkSpec {
       (0L to 2L).map(i => i -> v(1)) ++       // cluster A: ids 0,1,2
         (3L to 4L).map(i => i -> v(2)) ++     // cluster B: ids 3,4
         (5L to 30L).map(i => i -> v(100 + i.toInt))
-    val dir = java.nio.file.Files.createTempDirectory("graft-rhlsh").toString
+    val dir = graft.store.LocalFs.scratchDir("graft-rhlsh").toString
     vecs.toDF("vec_id", "embedding")
       .write.mode("overwrite").parquet(s"$dir/embeddings.parquet")
     val got = SimilarityQueries.q51RhLshPairs(spark, dir).collect()
@@ -178,7 +178,7 @@ class SimilaritySpec extends SparkSpec {
         5L -> base1.replaceFirst("w", "v")) ++         // near dup of 1/2
         (6L to 60L).map(i => i -> doc(i.toInt))        // noise
       ).toDF("doc_id", "text")
-    val dir = java.nio.file.Files.createTempDirectory("graft-shp").toString
+    val dir = graft.store.LocalFs.scratchDir("graft-shp").toString
     docs.withColumn("lang", lit("en")).withColumn("source", lit("t"))
       .withColumn("n_chars", length(col("text")).cast("long"))
       .write.mode("overwrite").parquet(s"$dir/documents.parquet")
@@ -188,7 +188,7 @@ class SimilaritySpec extends SparkSpec {
     val sigs = spark.read.parquet(s"$dir/documents.parquet")
       .withColumn("__toks", split(col("text"), " "))
       .select(col("doc_id"),
-        graft.functions.SimHash64.simhash64(spark, "__toks").as("sh"))
+        graft.functions.SimHash64.simhash64("__toks").as("sh"))
       .collect().map(r => r.getLong(0) -> r.getLong(1))
     val brute = (for {
       (ia, sa) <- sigs; (ib, sb) <- sigs if ia < ib
@@ -212,7 +212,7 @@ class SimilaritySpec extends SparkSpec {
         5L -> base1.replaceFirst("w", "v")) ++
         (6L to 60L).map(i => i -> doc(i.toInt))
       ).toDF("doc_id", "text")
-    val dir = java.nio.file.Files.createTempDirectory("graft-shpb").toString
+    val dir = graft.store.LocalFs.scratchDir("graft-shpb").toString
     docs.withColumn("lang", lit("en")).withColumn("source", lit("t"))
       .withColumn("n_chars", length(col("text")).cast("long"))
       .write.mode("overwrite").parquet(s"$dir/documents.parquet")
@@ -271,7 +271,7 @@ class SimilaritySpec extends SparkSpec {
         (21L to 30L).map(i => i -> around(c2, 0.01f)) ++
         (31L to 40L).map(i => i -> around(c3, 0.01f)) ++
         Seq(41L -> c2.clone())                            // exact dup of 21's center
-    val dir = java.nio.file.Files.createTempDirectory("graft-km").toString
+    val dir = graft.store.LocalFs.scratchDir("graft-km").toString
     vecs.toDF("vec_id", "embedding")
       .write.mode("overwrite").parquet(s"$dir/embeddings.parquet")
     val got = SimilarityQueries.q69Kmeans(spark, dir).collect()
@@ -304,7 +304,7 @@ class SimilaritySpec extends SparkSpec {
       (0L to 7L).map(i => i -> around(if (i % 2 == 0) c1 else c2, 0.01f)) ++
         (8L to 14L).map(i => i -> around(c1, 0.01f)) ++
         (15L to 20L).map(i => i -> around(c2, 0.01f)) :+ (21L -> c1.clone())
-    val dir = java.nio.file.Files.createTempDirectory("graft-semdedup").toString
+    val dir = graft.store.LocalFs.scratchDir("graft-semdedup").toString
     vecs.toDF("vec_id", "embedding")
       .write.mode("overwrite").parquet(s"$dir/embeddings.parquet")
     val rows = SimilarityQueries.q74SemanticDedup(spark, dir).collect()
@@ -344,7 +344,7 @@ class SimilaritySpec extends SparkSpec {
       (2L, Array(0.0f, 1.0f, 0.0f)),
       (3L, Array(0.7f, 0.7f, 0.0f)))
       .toDF("vec_id", "embedding")
-    val dir = java.nio.file.Files.createTempDirectory("graft-emb").toString
+    val dir = graft.store.LocalFs.scratchDir("graft-emb").toString
     vecs.write.mode("overwrite").parquet(s"$dir/embeddings.parquet")
     val topk = SimilarityQueries.q40CosineTopK(spark, dir)
       .filter($"qid" === 0 && $"rank" === 1).head()

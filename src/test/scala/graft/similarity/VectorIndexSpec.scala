@@ -52,8 +52,8 @@ class VectorIndexSpec extends SparkSpec {
   }
 
   test("build + incremental build + cell-partitioned search round trip") {
-    val store = java.nio.file.Files.createTempDirectory("graft-vstore").toString
-    val index = java.nio.file.Files.createTempDirectory("graft-vindex").toString + "/idx"
+    val store = graft.store.LocalFs.scratchDir("graft-vstore").toString
+    val index = graft.store.LocalFs.scratchDir("graft-vindex").toString + "/idx"
     mkStore(store, Seq(
       ("s1", 0L, "2024-01-01T00:00:00", "alpha bravo charlie delta"),
       ("s1", 1L, "2024-01-01T00:00:01", "alpha bravo charlie echo"),
@@ -87,15 +87,15 @@ class VectorIndexSpec extends SparkSpec {
   }
 
   test("legacy index without idf sidecar: increments stay in the unweighted space") {
-    val store = java.nio.file.Files.createTempDirectory("graft-vstore2").toString
-    val index = java.nio.file.Files.createTempDirectory("graft-vindex2").toString + "/idx"
+    val store = graft.store.LocalFs.scratchDir("graft-vstore2").toString
+    val index = graft.store.LocalFs.scratchDir("graft-vindex2").toString + "/idx"
     mkStore(store, Seq(
       ("s1", 0L, "2024-01-01T00:00:00", "alpha bravo charlie delta")))
     // replicate what a pre-sidecar build wrote: unweighted vectors, no _idf.csv
     VectorIndex.embed(
         graft.store.Indexer.incrementalChunks(spark, store, "", chunkSize = 1))
       .withColumn("cell", graft.functions.RandomHyperplaneSignature
-        .rh_signature(spark, "embedding", VectorIndex.CellBits))
+        .rh_signature("embedding", VectorIndex.CellBits))
       .write.mode("append").partitionBy("cell").parquet(index)
     assert(VectorIndex.loadIdf(spark, index).isEmpty)
     // an increment must NOT derive idf from just its own batch — that would
@@ -114,8 +114,8 @@ class VectorIndexSpec extends SparkSpec {
 
   test("model-backed index: synonym query outranks token-overlap decoy; recall@10 vs exact") {
     import org.apache.spark.sql.functions.{broadcast, desc, size => fsize}
-    val store = java.nio.file.Files.createTempDirectory("graft-vstore4").toString
-    val index = java.nio.file.Files.createTempDirectory("graft-vindex4").toString + "/idx"
+    val store = graft.store.LocalFs.scratchDir("graft-vstore4").toString
+    val index = graft.store.LocalFs.scratchDir("graft-vindex4").toString + "/idx"
     // training corpus: cat/dog share contexts but never co-occur; the
     // market family is disjoint (the EmbeddingsSpec fixture)
     val corpus = (
@@ -171,7 +171,7 @@ class VectorIndexSpec extends SparkSpec {
     val exact = all
       .withColumn("qvec", org.apache.spark.sql.functions.typedLit(q))
       .withColumn("cos", graft.functions.CosineSimilarity
-        .cosine_similarity(spark, "qvec", "embedding"))
+        .cosine_similarity("qvec", "embedding"))
       .orderBy(desc("cos"), org.apache.spark.sql.functions.col("session_id"))
       .limit(10).collect().map(_.getAs[String]("session_id")).toSet
     val probed = VectorIndex.search(spark, index,
@@ -184,8 +184,8 @@ class VectorIndexSpec extends SparkSpec {
   }
 
   test("compactCells: incremental appends collapse to few files; search unchanged") {
-    val store = java.nio.file.Files.createTempDirectory("graft-vstore3").toString
-    val index = java.nio.file.Files.createTempDirectory("graft-vindex3").toString + "/idx"
+    val store = graft.store.LocalFs.scratchDir("graft-vstore3").toString
+    val index = graft.store.LocalFs.scratchDir("graft-vindex3").toString + "/idx"
     // 5 incremental builds of the SAME text (distinct sessions/ts): every
     // build appends its own file(s) into that text's one cell — the
     // small-file accumulation search latency pays for

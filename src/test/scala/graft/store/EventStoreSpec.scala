@@ -12,7 +12,7 @@ import java.nio.file.Files
 class EventStoreSpec extends SparkSpec {
 
   private lazy val storePath: String = {
-    val dir = Files.createTempDirectory("graft-eventstore").toString
+    val dir = graft.store.LocalFs.scratchDir("graft-eventstore").toString
     EventStore.write(Fixture.envelopes(spark), dir, SaveMode.Overwrite)
     dir
   }
@@ -116,7 +116,7 @@ class EventStoreSpec extends SparkSpec {
   }
 
   test("JSONL export writes per-doc_type line JSON ordered by ts") {
-    val out = Files.createTempDirectory("graft-jsonl").toString
+    val out = graft.store.LocalFs.scratchDir("graft-jsonl").toString
     EventStore.exportJsonl(env, out)
     val back = spark.read.json(s"$out/doc_type=game_tick")
     assert(back.count() === 18)
@@ -125,7 +125,7 @@ class EventStoreSpec extends SparkSpec {
   }
 
   test("CSV export round-trips a flattened summary table (S8)") {
-    val out = Files.createTempDirectory("graft-csv").toString
+    val out = graft.store.LocalFs.scratchDir("graft-csv").toString
     val summary = env.groupBy("game_id")
       .agg(count(lit(1)).as("n_events"))
       .filter(col("game_id").isNotNull)
@@ -138,7 +138,7 @@ class EventStoreSpec extends SparkSpec {
   test("compact merges small-file partitions, preserves rows, skips healthy ones") {
     // fresh store written in MANY small appends — the micro-batch landing
     // pattern compact exists for
-    val dir = Files.createTempDirectory("graft-compact").toString
+    val dir = graft.store.LocalFs.scratchDir("graft-compact").toString
     val envs = Fixture.envelopes(spark)
     EventStore.write(envs.limit(0), dir, SaveMode.Overwrite)
     envs.collect().grouped(3).foreach { chunk =>
@@ -173,7 +173,7 @@ class EventStoreSpec extends SparkSpec {
   }
 
   test("compact recovery heals a crash between the publish renames") {
-    val dir = Files.createTempDirectory("graft-compact-recover").toString
+    val dir = graft.store.LocalFs.scratchDir("graft-compact-recover").toString
     EventStore.write(Fixture.envelopes(spark), dir, SaveMode.Overwrite)
     val before = EventStore.read(spark, dir).orderBy("seq", "doc_type")
       .collect().toSeq
@@ -207,7 +207,7 @@ class EventStoreSpec extends SparkSpec {
 
   test("compact preserves columns present in only some files (mergeSchema)") {
     import spark.implicits._
-    val dir = Files.createTempDirectory("graft-compact-schema").toString
+    val dir = graft.store.LocalFs.scratchDir("graft-compact-schema").toString
     val part = s"$dir/doc_type=mixed/date=2026-01-01"
     // one partition, two files, different column sets — legal in this
     // store because read() merges footers (union_by_name)

@@ -30,7 +30,7 @@ class IndexerSpec extends SparkSpec {
   }
 
   test("incremental chunks consume only events past the checkpoint") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-idx").toString
+    val dir = graft.store.LocalFs.scratchDir("graft-idx").toString
     val env = envelopes
       .withColumn("doc_type", lit("ws_event"))
       .withColumn("game_id", lit("g1"))
@@ -58,7 +58,7 @@ class IndexerSpec extends SparkSpec {
   }
 
   test("mtime pruning reads only files modified since the cutoff") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-mtime").toString
+    val dir = graft.store.LocalFs.scratchDir("graft-mtime").toString
     val mk = (dt: String, n: Int) => Seq.tabulate(n)(i =>
       (s"2024-01-01T00:00:0$i", "ws_event", s"s-$dt", i.toLong, "{}"))
       .toDF("ts", "doc_type", "session_id", "seq", "raw_json")
@@ -72,7 +72,7 @@ class IndexerSpec extends SparkSpec {
   }
 
   test("replay stream re-feeds the store through the streaming DAG, throttled") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-replay").toString
+    val dir = graft.store.LocalFs.scratchDir("graft-replay").toString
     val env = envelopes
       .withColumn("doc_type", lit("ws_event"))
     EventStore.write(env, dir)

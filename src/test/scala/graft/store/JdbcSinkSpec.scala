@@ -7,7 +7,7 @@ class JdbcSinkSpec extends SparkSpec with BeforeAndAfterAll {
 
   import spark.implicits._
 
-  private lazy val root = java.nio.file.Files.createTempDirectory("graft-derby")
+  private lazy val root = graft.store.LocalFs.scratchDir("graft-derby")
 
   // Embedded Derby writes derby.log into the working directory (the
   // checkout) unless this is set before it boots; it boots on this spec's

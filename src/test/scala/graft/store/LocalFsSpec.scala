@@ -23,7 +23,7 @@ class LocalFsSpec extends SparkSpec {
     f
   }
 
-  private def tmp(prefix: String) = Files.createTempDirectory(prefix)
+  private def tmp(prefix: String) = graft.store.LocalFs.scratchDir(prefix)
   private def mode(p: java.nio.file.Path): Int =
     Files.getAttribute(p, "unix:mode").asInstanceOf[Int] & 0xfff
   private def hpath(p: java.nio.file.Path) = new Path(p.toUri)

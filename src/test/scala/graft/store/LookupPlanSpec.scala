@@ -22,7 +22,7 @@ class LookupPlanSpec extends SparkSpec with AdaptiveSparkPlanHelper {
   // game-003 hash to the same one, game-006 to its own
   private val games = Seq("game-001", "game-002", "game-006")
   private lazy val storePath: String = {
-    val dir = Files.createTempDirectory("graft-lookups").toString
+    val dir = graft.store.LocalFs.scratchDir("graft-lookups").toString
     val envs = Fixture.envelopes(spark).withColumn("game_id",
       when(col("game_id") === "game-003", "game-006").otherwise(col("game_id")))
     EventStore.write(envs, dir, SaveMode.Overwrite)

@@ -8,7 +8,7 @@ class StoreValidatorSpec extends SparkSpec {
   import spark.implicits._
 
   test("clean store validates ok; corruption and dup seqs are flagged") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-val").toString
+    val dir = graft.store.LocalFs.scratchDir("graft-val").toString
     val good = Seq(
       ("2024-01-01T00:00:00", "game_tick", "s1", 0L, """{"t":1}"""),
       ("2024-01-01T00:00:01", "game_tick", "s1", 1L, """{"t":2}"""),
@@ -34,7 +34,7 @@ class StoreValidatorSpec extends SparkSpec {
   }
 
   test("storage stats aggregate file metadata per doc_type") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-sstats").toString
+    val dir = graft.store.LocalFs.scratchDir("graft-sstats").toString
     val env = Seq(
       ("2024-01-01T00:00:00", "game_tick", "s1", 0L, "{}"),
       ("2024-01-01T00:00:01", "game_tick", "s1", 1L, "{}"),

@@ -58,7 +58,7 @@ class CdpFramesSpec extends SparkSpec {
   private val WallBaseMs = 1700000000000L
 
   private def tmp(prefix: String): String =
-    java.nio.file.Files.createTempDirectory(prefix).toString
+    graft.store.LocalFs.scratchDir(prefix).toString
 
   private def writeRecording(dir: String): Unit =
     java.nio.file.Files.write(

@@ -207,7 +207,7 @@ class StreamingSpec extends SparkSpec {
     rec.enable("jdk.ProcessStart")
     rec.start()
     try ingestStopRestart(tmp("graft-fork-out"), tmp("graft-fork-ckpt")) finally rec.stop()
-    val jfr = java.nio.file.Files.createTempFile("graft-fork", ".jfr")
+    val jfr = graft.store.LocalFs.scratchDir("graft-fork-jfr").resolve("fork.jfr")
     rec.dump(jfr)
     rec.close()
     // Spark's removal of a collected session's artifact directory
@@ -271,7 +271,7 @@ object StreamingSpec {
     RawEvent(sess, ts(ms), name, game, tick, price, "{}")
 
   def tmp(prefix: String) =
-    java.nio.file.Files.createTempDirectory(prefix).toString
+    graft.store.LocalFs.scratchDir(prefix).toString
 
   // 2023-11-14T23:59:50Z: the stream crosses midnight into a second date
   private val Eve = 1700006390000L

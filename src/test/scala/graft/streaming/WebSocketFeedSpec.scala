@@ -20,7 +20,7 @@ import scala.jdk.CollectionConverters._
   */
 class WebSocketFeedSpec extends SparkSpec {
 
-  private def tmpSpool(): Path = Files.createTempDirectory("ws-spool")
+  private def tmpSpool(): Path = graft.store.LocalFs.scratchDir("ws-spool")
 
   private def spoolLines(dir: Path): Seq[String] =
     Files.list(dir).iterator().asScala.toSeq.sortBy(_.getFileName.toString)

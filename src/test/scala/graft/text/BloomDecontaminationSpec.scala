@@ -45,11 +45,11 @@ class BloomDecontaminationSpec extends SparkSpec with AdaptiveSparkPlanHelper {
     forAll(keysGen, 15) { case (inserted, absent) =>
       val df = inserted.toDF("k")
       val bf = df.agg(BloomFunctions
-          .bloomAgg(spark, xxhash64(col("k")), 1L << 12, 1L << 16).as("bf"))
+          .bloomAgg(xxhash64(col("k")), 1L << 12, 1L << 16).as("bf"))
         .head.getAs[Array[Byte]]("bf")
       val probed = (inserted ++ absent).distinct.toDF("k")
         .select(col("k"),
-          BloomFunctions.bloomContains(spark, lit(bf), xxhash64(col("k")))
+          BloomFunctions.bloomContains(lit(bf), xxhash64(col("k")))
             .as("hit"))
         .collect().map(r => r.getString(0) -> r.getBoolean(1)).toMap
       for (k <- inserted)

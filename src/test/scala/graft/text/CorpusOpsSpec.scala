@@ -17,7 +17,7 @@ class CorpusOpsSpec extends SparkSpec {
       .write.mode("overwrite").parquet(s"$dir/documents.parquet")
 
   test("q64: sharded global index equals the naive global row_number") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-gidx").toString
+    val dir = graft.store.LocalFs.scratchDir("graft-gidx").toString
     // SPARSE, gappy doc_ids across many shards: shard counts are uneven,
     // so wrong offsets (the bug class the two-phase plan can hide) shift
     // every index after the first shard boundary
@@ -32,7 +32,7 @@ class CorpusOpsSpec extends SparkSpec {
   }
 
   test("q61: limited-split prefix fingerprint equals the unlimited one") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-q61").toString
+    val dir = graft.store.LocalFs.scratchDir("graft-q61").toString
     val p = TextQueries.BoilerplatePrefixTokens
     // the edge shapes a limit can get wrong: fewer tokens than the prefix,
     // exactly the prefix, prefix+1 (remainder lands in the limit slot),
@@ -59,7 +59,7 @@ class CorpusOpsSpec extends SparkSpec {
   }
 
   test("q65: ranks are 1..k per doc, scores descend, and match tf*ln(N/df)") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-tfidf").toString
+    val dir = graft.store.LocalFs.scratchDir("graft-tfidf").toString
     // 4 docs, 'common' in all (idf = ln(1) = 0), 'rare' only in doc 1
     corpus(dir,
       (1L, "common rare rare alpha", "s"),
@@ -84,7 +84,7 @@ class CorpusOpsSpec extends SparkSpec {
   }
 
   test("q66: KL >= 0; identical sources agree exactly; closed forms match") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-kl").toString
+    val dir = graft.store.LocalFs.scratchDir("graft-kl").toString
     // a and b are IDENTICAL distributions (x 1/2, y 1/4, z 1/4 over 8
     // tokens each); c is disjoint vocabulary (q 5/8, r 3/8). Corpus
     // marginal: x 1/3, y 1/6, z 1/6, q 5/24, r 1/8. Closed forms:

@@ -17,7 +17,7 @@ class CurationSpec extends SparkSpec {
       .write.mode("overwrite").parquet(s"$dir/documents.parquet")
 
   test("q57 packing: token conservation, contiguous doc ranges, ordered packs") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-pack").toString
+    val dir = graft.store.LocalFs.scratchDir("graft-pack").toString
     val rnd = new scala.util.Random(7L)
     corpus(dir, (1L to 200L).map(i =>
       i -> Seq.fill(1 + rnd.nextInt(200))("w").mkString(" ")): _*)
@@ -53,7 +53,7 @@ class CurationSpec extends SparkSpec {
     // cannot hold a window. Only windows fully inside a duplicated run
     // are flagged (straddling windows mix unique tokens), so each span
     // must be exactly the shared run: starts s..s+run-W, end s+run.
-    val dir = java.nio.file.Files.createTempDirectory("graft-dspan").toString
+    val dir = graft.store.LocalFs.scratchDir("graft-dspan").toString
     val shared = (1 to 12).map(i => s"s$i")
     val rep = (1 to 9).map(i => s"p$i")
     corpus(dir,
@@ -81,7 +81,7 @@ class CurationSpec extends SparkSpec {
     // raw doc 10 is written in that vocabulary, raw doc 11 in a disjoint
     // one — DSIR must rank 10 above 11, and no target doc may appear in
     // the scored output (selection is over the raw pool only).
-    val dir = java.nio.file.Files.createTempDirectory("graft-dsir").toString
+    val dir = graft.store.LocalFs.scratchDir("graft-dsir").toString
     val tgtText = (i: Int) => (1 to 30).map(j => s"q${(i * 7 + j) % 20 + 1}").mkString(" ")
     val rows = Seq(
       (1L, tgtText(1), "a"), (2L, tgtText(2), "a"), (3L, tgtText(3), "a"),
@@ -105,7 +105,7 @@ class CurationSpec extends SparkSpec {
     // A raw doc written in the target's own transition structure must
     // score strictly lower, and bucket labels must be consistent with the
     // score order (every head score <= every middle <= every tail).
-    val dir = java.nio.file.Files.createTempDirectory("graft-ppl").toString
+    val dir = graft.store.LocalFs.scratchDir("graft-ppl").toString
     val tgtText = (i: Int) => (1 to 40).map(j => s"q${(i + j) % 10 + 1}").mkString(" ")
     val rows = Seq(
       (1L, tgtText(0), "a"), (2L, tgtText(3), "a"), (3L, tgtText(6), "a"),
@@ -163,7 +163,7 @@ class CurationSpec extends SparkSpec {
     // Docs 1 and 2 share a 20-token run (>= w+k-1 guarantees shared
     // fingerprints); doc 3 is unique. n_shared must equal the size of the
     // brute-force fingerprint intersection.
-    val dir = java.nio.file.Files.createTempDirectory("graft-winnow").toString
+    val dir = graft.store.LocalFs.scratchDir("graft-winnow").toString
     val shared = (1 to 20).map(i => s"s$i")
     val d1 = (1 to 10).map(i => s"u$i") ++ shared ++ (11 to 18).map(i => s"u$i")
     val d2 = (1 to 6).map(i => s"v$i") ++ shared ++ (7 to 15).map(i => s"v$i")
@@ -179,7 +179,7 @@ class CurationSpec extends SparkSpec {
       s"n_shared must equal brute-force winnowing intersection ($expect)")
     // 60 identical docs: every shared fingerprint has df=60 > WinnowDocCap
     // => all dropped, no pairs — the boilerplate guard, not an explosion
-    val dir2 = java.nio.file.Files.createTempDirectory("graft-winnow2").toString
+    val dir2 = graft.store.LocalFs.scratchDir("graft-winnow2").toString
     val same = (1 to 30).map(i => s"b$i").mkString(" ")
     corpus(dir2, (1L to 60L).map(_ -> same): _*)
     assert(TextQueries.q81WinnowOverlap(spark, dir2).collect().isEmpty,
@@ -191,7 +191,7 @@ class CurationSpec extends SparkSpec {
     // k=50 cap bites nothing (selection order is still fully exercised).
     // Brute force replicates key = round(log_weight - ln(-ln(u)), 6) from
     // q79's published scores — same JVM Math.log, so exact equality.
-    val dir = java.nio.file.Files.createTempDirectory("graft-gumbel").toString
+    val dir = graft.store.LocalFs.scratchDir("graft-gumbel").toString
     val tgtText = (i: Int) => (1 to 30).map(j => s"q${(i * 7 + j) % 20 + 1}").mkString(" ")
     val rows = Seq((1L, tgtText(1), "a"), (2L, tgtText(2), "a")) ++
       (10L to 29L).map(i => (i, tgtText(i.toInt), "b"))
@@ -222,7 +222,7 @@ class CurationSpec extends SparkSpec {
   }
 
   test("q58: a verbatim eval copy of a train doc is flagged; disjoint text is not") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-decon").toString
+    val dir = graft.store.LocalFs.scratchDir("graft-decon").toString
     val shared = (1 to 12).map(i => s"tok$i").mkString(" ")
     // hashBucket01(1)=train? pick ids empirically: find a train id and an
     // eval id under the 0.8 split
@@ -246,7 +246,7 @@ class CurationSpec extends SparkSpec {
     assert(out(evalClean) === false)
     // short eval doc still appears, unflagged (8-gram check cannot see
     // it); fresh dir — Tables.load memoizes the file listing per dir
-    val dir2 = java.nio.file.Files.createTempDirectory("graft-decon2").toString
+    val dir2 = graft.store.LocalFs.scratchDir("graft-decon2").toString
     corpus(dir2,
       trainId -> shared,
       evalCopy -> "tok1 tok2 tok3")

@@ -82,7 +82,7 @@ class HeavyHittersSpec extends SparkSpec with AdaptiveSparkPlanHelper {
   } yield docs
 
   private def write(docs: List[Doc]): String = {
-    val dir = java.nio.file.Files.createTempDirectory("graft-hh").toString
+    val dir = graft.store.LocalFs.scratchDir("graft-hh").toString
     docs.map(d => (d.id, d.toks.mkString(" ")))
       .toDF("doc_id", "text")
       .withColumn("lang", lit("en"))

@@ -44,7 +44,7 @@ class TextPropertySpec extends SparkSpec {
   } yield docs
 
   private def write(docs: List[Doc]): String = {
-    val dir = java.nio.file.Files.createTempDirectory("graft-prop").toString
+    val dir = graft.store.LocalFs.scratchDir("graft-prop").toString
     docs.map(d => (d.id, d.toks.mkString(" "), d.src))
       .toDF("doc_id", "text", "source")
       .withColumn("lang", lit("en"))
