@@ -105,10 +105,10 @@ object GraftSession {
     * single-threaded while a vectorized in-process engine parallelizes
     * row groups across all cores (measured r13: q01's decimal aggregate
     * 1.34 s on one core vs ~0.2 s split). Defaults here are the
-    * local-bench values; override per call or via
+    * local-bench values; a deployment overrides them with
     * SPARK_GRAFT_MAX_PARTITION_BYTES / SPARK_GRAFT_OPEN_COST_BYTES
-    * (a cluster deployment sets 128-256 MB / 4 MB). AQE coalescing
-    * absorbs extra splits on the shuffle side either way.
+    * (a cluster sets 128-256 MB / 4 MB). AQE coalescing absorbs extra
+    * splits on the shuffle side either way.
     */
   val LocalBenchMaxPartitionBytes: Long = 4L * 1024 * 1024
   val LocalBenchOpenCostInBytes: Long = 512L * 1024
@@ -116,12 +116,7 @@ object GraftSession {
   private def envBytes(name: String, dflt: Long): Long =
     sys.env.get(name).map(_.trim.toLong).getOrElse(dflt)
 
-  def builder(master: String = "local[*]", shufflePartitions: Int = 32,
-      maxPartitionBytes: Long = envBytes(
-        "SPARK_GRAFT_MAX_PARTITION_BYTES", LocalBenchMaxPartitionBytes),
-      openCostInBytes: Long = envBytes(
-        "SPARK_GRAFT_OPEN_COST_BYTES", LocalBenchOpenCostInBytes))
-      : SparkSession.Builder =
+  def builder(master: String = "local[*]", shufflePartitions: Int = 32): SparkSession.Builder =
     SparkSession.builder()
       .master(master)
       .config("spark.sql.shuffle.partitions", shufflePartitions)
@@ -139,8 +134,10 @@ object GraftSession {
       // parallelism floor kept spread. On a cluster whose shuffles
       // exceed the 64 MB advisory size the flag is moot by construction.
       .config("spark.sql.parquet.filterPushdown", "true")
-      .config("spark.sql.files.maxPartitionBytes", maxPartitionBytes)
-      .config("spark.sql.files.openCostInBytes", openCostInBytes)
+      .config("spark.sql.files.maxPartitionBytes",
+        envBytes("SPARK_GRAFT_MAX_PARTITION_BYTES", LocalBenchMaxPartitionBytes))
+      .config("spark.sql.files.openCostInBytes",
+        envBytes("SPARK_GRAFT_OPEN_COST_BYTES", LocalBenchOpenCostInBytes))
       // static, read once per JVM: see the scaladoc's codegen-cache caveat
       .config("spark.sql.codegen.cache.maxEntries", 4096)
       // one executor class loader for every session and clone, so a class
@@ -153,10 +150,4 @@ object GraftSession {
       .config("spark.hadoop.fs.file.impl", classOf[store.NioLocalFileSystem].getName)
       .config("spark.hadoop.fs.AbstractFileSystem.file.impl", classOf[store.NioLocalFs].getName)
       .withExtensions(new functions.GraftExtensions)
-
-  def local(cores: Int): SparkSession = {
-    val s = builder(s"local[$cores]", cores).getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
 }

@@ -1,17 +1,21 @@
 package graft.functions
 
+import org.apache.spark.broadcast.Broadcast
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow, TernaryExpression}
+import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, GenericInternalRow}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types._
 
-/** Native Lloyd assignment: `argmin_l2(v, cids, cvs_flat)` returns
+/** Native Lloyd assignment: `ArgminL2(v, group, book)` returns
   * `struct(cid INT, dist2 DOUBLE)` — the centroid id minimizing the
   * 6dp-ROUNDED squared L2 distance to `v` (ties broken on the smaller
-  * cid), where `cids` is the K centroid ids and `cvs_flat` their vectors
-  * flattened into one `array<double>` of K·dims elements (so scanning K
-  * candidates touches no per-candidate object at all).
+  * cid) among the centroids of the row's `group` in the broadcast
+  * codebook: `book.cids(g)` is group g's K centroid ids and `book.flat(g)`
+  * their vectors flattened into one `Array[Double]` of K·dims elements (so
+  * scanning K candidates touches no per-candidate object at all).
   *
   * Why this exists (r15, the q69 199 s fix): the relational form —
   * `emb JOIN broadcast(cents)` then `groupBy(vec_id).agg(min(struct(
@@ -21,8 +25,9 @@ import org.apache.spark.sql.types._
   * 100× board that is ~90M rows × ~550 B ≈ 49 GB pushed through
   * per-partition sorts, the measured scale-killer (199 s, wall exponent
   * 1.32). This expression does the argmin INSIDE one codegen'd scan row:
-  * the K·dims centroid matrix rides a 1-row broadcast, vectors never
-  * leave their scan partition, and assignment is exchange-free.
+  * the K·dims centroid matrix reaches each executor once as a broadcast
+  * value, vectors never leave their scan partition, and assignment is
+  * exchange- and join-free.
   *
   * Semantics pinned to the relational form it replaces (and the oracle):
   * per candidate, dist2 = round(Σ_i (v_i − cv_i)², 6) with the sum taken
@@ -33,47 +38,42 @@ import org.apache.spark.sql.types._
   * strictly greater than the incumbent's and can affect neither the min
   * nor the tie-break.
   *
-  * Null/empty: any null input or empty candidate list → null.
+  * Null/empty: a null vector or group, or a group with no centroids, →
+  * null. The codebook is a field, not a child, so every round's handle
+  * generates the same code (a reference object): a new fit compiles
+  * nothing. There is no SQL form; [[graft.similarity.Lloyd]] builds it.
   */
-case class ArgminL2(v: Expression, cids: Expression, cvsFlat: Expression)
-    extends TernaryExpression {
+case class ArgminL2(v: Expression, group: Expression, book: Broadcast[ArgminL2.Book])
+    extends BinaryExpression {
 
-  override def first: Expression = v
-  override def second: Expression = cids
-  override def third: Expression = cvsFlat
+  override def left: Expression = v
+  override def right: Expression = group
 
   override def dataType: DataType = ArgminL2.Schema
   override def nullable: Boolean = true
 
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    (v.dataType, cids.dataType, cvsFlat.dataType) match {
-      case (ArrayType(DoubleType, _), ArrayType(IntegerType, _), ArrayType(DoubleType, _)) =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case other =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-          s"argmin_l2 expects (array<double>, array<int>, array<double>), got $other")
-    }
+  override def checkInputDataTypes(): TypeCheckResult = (v.dataType, group.dataType) match {
+    case (ArrayType(DoubleType, _), IntegerType) => TypeCheckResult.TypeCheckSuccess
+    case other => TypeCheckResult.TypeCheckFailure(s"argmin_l2 expects (array<double>, int), got $other")
+  }
 
-  /** One pass; shared by interpreted eval and generated code.
-    *
-    * Access-path notes (measured at the 100× corpus): the broadcast
-    * candidate matrix arrives as an UnsafeArrayData VIEW whose getDouble
-    * is a primitive read — but the view WRAPPER is re-created per row, so
-    * an identity-keyed toDoubleArray cache mistakes every row for a new
-    * matrix and copies K·dims doubles per row (tried: 2.5× SLOWER). The
-    * query vector, by contrast, is a per-row GenericArrayData (built by
-    * the upstream cast transform) whose getDouble unboxes — one
-    * toDoubleArray per row converts K·dims boxed reads into dims.
+  @transient private lazy val cb = book.value
+
+  /** One pass; shared by interpreted eval and generated code. The query
+    * vector is a per-row GenericArrayData (built by the upstream cast
+    * transform) whose getDouble unboxes — one toDoubleArray per row
+    * converts K·dims boxed reads into dims.
     */
-  def compute(vec: ArrayData, ids: ArrayData, flat: ArrayData): InternalRow = {
+  def compute(vec: ArrayData, g: Int): InternalRow = {
+    if (g < 0 || g >= cb.cids.length || cb.cids(g).isEmpty) return null
+    val ids = cb.cids(g)
+    val flat = cb.flat(g)
     val dims = vec.numElements()
-    val k = ids.numElements()
-    if (k == 0) return null
     val vv = vec.toDoubleArray()
     var bestCid = 0
     var bestD2 = Double.MaxValue
     var c = 0
-    while (c < k) {
+    while (c < ids.length) {
       val base = c * dims
       var sum = 0.0
       var i = 0
@@ -81,7 +81,7 @@ case class ArgminL2(v: Expression, cids: Expression, cvsFlat: Expression)
       // the incumbent (see scaladoc), so the remaining dims cannot matter
       val bound = bestD2 + 5e-7
       while (i < dims && sum <= bound) {
-        val d = vv(i) - flat.getDouble(base + i)
+        val d = vv(i) - flat(base + i)
         sum += d * d
         i += 1
       }
@@ -89,7 +89,7 @@ case class ArgminL2(v: Expression, cids: Expression, cvsFlat: Expression)
         // exactly Spark's round(x, 6): BigDecimal.valueOf + HALF_UP
         val d2 = java.math.BigDecimal.valueOf(sum)
           .setScale(6, java.math.RoundingMode.HALF_UP).doubleValue()
-        val cid = ids.getInt(c)
+        val cid = ids(c)
         if (d2 < bestD2 || (d2 == bestD2 && cid < bestCid)) {
           bestD2 = d2
           bestCid = cid
@@ -100,34 +100,35 @@ case class ArgminL2(v: Expression, cids: Expression, cvsFlat: Expression)
     new GenericInternalRow(Array[Any](bestCid, bestD2))
   }
 
-  override def nullSafeEval(vec: Any, ids: Any, flat: Any): Any =
-    compute(vec.asInstanceOf[ArrayData], ids.asInstanceOf[ArrayData],
-      flat.asInstanceOf[ArrayData])
+  override def nullSafeEval(vec: Any, g: Any): Any =
+    compute(vec.asInstanceOf[ArrayData], g.asInstanceOf[Int])
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
     val ref = ctx.addReferenceObj("argminL2Expr", this, classOf[ArgminL2].getName)
-    nullSafeCodeGen(ctx, ev, (a, b, c) => s"""
-      ${ev.value} = $ref.compute($a, $b, $c);
+    nullSafeCodeGen(ctx, ev, (a, b) => s"""
+      ${ev.value} = $ref.compute($a, $b);
       ${ev.isNull} = ${ev.value} == null;
     """)
   }
 
   override def prettyName: String = "argmin_l2"
 
-  override protected def withNewChildrenInternal(newFirst: Expression,
-      newSecond: Expression, newThird: Expression): Expression =
-    copy(v = newFirst, cids = newSecond, cvsFlat = newThird)
+  override protected def withNewChildrenInternal(newLeft: Expression,
+      newRight: Expression): Expression = copy(v = newLeft, group = newRight)
 }
 
 object ArgminL2 {
+
+  /** A codebook as `argmin_l2` reads it, indexed by group: `cids(g)` and
+    * `flat(g)` (K·dims doubles in cid order); a group with no centroids
+    * holds empty arrays.
+    */
+  final case class Book(cids: Array[Array[Int]], flat: Array[Array[Double]])
 
   val Schema: StructType = StructType(Seq(
     StructField("cid", IntegerType, nullable = false),
     StructField("dist2", DoubleType, nullable = false)))
 
-  /** Column helper built from Catalyst expressions (Cols bridge). */
-  def argmin_l2(vCol: String, cidsCol: String,
-      cvsFlatCol: String): org.apache.spark.sql.Column =
-    Cols.column(ArgminL2(Cols.expression(vCol), Cols.expression(cidsCol),
-      Cols.expression(cvsFlatCol)))
+  def argmin_l2(v: Column, group: Column, book: Broadcast[Book]): Column =
+    Cols.column(ArgminL2(Cols.expressionOf(v), Cols.expressionOf(group), book))
 }

@@ -107,9 +107,6 @@ object GraftExtensions {
     fn("l2_sq", classOf[L2Distance], "l2_sq(a, b)") {
       case Seq(a, b) => L2Distance(a, b)
     },
-    fn("argmin_l2", classOf[ArgminL2], "argmin_l2(v, cids, cvs_flat)") {
-      case Seq(v, ids, flat) => ArgminL2(v, ids, flat)
-    },
     fn("int8_quantize", classOf[Int8Quantize], "int8_quantize(v)") {
       case Seq(v) => Int8Quantize(v)
     },

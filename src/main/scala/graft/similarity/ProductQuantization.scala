@@ -79,7 +79,8 @@ object ProductQuantization {
   // (adc, nid) ranking is identical in both engines.
   val q90PqAnn: Q = (s, d) => {
     val (centsLocal, codes) = fitLocal(s, d)
-    // LocalRelation: broadcasting it costs no job (driver-side collect)
+    // a LocalRelation, but its broadcast build is still a job: at sf0.001
+    // collecting qsub alone runs 1 job, joined to broadcast(cents) 2
     val cents = Lloyd.codebookDf(s, centsLocal, Some("sub"))
     val qsub = subVectors(s, d).filter(col("vec_id") < PqNQueries)
       .select(col("vec_id").as("qid"), col("sub"), col("sv"))

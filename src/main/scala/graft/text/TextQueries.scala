@@ -734,7 +734,6 @@ object TextQueries {
   val TopNgramShareMax = 0.20 // Gopher 2-gram bar
   val DupNgramFracMax = 0.30
   val q60RepetitionFilter: Q = (s, d) => {
-    val t = col("__t")
     // n-gram hashes via the native fused `text_shingle_hashes` (r17): the
     // r16 form built 3-grams with a `transform` lambda over zipped slices
     // — a higher-order function, which Catalyst evaluates INTERPRETED per
@@ -743,11 +742,14 @@ object TextQueries {
     // The native expression hashes each n-token byte span in place with
     // the same XxHash64Function the scalar xxhash64(concat_ws(" ", ...))
     // computed (the TokenSpans structural identity, spec-pinned), so
-    // every downstream count is bit-identical.
+    // every downstream count is bit-identical. A document of n tokens has
+    // n - 1 2-gram hashes and none below 2 tokens, so `g2` gives the token
+    // count, and the inner join with `top2` (built from g2's elements)
+    // keeps exactly the n >= 2 documents, with no `split`. (An explicit
+    // filter on size(g2) would be pushed below the select and walk each
+    // document once more.)
     val g = Tables.documents(s, d)
-      .withColumn("__t", toks)
-      .filter(size(t) >= 2)
-      .select(col("doc_id"), size(t).as("n_tokens"),
+      .select(col("doc_id"),
         graft.functions.TextShingleHashes.text_shingle_hashes("text", 2)
           .as("g2"),
         graft.functions.TextShingleHashes.text_shingle_hashes("text", 3)
@@ -758,7 +760,7 @@ object TextQueries {
     val top2 = g.select(col("doc_id"), explode(col("g2")).as("h"))
       .groupBy("doc_id", "h").count()
       .groupBy("doc_id").agg(max("count").as("top2"))
-    g.select(col("doc_id"), col("n_tokens"), dup3.as("dup3_frac"))
+    g.select(col("doc_id"), (size(col("g2")) + 1).as("n_tokens"), dup3.as("dup3_frac"))
       .join(top2, "doc_id")
       .withColumn("top2_share",
         round(col("top2").cast("double") / (col("n_tokens") - 1).cast("double"), 6))

@@ -25,6 +25,17 @@ trait SparkSpec extends AnyFunSuite {
     } finally spark.sparkContext.removeSparkListener(tally)
   }
 
+  /** `body` with the session confs `kv` set, each restored after. */
+  def withConfs[A](kv: (String, String)*)(body: => A): A = {
+    val prev = kv.map { case (k, _) => k -> spark.conf.getOption(k) }
+    kv.foreach { case (k, v) => spark.conf.set(k, v) }
+    try body
+    finally prev.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
+    }
+  }
+
   /** Classes Janino compiled in this JVM while `body` ran. */
   def compiles(body: => Unit): Long = {
     val before = CodegenMetrics.METRIC_COMPILATION_TIME.getCount

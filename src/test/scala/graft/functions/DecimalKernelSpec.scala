@@ -21,16 +21,6 @@ class DecimalKernelSpec extends SparkSpec {
 
   import spark.implicits._
 
-  private def withConfs[A](kv: (String, String)*)(body: => A): A = {
-    val prev = kv.map { case (k, _) => k -> spark.conf.getOption(k) }
-    kv.foreach { case (k, v) => spark.conf.set(k, v) }
-    try body
-    finally prev.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None) => spark.conf.unset(k)
-    }
-  }
-
   private val modes = Seq(
     "codegen" -> Seq("spark.sql.codegen.factoryMode" -> "CODEGEN_ONLY"),
     "interpreted" -> Seq("spark.sql.codegen.factoryMode" -> "NO_CODEGEN",

@@ -105,6 +105,6 @@ class GramCountsSpec extends SparkSpec {
     val fresh = spark.newSession()
     for ((name, cls, _) <- GraftExtensions.Functions)
       assert(fresh.catalog.getFunction(name).className === cls.getName, name)
-    assert(GraftExtensions.Functions.map(_._1).distinct.size === 21)
+    assert(GraftExtensions.Functions.map(_._1).distinct.size === 20)
   }
 }
